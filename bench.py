@@ -313,6 +313,7 @@ def main() -> None:
             except Exception as exc:  # noqa: BLE001 — isolate per query
                 errors[name] = f"{type(exc).__name__}: {exc}"[:300]
                 times.pop(name, None)
+                draws.pop(name, None)
                 continue
             dt = round(time.perf_counter() - t0, 3)
             draws.setdefault(name, []).append(dt)

@@ -23,6 +23,8 @@ estimate, whose addition order would differ between engines).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, functions as F
 
 from ..operators.sketches import HLL_M, hll_estimate, hll_sketch
@@ -30,31 +32,6 @@ from .pagerank import (
     _BROADCAST_STATE_ROWS, _EDGE_PIN_ROWS, _iter_partitions,
     _pin_for_iteration, _repartition_checkpoint,
 )
-
-
-def hyperanf_states(vertices: DataFrame, edges: DataFrame,
-                    iters: int) -> list[DataFrame]:
-    """[(id, register, max_rank)] per ball radius 0..iters.
-
-    `vertices` must carry an `id` column; `edges` (src, dst) directed —
-    B(v, k) follows OUT-edges (symmetrize first for undirected balls).
-    State is long-form: a vertex holds one row per OCCUPIED register
-    (singletons start at exactly 1 row), so state size is
-    Σ_v min(m, |B(v, k)|) — never |V|·m until balls saturate. Each
-    superstep localCheckpoints, keeping plan depth constant (the
-    repo-wide iterative-graph discipline)."""
-    init = _init_state(vertices)
-    edges, pinned = _pin_edges(edges, init.count())
-    states = [init]
-    state = init
-    try:
-        for _ in range(iters):
-            state = _superstep(state, edges)
-            states.append(state)
-    finally:
-        if pinned:
-            edges.unpersist(False)
-    return states
 
 
 def _pin_edges(edges: DataFrame, n_vertices: int) -> tuple[DataFrame, bool]:
@@ -124,28 +101,48 @@ def _superstep(state: DataFrame, edges: DataFrame) -> DataFrame:
             .localCheckpoint(eager=False))
 
 
+def _nf(state: DataFrame) -> DataFrame:
+    """1-row (nf): Σ_v HLL-estimate(B(v, k)) for one radius's state,
+    each per-vertex estimate rounded to 6 dp and summed as DECIMAL(24,6)
+    (0.0 for an empty graph, not NULL) — shared by the curve and the
+    diameter so the two can never drift."""
+    return hll_estimate(state, group_cols=("id",)).agg(F.round(F.coalesce(
+        F.sum(F.col("hll_estimate").cast("decimal(24,6)")).cast("double"),
+        F.lit(0.0)), 6).alias("nf"))
+
+
 def hyperanf_curve(vertices: DataFrame, edges: DataFrame,
                    iters: int = 3) -> DataFrame:
     """(iter, nf): the neighborhood-function curve for radii 0..iters.
 
-    nf(k) = Σ_v HLL-estimate(B(v, k)), each per-vertex estimate rounded
-    to 6 dp and summed as DECIMAL(24,6) — exact, order-independent
-    addition, so the result is deterministic under any partitioning and
-    replayable by the DuckDB oracle. Each radius's total is a 1-row
-    aggregate of the ≤ Σ min(m, ball) register table; the union of
-    iters+1 such rows is driver-sized by definition."""
+    `vertices` must carry an `id` column; `edges` (src, dst) directed —
+    B(v, k) follows OUT-edges (symmetrize first for undirected balls).
+    Register state is long-form: a vertex holds one row per OCCUPIED
+    register (singletons start at exactly 1 row), so state size is
+    Σ_v min(m, |B(v, k)|) — never |V|·m until balls saturate.
+
+    nf(k) is `_nf` of radius k's state — an exact, order-independent
+    DECIMAL addition, so the result is deterministic under any
+    partitioning and replayable by the DuckDB oracle. Each radius's
+    total is a 1-row aggregate of the ≤ Σ min(m, ball) register table;
+    the union of iters+1 such rows is driver-sized by definition."""
+    state = _init_state(vertices)
+    edges, pinned = _pin_edges(edges, state.count())
     outs = []
-    for k, state in enumerate(hyperanf_states(vertices, edges, iters)):
-        est = hll_estimate(state, group_cols=("id",))
-        outs.append(
-            est.agg(F.round(F.coalesce(  # empty graph → 0.0, not NULL
-                        F.sum(F.col("hll_estimate")
-                              .cast("decimal(24,6)")).cast("double"),
-                        F.lit(0.0)), 6).alias("nf"))
-            .select(F.lit(k).cast("int").alias("iter"), "nf"))
-    res = outs[0]
-    for o in outs[1:]:
-        res = res.unionByName(o)
+    try:
+        for k in range(iters + 1):
+            if k:
+                state = _superstep(state, edges)
+            outs.append(_nf(state).select(
+                F.lit(k).cast("int").alias("iter"), "nf"))
+        # the lazy superstep checkpoints materialize only under an
+        # action, so the curve is checkpointed HERE, while the pinned
+        # edges are still registered — released any earlier, no
+        # superstep would read the pin
+        res = reduce(DataFrame.unionByName, outs).localCheckpoint()
+    finally:
+        if pinned:
+            edges.unpersist(False)
     return res
 
 
@@ -164,22 +161,14 @@ def effective_diameter(vertices: DataFrame, edges: DataFrame,
     state = _init_state(vertices)
     edges, pinned = _pin_edges(edges, state.count())
 
-    def _nf(s: DataFrame) -> float:
-        est = hll_estimate(s, group_cols=("id",))
-        row = est.agg(
-            F.round(F.coalesce(
-                F.sum(F.col("hll_estimate").cast("decimal(24,6)"))
-                .cast("double"), F.lit(0.0)), 6).alias("nf")).head()
-        return float(row["nf"])
-
     try:
-        curve.append(_nf(state))
+        curve.append(float(_nf(state).head()["nf"]))
         for _ in range(max_iters):
             # lazy superstep checkpoint: the _nf estimate below is the
             # action that materializes it — ONE job per radius instead
             # of checkpoint-job + estimate-job (r12 verdict #4)
             state = _superstep(state, edges)
-            curve.append(_nf(state))
+            curve.append(float(_nf(state).head()["nf"]))
             if curve[-1] <= curve[-2] * (1.0 + growth_tol):
                 break
     finally:

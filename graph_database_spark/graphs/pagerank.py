@@ -13,6 +13,13 @@ Source: tp1/knoledge_graphs/recommendation.py:150-188 —
                                                 own loop, not an import)
 - converge on L1 delta < tol (1e-6) or max_iter (50); d = 0.85 (`:33-39`).
 
+One superstep loop serves every caller (`_pagerank_batch_blocked`): k
+personalization vectors ride as the COLUMNS of one |V|-row state frame,
+so each power step is a blocked SpMV — the edge table joins the state
+once and the dst aggregate sums k weighted products per edge.
+`pagerank()` runs that loop with one column; `pagerank_batch()` runs it
+over tiles of at most `_BLOCKED_KEYS_MAX` keys.
+
 Spark-first execution: a driver-side loop over DataFrames, with the edge
 side prepared by REGIME (measured — SCALING.md pinned-cache appendix):
 while the state fits the broadcast gate, each iteration's state⋈edges
@@ -33,6 +40,8 @@ edge scan, which AQE skew-splits for hot vertices.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, functions as F
 
 # Partition sizing for the per-iteration frames: every superstep pays one
@@ -52,16 +61,14 @@ from pyspark.sql import DataFrame, functions as F
 _ROWS_PER_PARTITION = 50_000
 _EDGE_ROWS_PER_PARTITION = 1_000_000
 
-# Hint-broadcast gate for WIDE or keyed state (batch PPR long/blocked
-# forms, traversal frontiers): state cells (rows × value columns) at or
-# below this get F.broadcast hints in the loop. Catalyst's own 10 MB
-# auto-broadcast covers the narrow single-vector state (which measured
-# FASTER hint-free — the contrib aggregate runs in the main dataflow);
-# the blocked form's 65-column 20k-row state is ~10.4 MB and falls just
-# past the auto threshold into per-iteration Exchange+Sort of the wide
-# frame — measured 20.3 s (hinted) vs 27–32 s (hint-free) for
-# ppr_fixed20_batch at sf0.1. 5M cells ≈ 40 MB broadcast at the gate's
-# edge; above it the pinned-cache shuffle shape takes over.
+# Hint-broadcast gate for WIDE or keyed state (the blocked PageRank
+# state, traversal frontiers): state cells (rows × value columns) at or
+# below this get F.broadcast hints in the loop. A 65-column 20k-row
+# PageRank state is ~10.4 MB and falls just past Catalyst's 10 MB
+# auto-broadcast into per-iteration Exchange+Sort of the wide frame —
+# measured 20.3 s (hinted) vs 27–32 s (hint-free) for ppr_fixed20_batch
+# at sf0.1. 5M cells ≈ 40 MB broadcast at the gate's edge; above it the
+# pinned-cache shuffle shape takes over.
 _BROADCAST_STATE_ROWS = 5_000_000
 
 
@@ -124,16 +131,16 @@ def _pin_for_iteration(df: DataFrame, n_parts: int, *keys: str) -> DataFrame:
 # midpoint of the measured bracket (checkpoint wins ≤ 2.39M, pin wins
 # ≥ 7.7M). Above it, pin even in the broadcast regime; at 100 TB
 # everything pins regardless (the state gate is false). Since r13 the
-# bound applies to EVERY loop including the blocked/long batch-PPR forms
-# (the r12 contradiction there was resolved in the pin's favor by a
+# bound applies to EVERY loop including the wide batch-PPR state (the
+# r12 contradiction there was resolved in the pin's favor by a
 # quieter-host sf1 re-run — see _pagerank_batch_blocked).
 _EDGE_PIN_ROWS = 4_000_000
 
 
 def _prep_iter_edges(edges: DataFrame, n_parts: int, bcast_state: bool,
                      n_rows: int, *keys: str) -> tuple[DataFrame, bool]:
-    """(frame, pinned): regime-gated prep of a static frame (edges; the
-    batch forms' personalization) that is re-joined every superstep.
+    """(frame, pinned): regime-gated prep of a static frame (edges) that
+    is re-joined every superstep.
 
     Row-format checkpoint while BOTH gates hold — the state side
     broadcasts (so this side merely streams through a BHJ) AND the frame
@@ -163,24 +170,6 @@ def _repartition_checkpoint(df: DataFrame, n_parts: int) -> DataFrame:
     return df.repartition(n_parts).localCheckpoint()
 
 
-def _prep_personalization(vertices: DataFrame,
-                          personalization: DataFrame | None,
-                          n: int) -> DataFrame:
-    """(id, p) summing to 1; uniform when absent or all-zero
-    (recommendation.py:181-188)."""
-    if personalization is None:
-        return vertices.select("id", F.lit(1.0 / n).alias("p"))
-    p = vertices.join(personalization, "id", "left").select(
-        "id", F.coalesce(F.col("p"), F.lit(0.0)).alias("p"))
-    total = p.agg(F.sum("p").alias("__t"))
-    return (
-        p.crossJoin(F.broadcast(total))
-        .select("id",
-                F.when(F.col("__t") > 0, F.col("p") / F.col("__t"))
-                 .otherwise(F.lit(1.0 / n)).alias("p"))
-    )
-
-
 def pagerank(vertices: DataFrame, edges: DataFrame,
              personalization: DataFrame | None = None,
              damping: float = 0.85, tol: float = 1e-6,
@@ -191,7 +180,8 @@ def pagerank(vertices: DataFrame, edges: DataFrame,
     """vertices: (id); edges: (src, dst, weight) row-stochastic per src.
 
     Returns (id, rank) — or ((id, rank), iterations_run) when
-    `with_iterations=True`. Semantics identical to tp1 `_run_pagerank`.
+    `with_iterations=True`. Semantics identical to tp1 `_run_pagerank`;
+    runs the blocked loop with one column.
 
     `init_ranks` ((id, rank)) warm-starts the iteration — the 100 TB
     answer to "1% of edges were appended, don't recompute from 1/N":
@@ -204,153 +194,21 @@ def pagerank(vertices: DataFrame, edges: DataFrame,
     verts = vertices.select("id").distinct()
     n = verts.count()
     if n == 0:
-        return verts.withColumn("rank", F.lit(0.0))
-
-    # materialize edges once at natural partitioning, then size the
-    # iteration partitioning from the measured counts (cheap post-checkpoint)
-    edges = edges.select("src", "dst", "weight").localCheckpoint()
-    m = edges.count()  # cheap post-checkpoint; also feeds the edge gate
-    n_parts = num_partitions or _iter_partitions(
-        vertices.sparkSession.sparkContext, n, m)
-
-    # carry the sink flag INSIDE the personalization frame so each
-    # iteration's sink mass comes out of the end-of-iteration aggregate
-    # (below) instead of its own semi-join + broadcast job.
-    sink_flag = verts.join(
-        edges.select(F.col("src").alias("id")).distinct(), "id", "left_anti"
-    ).withColumn("__is_sink", F.lit(True))
-    sink_cols = sink_flag.select("id", "__is_sink")
-    # Regime gate (measured rule 3, SCALING.md r11/r12 appendix): when
-    # the narrow state broadcasts, every iteration's contrib join is a
-    # broadcast-hash join whose EDGE side merely streams — a row-format
-    # checkpoint streams faster than the sorted columnar cache (the
-    # cache pays a columnar→row decode per scan and its partitioning
-    # buys nothing under a BHJ; the r11 unconditional pin cost the
-    # driver bench 1.19× on this query at sf0.1). Pin only in the big
-    # regime, where the cache's reported partitioning/ordering is what
-    # saves the per-superstep edge Exchange+Sort under the merge join.
-    bcast_state = n <= _BROADCAST_STATE_ROWS
-    # p stays pinned in BOTH regimes: the contrib aggregate is
-    # merge-pinned below, so the p⋈contrib join is always a sort-merge
-    # join and p's cached partitioning/ordering is always load-bearing.
-    p = _pin_for_iteration(
-        _prep_personalization(verts, personalization, n)
-        .join(sink_cols, "id", "left")
-        .select("id", "p",
-                F.coalesce(F.col("__is_sink"), F.lit(False)).alias("__is_sink")),
-        n_parts, "id")
-    edges, edges_pinned = _prep_iter_edges(edges, n_parts, bcast_state,
-                                           m, "src")
-
-    if init_ranks is None:
-        ranks = p.select("id", "__is_sink", F.lit(1.0 / n).alias("rank")) \
-            .localCheckpoint()
+        out, iters = verts.withColumn("rank", F.lit(0.0)), 0
     else:
-        prev = init_ranks.select("id", F.col("rank").alias("__r0"))
-        ranks = (p.join(prev, "id", "left")
-                 .select("id", "__is_sink",
-                         F.coalesce(F.col("__r0"), F.lit(1.0 / n))
-                          .alias("rank"))
-                 .localCheckpoint())
-    # a graph with no dangling vertices keeps sink mass identically 0 —
-    # detect once and drop the per-iteration sink aggregate + crossJoin
-    # from the plan entirely (the common case for co-occurrence graphs,
-    # where every vertex in an edge has out-edges).
-    has_sinks = p.filter("__is_sink").limit(1).count() > 0
-
-    # The convergence test is the only per-iteration driver sync; every
-    # other scalar (sink mass) rides inside the plan as a broadcast 1-row
-    # aggregate, so a no-check iteration is exactly ONE job (the
-    # checkpoint). Checking the L1 delta every iteration would double the
-    # job count for a scalar that shrinks geometrically (~0.85^k); probing
-    # every DELTA_EVERY-th iteration overshoots the reference's stop point
-    # by at most DELTA_EVERY-1 extra damped steps — each moving ranks by
-    # < tol in L1, far inside the 1e-4 golden tolerance — while the
-    # tol<0 fixed-iteration mode (the oracle-checked path) never probes.
-    check_delta = tol >= 0
-    DELTA_EVERY = 3
-    # Narrow state: hint it broadcast under the gate (the winning plan —
-    # state builds the hash side over the streaming edge checkpoint);
-    # pin the contrib AGGREGATE to a merge join so no session threshold
-    # (the bench session runs autoBroadcastJoinThreshold=64MB) can ever
-    # move the whole aggregate subplan onto a driver-blocking broadcast
-    # side — the measured 2-3x per-iteration pathology this loop's shape
-    # exists to avoid. In the big regime the merge join is the only
-    # choice anyway, and its p side reads the pinned cache
-    # exchange-and-sort free.
-    it = -1  # max_iter <= 0 never enters the loop → iteration count 0
-    try:
-        for it in range(max_iter):
-            rsel = ranks.select("id", "rank")
-            if bcast_state:
-                rsel = F.broadcast(rsel)
-            contrib = (
-                edges.join(rsel, rsel["id"] == edges["src"])
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum(F.col("rank") * F.col("weight")).alias("__in"))
-            )
-            stepped = p.join(contrib.hint("merge"), "id", "left")
-            if has_sinks:
-                sink_mass = (
-                    ranks.filter("__is_sink")
-                    .agg(F.coalesce(F.sum("rank"), F.lit(0.0))
-                         .alias("__sink"))
-                )
-                stepped = stepped.crossJoin(F.broadcast(sink_mass))
-                sink_term = damping * F.col("__sink") / n
-            else:
-                sink_term = F.lit(0.0)
-            new_ranks = (
-                stepped.select(
-                    "id", "__is_sink",
-                    ((1.0 - damping) * F.col("p")
-                     + damping * F.coalesce(F.col("__in"), F.lit(0.0))
-                     + sink_term).alias("rank"),
-                )
-                .localCheckpoint()
-            )
-            if check_delta and it % DELTA_EVERY == DELTA_EVERY - 1:
-                # (no forced final-iteration probe: the loop exits after
-                # max_iter regardless, so that delta could never be used)
-                # NOTE: keep the delta as a join of the two checkpointed
-                # frames — carrying a __prev column through the
-                # checkpoint adds a third same-iteration reference to
-                # `ranks` inside the checkpointed plan and (measured,
-                # Spark 4.1 local) degrades exponentially after ~13
-                # iterations; this shape stays flat through 50+.
-                delta = (
-                    new_ranks.withColumnRenamed("rank", "__new")
-                    .join(ranks.select("id", "rank"), "id")
-                    .agg(F.sum(F.abs(F.col("__new") - F.col("rank")))
-                         .alias("d"))
-                    .first()["d"]
-                )
-            else:
-                delta = None
-            ranks = new_ranks
-            if check_delta and delta is not None and delta < tol:
-                break
-    finally:
-        # the returned frame hangs off the checkpointed state only — the
-        # iteration caches can go; finally-scoped so an aborted iteration
-        # (executor loss, interrupt during the delta probe) cannot leak
-        # session-lifetime pins
-        if edges_pinned:
-            edges.unpersist(False)
-        p.unpersist(False)
-    out = ranks.select("id", "rank")
-    if with_iterations:
-        return out, it + 1
-    return out
+        if personalization is None:
+            personalization = verts.select("id", F.lit(1.0).alias("p"))
+        out, iters = _pagerank_batch_blocked(
+            verts, n, edges,
+            personalization.select(F.lit(0).alias("key"), "id", "p"), [0],
+            damping, tol, max_iter, num_partitions, init_ranks)
+        out = out.select("id", "rank")
+    return (out, iters) if with_iterations else out
 
 
-# Blocked (column-pivoted) batch PPR: up to this many personalization
-# vectors ride as COLUMNS of one |V|-row state frame — a blocked
-# multi-vector SpMV, so each iteration joins the edge table ONCE and sums
-# k products per edge instead of shuffling a k·|V|-row long frame and
-# joining k copies of every edge. Past the cap the long (key,id) form
-# takes over; at cluster scale a larger batch is run as ceil(k/64)
-# blocked tiles.
+# Up to this many personalization vectors ride as COLUMNS of one |V|-row
+# state frame (see _pagerank_batch_blocked); pagerank_batch runs a larger
+# batch as ceil(k/64) tiles of the same loop.
 _BLOCKED_KEYS_MAX = 64
 
 
@@ -363,172 +221,57 @@ def pagerank_batch(vertices: DataFrame, edges: DataFrame,
 
     personalization: (key, id, p). Returns (key, id, rank). This is the
     100 TB-idiomatic form of the reference's per-request personalized
-    PageRank (tp1 recommendation.py:135-142): one DataFrame keyed by
-    (key, id) runs every customer's PPR in the same shuffles instead of
-    one driver loop per customer. Convergence is tracked PER KEY — a key
-    whose L1 delta drops below tol is frozen (its ranks stop updating),
-    matching the reference's early termination per run.
+    PageRank (tp1 recommendation.py:135-142): every customer's PPR runs
+    in the same shuffles instead of one driver loop per customer.
+    Convergence is tracked PER KEY — a key whose L1 delta drops below tol
+    is frozen (its ranks stop updating), matching the reference's early
+    termination per run.
 
-    Small batches (≤ _BLOCKED_KEYS_MAX keys) dispatch to the blocked
-    column form — identical per-key update order and freeze policy,
-    ~k× less join/aggregate work per iteration.
+    Keys run in sorted tiles of at most _BLOCKED_KEYS_MAX through the
+    blocked loop; the tiles' results are unioned.
     """
     verts = vertices.select("id").distinct()
     n = verts.count()
-    if n == 0:
+    key_list = [r["key"] for r in
+                personalization.select("key").distinct().orderBy("key")
+                .collect()]
+    if n == 0 or not key_list:
         return personalization.select("key").limit(0) \
             .withColumn("id", F.lit(None).cast("long")) \
             .withColumn("rank", F.lit(0.0))
-    keys = personalization.select("key").distinct()
-    n_keys = keys.count()
-    if 0 < n_keys <= _BLOCKED_KEYS_MAX:
-        key_list = [r["key"] for r in keys.orderBy("key").collect()]
-        return _pagerank_batch_blocked(
-            verts, n, edges, personalization, key_list,
-            damping, tol, max_iter, num_partitions)
-    edges_mat = edges.select("src", "dst", "weight").localCheckpoint()
-    m = edges_mat.count()
-    state_rows = n * max(1, n_keys)
-    n_parts = num_partitions or _iter_partitions(
-        vertices.sparkSession.sparkContext, state_rows, m)
-
-    # keyed state: n·n_keys rows outgrow Catalyst's auto-broadcast well
-    # before the graph is big — same gated hint as the blocked form
-    bcast_state = state_rows <= _BROADCAST_STATE_ROWS
-
-    # normalize p per key: /sum, uniform if sum==0 (recommendation.py:181-188)
-    full = keys.crossJoin(verts).join(personalization, ["key", "id"], "left") \
-        .select("key", "id", F.coalesce(F.col("p"), F.lit(0.0)).alias("p"))
-    totals = full.groupBy("key").agg(F.sum("p").alias("__t"))
-    p_frame = full.join(totals, "key").select(
-        "key", "id",
-        F.when(F.col("__t") > 0, F.col("p") / F.col("__t"))
-         .otherwise(F.lit(1.0 / n)).alias("p"))
-    # Regime gate (measured rule 3): in the broadcast regime every
-    # per-iteration join against p/edges is a broadcast-hash join whose
-    # big side merely STREAMS — row-format checkpoints stream faster
-    # than sorted columnar caches (per-scan decode, partitioning unused
-    # under a BHJ). Pin in the big regime, where the merge-pinned
-    # contrib makes the caches' partitioning/ordering load-bearing —
-    # AND past the _EDGE_PIN_ROWS row bound, like every other loop: the
-    # r13 sf1 re-run on a quiet host (markers 0.93-1.01) resolved the
-    # r12 contradiction in the pin's favor (see _pagerank_batch_blocked).
-    edges_pinned = p_pinned = not (bcast_state and m <= _EDGE_PIN_ROWS)
-    if not edges_pinned:
-        p = p_frame.repartition(n_parts).localCheckpoint()
-        edges = _repartition_checkpoint(edges_mat, n_parts)
-    else:
-        p = _pin_for_iteration(p_frame, n_parts, "key", "id")
-        edges = _pin_for_iteration(edges_mat, n_parts, "src")
-    sink_ids = verts.join(edges_mat.select(F.col("src").alias("id"))
-                          .distinct(),
-                          "id", "left_anti").localCheckpoint()
-    # sinkless graphs drop the per-iteration per-key sink aggregate + join
-    # from the plan entirely (mass is identically 0 — see pagerank()).
-    has_sinks = not sink_ids.isEmpty()
-
-    active = p.select("key", "id", F.lit(1.0 / n).alias("rank")) \
-        .localCheckpoint()
-    frozen = None
-
-    def _b(df: DataFrame) -> DataFrame:
-        # big regime: pin to a merge join so a generous session
-        # autoBroadcastJoinThreshold can never move an aggregate subplan
-        # onto a driver-blocking broadcast side (see the single-vector
-        # loop's note)
-        return F.broadcast(df) if bcast_state else df.hint("merge")
-
-    # tol < 0 = fixed-iteration mode (the oracle-replayable path): no key
-    # ever converges, so the per-key delta aggregate, freeze bookkeeping,
-    # and the emptiness probe are dead weight — skip them wholesale.
-    check_delta = tol >= 0
-    # probe the SAME iterations as pagerank() and the blocked form so a
-    # batch straddling _BLOCKED_KEYS_MAX freezes keys at identical steps
-    # on either side of the boundary (and a no-probe iteration stays one
-    # job instead of three).
-    DELTA_EVERY = 3
-    try:
-        for _it in range(max_iter):
-            contrib = (
-                edges.join(_b(active), active["id"] == edges["src"])
-                .groupBy("key", F.col("dst").alias("id"))
-                .agg(F.sum(F.col("rank") * F.col("weight")).alias("__in"))
-            )
-            stepped = (
-                p.join(active.select("key").distinct(), "key", "left_semi")
-                .join(_b(contrib), ["key", "id"], "left")
-            )
-            if has_sinks:
-                sink_mass = (
-                    active.join(sink_ids, "id", "left_semi")
-                    .groupBy("key").agg(F.sum("rank").alias("__sink"))
-                )
-                stepped = stepped.join(sink_mass, "key", "left")
-                sink_term = (damping
-                             * F.coalesce(F.col("__sink"), F.lit(0.0)) / n)
-            else:
-                sink_term = F.lit(0.0)
-            new_ranks = (
-                stepped.select(
-                    "key", "id",
-                    ((1.0 - damping) * F.col("p")
-                     + damping * F.coalesce(F.col("__in"), F.lit(0.0))
-                     + sink_term).alias("rank"),
-                )
-                .localCheckpoint()
-            )
-            if not check_delta or _it % DELTA_EVERY != DELTA_EVERY - 1:
-                active = new_ranks
-                continue
-            deltas = (
-                new_ranks.withColumnRenamed("rank", "__new")
-                .join(_b(active), ["key", "id"])
-                .groupBy("key")
-                .agg(F.sum(F.abs(F.col("__new") - F.col("rank"))).alias("d"))
-                .localCheckpoint()
-            )
-            done_keys = deltas.filter(F.col("d") < tol).select("key")
-            newly_frozen = new_ranks.join(done_keys, "key", "left_semi")
-            frozen = newly_frozen if frozen is None \
-                else frozen.unionByName(newly_frozen)
-            active = new_ranks.join(done_keys, "key", "left_anti") \
-                .localCheckpoint()
-            if active.isEmpty():
-                break
-        out = active if frozen is None else frozen.unionByName(active)
-        out = out.localCheckpoint()
-    finally:
-        # finally-scoped: an aborted iteration must not leak the pins
-        if edges_pinned:
-            edges.unpersist(False)
-        if p_pinned:
-            p.unpersist(False)
-    return out
+    tiles = [
+        _pagerank_batch_blocked(
+            verts, n, edges, personalization,
+            key_list[i:i + _BLOCKED_KEYS_MAX],
+            damping, tol, max_iter, num_partitions)[0]
+        for i in range(0, len(key_list), _BLOCKED_KEYS_MAX)]
+    return reduce(DataFrame.unionByName, tiles)
 
 
 def _pagerank_batch_blocked(verts: DataFrame, n: int, edges: DataFrame,
                             personalization: DataFrame, key_list: list,
                             damping: float, tol: float, max_iter: int,
-                            num_partitions: int | None) -> DataFrame:
-    """Column-blocked batch PPR (dispatched from pagerank_batch).
+                            num_partitions: int | None,
+                            init_ranks: DataFrame | None = None
+                            ) -> tuple[DataFrame, int]:
+    """The PageRank superstep loop: ((key, id, rank), iterations_run)
+    for the keys in `key_list` (at most _BLOCKED_KEYS_MAX).
 
     State is ONE |V|-row frame with a rank column per key — the k
     personalization vectors are columns of a dense |V|×k matrix and each
     power step is a blocked SpMV: edges join the state ONCE on src and
-    the dst aggregation sums k weighted products per edge. Per-key
-    semantics are bit-compatible with the long form: same normalization
-    (uniform 1/n when a key's p sums to 0), same uniform sink
-    redistribution, and the same every-DELTA_EVERY(=3)-iteration L1 delta
-    probe with per-key freeze (a frozen key's column is carried forward
-    unchanged) — both batch forms and the single-vector pagerank() probe
-    the same iterations, so freeze points agree across the
-    _BLOCKED_KEYS_MAX boundary.
+    the dst aggregation sums k weighted products per edge. Per key: p is
+    normalized to sum 1 (uniform 1/n when a key's p sums to 0), sink
+    mass is redistributed uniformly, and every DELTA_EVERY(=3)-th
+    iteration an L1 delta probe freezes the keys under tol (a frozen
+    key's column is snapshotted and drops out of the state).
+
+    `init_ranks` ((id, rank)) starts every column; ids absent from it
+    start at 1/n (pagerank()'s warm start).
 
     Scale: |V| rows × (k+1) doubles — for k ≤ 64 the state is ~0.5 KB a
-    row, the same order as the long frame at k=1, and the edge table is
-    shuffled ~k× less per sweep. Convergence needs one driver sync per
-    iteration (a 1-row k-column aggregate), which replaces the long
-    form's per-iteration checkpoint+isEmpty pair.
+    row. Convergence needs one driver sync per probe (a 1-row k-column
+    aggregate).
     """
     k = len(key_list)
     spark_ctx = verts.sparkSession.sparkContext
@@ -545,6 +288,9 @@ def _pagerank_batch_blocked(verts: DataFrame, n: int, edges: DataFrame,
         "id", *[F.coalesce(F.col(f"__p{i}"), F.lit(0.0)).alias(f"__p{i}")
                 for i in range(k)])
     totals = full.agg(*[F.sum(f"__p{i}").alias(f"__t{i}") for i in range(k)])
+    # carry the sink flag INSIDE the personalization frame so each
+    # iteration's sink mass comes out of a 1-row aggregate of the state
+    # instead of its own semi-join
     sink_cols = verts.join(
         edges.select(F.col("src").alias("id")).distinct(), "id", "left_anti"
     ).select("id", F.lit(True).alias("__is_sink"))
@@ -562,57 +308,61 @@ def _pagerank_batch_blocked(verts: DataFrame, n: int, edges: DataFrame,
     # note) — hint it under the cell gate, fall back to the pinned-cache
     # shuffle shape above it.
     bcast_state = n * (k + 1) <= _BROADCAST_STATE_ROWS
-    # Regime gate (measured rule 3): under the gate both per-iteration
-    # joins are broadcast-hash joins whose p/edge sides STREAM — use
-    # row-format checkpoints, not sorted columnar caches (whose per-scan
-    # decode the r11 unconditional pin paid 20 times per run: the
-    # driver-bench 1.45× regression on ppr_fixed20_batch). Pin in the
-    # big regime AND past the _EDGE_PIN_ROWS row bound (r13): the r12
-    # sf1 A/B CONTRADICTED across session classes here (driver-default:
-    # pin 1.28× faster, i.e. old/new 0.78; tuned: checkpoint 1.34×
-    # faster, both past their marker bands), so r12 shipped the pure
-    # rule-3 gate. The r13 re-run on a QUIETER host (markers 0.925-1.008
-    # on both classes — tighter than r12's) read: tuned pin 1.21× faster
-    # (old/new 0.825, past the band), driver-default par (0.96, inside).
-    # Two-round tally: pin past-band-wins twice (dd-r12, tuned-r13),
-    # checkpoint once (tuned-r12), par once (dd-r13) — and the pin bound
-    # unifies the gate with every other loop (same measured 4M bracket),
-    # so the bound now applies to the batch forms too
+    # Regime gate (measured rule 3 + the _EDGE_PIN_ROWS row bound): under
+    # both gates the per-iteration joins are broadcast-hash joins whose
+    # p/edge sides STREAM — row-format checkpoints, not sorted columnar
+    # caches (whose per-scan decode the r11 unconditional pin paid 20
+    # times per run: the driver-bench 1.45× regression on
+    # ppr_fixed20_batch). Past either gate p and edges pin together. The
+    # row bound applies here since r13: the r12 sf1 A/B contradicted
+    # across session classes on this loop (driver-default: pin 1.28×
+    # faster; tuned: checkpoint 1.34× faster); the r13 re-run on a
+    # quieter host (markers 0.925-1.008 on both classes) read tuned pin
+    # 1.21× faster (past the band) and driver-default par (0.96, inside)
     # (bench_results/ab/ab_batchppr_sf1_r13.json).
-    edges_pinned = p_pinned = not (bcast_state and m <= _EDGE_PIN_ROWS)
-    if not edges_pinned:
-        p = p_frame.repartition(n_parts).localCheckpoint()
-        edges = _repartition_checkpoint(edges, n_parts)
-    else:
-        p = _pin_for_iteration(p_frame, n_parts, "id")
-        edges = _pin_for_iteration(edges, n_parts, "src")
-    has_sinks = p.filter("__is_sink").limit(1).count() > 0
-
-    r = [f"__r{i}" for i in range(k)]
-    ranks = p.select(
-        "id", "__is_sink",
-        *[F.lit(1.0 / n).alias(rc) for rc in r]).localCheckpoint()
+    edges, pinned = _prep_iter_edges(edges, n_parts, bcast_state, m, "src")
+    p = (_pin_for_iteration(p_frame, n_parts, "id") if pinned
+         else p_frame.repartition(n_parts).localCheckpoint())
 
     def _b(df: DataFrame) -> DataFrame:
         # big regime: pin to a merge join so a generous session
         # autoBroadcastJoinThreshold can never move an aggregate subplan
-        # onto a driver-blocking broadcast side (see the single-vector
-        # loop's note)
+        # onto a driver-blocking broadcast side (see _pin_for_iteration)
         return F.broadcast(df) if bcast_state else df.hint("merge")
 
+    r = [f"__r{i}" for i in range(k)]
     check_delta = tol >= 0
     # A frozen key's column is SNAPSHOTTED out of the state (the ranks
     # frame carries live columns only) rather than carried forward via a
     # self-join of the state — a second same-iteration join of `ranks`
     # into the stepped chain triggers the measured Spark 4.1 local
-    # exponential plan-degradation after ~16 iterations (same pathology
-    # as the __prev-column note in pagerank()); with one `ranks`
-    # reference per step (the contrib join) iteration cost stays flat,
-    # and dropping frozen columns also skips their dead updates.
+    # exponential plan-degradation after ~13-16 iterations; with one
+    # `ranks` reference per step (the contrib join) iteration cost stays
+    # flat, and dropping frozen columns also skips their dead updates.
     live = list(range(k))
     frozen_snap: dict[int, DataFrame] = {}
-    DELTA_EVERY = 3  # same probe cadence (and probe iterations) as pagerank()
+    # The convergence probe is the only per-iteration driver sync; every
+    # other scalar (sink mass) rides inside the plan as a broadcast 1-row
+    # aggregate, so a no-probe iteration is ONE job (the checkpoint).
+    # Probing every DELTA_EVERY-th iteration overshoots a key's exact
+    # stop point by at most DELTA_EVERY-1 damped steps, each moving its
+    # ranks by < tol in L1 — far inside the 1e-4 golden tolerance — while
+    # the tol<0 fixed-iteration mode (the oracle-checked path) never
+    # probes.
+    DELTA_EVERY = 3
+    it = -1  # max_iter <= 0 never enters the loop → iteration count 0
     try:
+        has_sinks = p.filter("__is_sink").limit(1).count() > 0
+        ranks = p.select("id", "__is_sink")
+        init = F.lit(1.0 / n)
+        if init_ranks is not None:
+            ranks = ranks.join(
+                init_ranks.select("id", F.col("rank").alias("__init")),
+                "id", "left")
+            init = F.coalesce(F.col("__init"), init)
+        ranks = ranks.select(
+            "id", "__is_sink", *[init.alias(rc) for rc in r]
+        ).localCheckpoint()
         for it in range(max_iter):
             contrib = (
                 edges.join(_b(ranks.select("id", *[r[i] for i in live])),
@@ -623,6 +373,8 @@ def _pagerank_batch_blocked(verts: DataFrame, n: int, edges: DataFrame,
             )
             stepped = p.join(_b(contrib), "id", "left")
             if has_sinks:
+                # a graph with no dangling vertices keeps sink mass
+                # identically 0 — the aggregate + crossJoin drop out
                 sink_mass = ranks.filter("__is_sink").agg(
                     *[F.coalesce(F.sum(r[i]), F.lit(0.0)).alias(f"__s{i}")
                       for i in live])
@@ -639,13 +391,10 @@ def _pagerank_batch_blocked(verts: DataFrame, n: int, edges: DataFrame,
                 "id", "__is_sink",
                 *[_new(i).alias(r[i]) for i in live]).localCheckpoint()
             if check_delta and it % DELTA_EVERY == DELTA_EVERY - 1:
-                # one driver sync per DELTA_EVERY iterations: the per-key
-                # L1 deltas ride a 1-row aggregate. Probing every 3rd
-                # iteration overshoots a key's exact stop point by at
-                # most 2 damped steps, each moving its ranks by < tol
-                # (the pagerank() argument) — and makes the k=1 freeze
-                # point IDENTICAL to the single-vector loop's stop point,
-                # since both probe the same iterations.
+                # per-key L1 deltas as a join of the two checkpointed
+                # frames (carrying a __prev column through the checkpoint
+                # instead adds the same-iteration `ranks` reference the
+                # snapshot note above warns about)
                 deltas = new_ranks.join(
                     _b(ranks.select("id", *[F.col(r[i]).alias(f"__o{i}")
                                             for i in live])), "id"
@@ -653,9 +402,9 @@ def _pagerank_batch_blocked(verts: DataFrame, n: int, edges: DataFrame,
                         .alias(f"__d{i}") for i in live]).first()
                 done = [i for i in live if deltas[f"__d{i}"] < tol]
                 for i in done:
-                    # freeze at the key's own convergence point (the long
-                    # form's newly_frozen snapshot) — checkpointed, so
-                    # this reference stays valid and adds no lineage
+                    # freeze at the key's own convergence point —
+                    # checkpointed, so this reference stays valid and
+                    # adds no lineage
                     frozen_snap[i] = new_ranks.select("id", r[i])
                 live = [i for i in live if i not in done]
             ranks = new_ranks
@@ -667,16 +416,14 @@ def _pagerank_batch_blocked(verts: DataFrame, n: int, edges: DataFrame,
                 F.lit(key_list[i]).alias("key"), "id",
                 F.col(r[i]).alias("rank"))
 
-        out = None
-        for i in range(k):
-            part = _long(i, frozen_snap[i]) if i in frozen_snap \
-                else _long(i, ranks)
-            out = part if out is None else out.unionByName(part)
+        out = reduce(DataFrame.unionByName,
+                     [_long(i, frozen_snap.get(i, ranks)) for i in range(k)])
         out = out.localCheckpoint()
     finally:
-        # finally-scoped: an aborted iteration must not leak the pins
-        if edges_pinned:
+        # the output hangs off checkpointed state only — the pins can go;
+        # finally-scoped so an aborted iteration (executor loss, interrupt
+        # during the delta probe) cannot leak session-lifetime pins
+        if pinned:
             edges.unpersist(False)
-        if p_pinned:
             p.unpersist(False)
-    return out
+    return out, it + 1

@@ -78,8 +78,7 @@ def shortest_paths(edges: DataFrame, landmarks: DataFrame,
     def _b(df: DataFrame) -> DataFrame:
         # big regime: pin to a merge join so a generous session
         # autoBroadcastJoinThreshold can never move an aggregate subplan
-        # onto a driver-blocking broadcast side (see the single-vector
-        # loop's note)
+        # onto a driver-blocking broadcast side (see _pin_for_iteration)
         return F.broadcast(df) if bcast_state else df.hint("merge")
 
     dist = landmarks.select(
@@ -200,7 +199,8 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
                 .agg(F.min("component").alias("n_comp"))
             )
             new_labels = (
-                # merge-pin the aggregate side: see pagerank's contrib note
+                # merge-pin the aggregate side: see _pin_for_iteration's
+                # hint policy
                 labels.join(neighbor_min.hint("merge"), "id", "left")
                 .select("id", F.least(
                     F.col("component"),
@@ -288,8 +288,7 @@ def weighted_shortest_paths(edges: DataFrame, landmarks: DataFrame,
     def _b(df: DataFrame) -> DataFrame:
         # big regime: pin to a merge join so a generous session
         # autoBroadcastJoinThreshold can never move an aggregate subplan
-        # onto a driver-blocking broadcast side (see the single-vector
-        # loop's note)
+        # onto a driver-blocking broadcast side (see _pin_for_iteration)
         return F.broadcast(df) if bcast_state else df.hint("merge")
 
     zero = landmarks.select(
@@ -536,7 +535,8 @@ def label_propagation(vertices: DataFrame, edges: DataFrame,
                       .filter("__rn = 1")
                       .select("id", F.col("community").alias("n_comm")))
             updated = (
-                # merge-pin the argmax side: see pagerank's contrib note
+                # merge-pin the argmax side: see _pin_for_iteration's
+                # hint policy
                 labels.join(winner.hint("merge"), "id", "left")
                 .select("id",
                         F.coalesce(F.col("n_comm"), F.col("community"))

@@ -376,15 +376,19 @@ connected_components_star (no pin) served as a marker, so CC's sf1
 flip to the pin is unconfirmed; noted here so a future A/B knows). HyperANF keeps its
 |V|*m saturation gate plus the same row bound.
 
-**Deliberately NOT applied to the batch-PPR forms** (blocked + long):
-ppr_batch_focal is the one target where the two session classes
-CONTRADICT past both marker bands (driver-default: pin 1.28× faster;
-tuned: checkpoint 1.34× faster — the blocked form's wide 65-column
-state interacts with the session broadcast threshold differently).
-Per the shipping rule (improve past band on one class, no past-band
-regression on the other) the blocked/long forms keep the pure rule-3
-gate until a quieter A/B separates them; the contradiction is
-annotated at _pagerank_batch_blocked.
+**Batch PPR: held back in r12, applied in r13.** ppr_batch_focal was
+the one target where the two session classes CONTRADICTED past both
+marker bands in r12 (driver-default: pin 1.28× faster; tuned:
+checkpoint 1.34× faster), so r12 kept the pure rule-3 gate on the batch
+forms. The r13 re-run on a quieter host (markers 0.925–1.008 on both
+classes; `bench_results/ab/ab_batchppr_sf1_r13.json`) did not reproduce
+the contradiction: tuned favored the pin past the band (old/new 0.825)
+and driver-default was par (0.96). The `_EDGE_PIN_ROWS` bound therefore
+applies to batch PPR too, on the same measured 4M bracket as every
+other loop; no sf0.1 plan changes, since every sf0.1 loop frame is
+under the bound. Since then a single PageRank loop
+(`_pagerank_batch_blocked`) serves `pagerank()` and every
+`pagerank_batch` size, so the gate lives in one place.
 
 #### The earlier null attempt (kept for method history)
 

@@ -385,8 +385,9 @@ def test_edge_pin_row_bound_does_not_change_pagerank_results(
         spark, monkeypatch):
     """Forcing the row bound to 0 flips the tiny test graph onto the
     pinned-edge branch while the state still broadcasts — the mixed
-    shape must produce bit-identical ranks (the prep is semantics-free:
-    same arithmetic, different physical plan)."""
+    shape must produce bit-identical ranks for pagerank and
+    pagerank_batch (the prep is semantics-free: same arithmetic,
+    different physical plan)."""
     import pytest as _pytest
 
     from pyspark.sql import functions as F
@@ -398,11 +399,88 @@ def test_edge_pin_row_bound_does_not_change_pagerank_results(
         [(i, (i + 1) % 6, 0.5) for i in range(6)]
         + [(i, (i + 2) % 6, 0.5) for i in range(6)],
         "src long, dst long, weight double")
-    base = {r["id"]: r["rank"]
-            for r in pr.pagerank(verts, edges, tol=-1.0,
-                                 max_iter=5).collect()}
+    pers = spark.createDataFrame(
+        [("a", 0, 1.0), ("b", 3, 1.0), ("b", 4, 2.0)],
+        "key string, id long, p double")
+
+    def run():
+        single = {r["id"]: r["rank"]
+                  for r in pr.pagerank(verts, edges, tol=-1.0,
+                                       max_iter=5).collect()}
+        batch = {(r["key"], r["id"]): r["rank"]
+                 for r in pr.pagerank_batch(verts, edges, pers, tol=-1.0,
+                                            max_iter=5).collect()}
+        return single, batch
+
+    base, base_batch = run()
     monkeypatch.setattr(pr, "_EDGE_PIN_ROWS", 0)
-    forced = {r["id"]: r["rank"]
-              for r in pr.pagerank(verts, edges, tol=-1.0,
-                                   max_iter=5).collect()}
+    forced, forced_batch = run()
     assert forced == _pytest.approx(base, abs=0.0)  # bit-identical
+    assert forced_batch == base_batch
+
+
+def _numpy_ppr_probed(n, edges, p_vec, tol, max_iter, damping=0.85):
+    """_numpy_pagerank with the loop's stop rule: an L1 delta probe on
+    every 3rd iteration, stopping once it is under tol (tol < 0: never);
+    an all-zero p falls back to uniform."""
+    import numpy as np
+    M = np.zeros((n, n))
+    for s, d, w in edges:
+        M[s, d] += w  # parallel edges add up, as in the edge join
+    sinks = np.where(M.sum(axis=1) == 0)[0]
+    p = np.asarray(p_vec, dtype=float)
+    p = p / p.sum() if p.sum() > 0 else np.full(n, 1.0 / n)
+    r = np.full(n, 1.0 / n)
+    for it in range(max_iter):
+        new = (1 - damping) * p + damping * (M.T @ r + r[sinks].sum() / n)
+        delta, r = np.abs(new - r).sum(), new
+        if tol >= 0 and it % 3 == 2 and delta < tol:
+            break
+    return r
+
+
+@pytest.mark.parametrize("tol,max_iter", [(-1.0, 4), (1e-4, 50)],
+                         ids=["fixed", "converged"])
+def test_pagerank_batch_tiles_match_per_key_pagerank(spark, tol, max_iter):
+    """65 keys run as two blocked tiles (64 + 1) on a graph with sinks:
+    every key's ranks must equal its own single-key answer to 1e-12 —
+    tile membership, the per-key freeze points and the union change
+    nothing. Keys 0 and 63 (both ends of the first tile) and 64 (all-zero p, the
+    uniform fallback, alone in the second tile) are checked against
+    pagerank(personalization=...); all 65 against a dense power
+    iteration with the same probe-and-freeze rule."""
+    n = 10
+    # vertices 8 and 9 are sinks (in-edges, no out-edges)
+    pairs = ([(i, (i + 1) % 8) for i in range(8)]
+             + [(i, (i * 3 + 1) % 8) for i in range(8) if i % 3]
+             + [(0, 8), (5, 9), (6, 9)])
+    deg = {s: sum(1 for a, _ in pairs if a == s) for s, _ in pairs}
+    edge_rows = [(s, d, 1.0 / deg[s]) for s, d in pairs]
+    verts = spark.range(n).select("id")
+    edges = spark.createDataFrame(
+        edge_rows, "src long, dst long, weight double").localCheckpoint()
+    rows = [(k, k % n, 1.0) for k in range(64)] \
+        + [(k, (k * 7) % n, 0.5) for k in range(64) if k % 2] \
+        + [(64, 3, 0.0)]
+    pers = spark.createDataFrame(rows, "key long, id long, p double")
+    batch = {(r["key"], r["id"]): r["rank"]
+             for r in pagerank_batch(verts, edges, pers, tol=tol,
+                                     max_iter=max_iter).collect()}
+    assert len(batch) == 65 * n
+    for key in range(65):
+        p_vec = [0.0] * n
+        for k, i, p in rows:
+            if k == key:
+                p_vec[i] += p
+        want = _numpy_ppr_probed(n, edge_rows, p_vec, tol, max_iter)
+        for i in range(n):
+            assert batch[(key, i)] == pytest.approx(want[i], abs=1e-12), \
+                (key, i)
+    for key in (0, 63, 64):
+        single = pagerank(
+            verts, edges, tol=tol, max_iter=max_iter,
+            personalization=pers.filter(F.col("key") == key)
+            .select("id", "p"))
+        for r in single.collect():
+            assert batch[(key, r["id"])] == pytest.approx(
+                r["rank"], abs=1e-12), (key, r["id"])
