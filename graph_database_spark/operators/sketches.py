@@ -24,6 +24,7 @@ error is provably repaired, not tolerated.
 
 from __future__ import annotations
 
+import math
 from typing import Iterator
 
 import numpy as np
@@ -157,8 +158,11 @@ def heavy_hitters(tokens: DataFrame, min_frac: float,
                   k: int = 4096) -> DataFrame:
     """(token, n_occurrences) for every token with frequency >=
     ceil(min_frac · N), N = total tokens. Exact output, sketch-bounded
-    shuffles (see module docstring). min_frac must exceed 1/(k+1) or the
-    candidate filter cannot prune anything."""
+    shuffles (see module docstring). k is raised to at least
+    ceil(1/min_frac): a token evicted from every summary is never a
+    candidate, which is exact only while the slack N/(k+1) stays below
+    min_frac · N."""
+    k = max(k, math.ceil(1 / min_frac))
     summaries = _mg_summaries(tokens, k).localCheckpoint()
     totals = summaries.agg(
         F.sum("part_total").alias("n"),

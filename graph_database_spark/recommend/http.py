@@ -9,10 +9,16 @@ route handlers are thin JSON adapters: every decision (strategy dispatch,
 `recommend/service.py` / `recommend/engine.py`, so swapping this shim for
 a real FastAPI app is a mechanical re-decoration.
 
-Serving DataFrame queries per-request is a demo/test surface, not the
-100 TB path — production serving would precompute `recommend_batch` into
-a key-value store. The shim exists so a user of the reference can port
-their curl calls unchanged.
+`/recs` answers that depend only on `limit` (`co_occurrence`,
+`similarity` without a customer, the `pagerank` stub) come from a
+snapshot of their first `service.SNAPSHOT_ROWS` rows collected when the
+service is built, so those requests run no Spark job and reflect the
+tables as of service build. Per-customer `similarity`, `pagerank_exact`,
+a `limit` past a full snapshot and both `/customers` routes still run a
+Spark plan per request: a demo/test surface, not the 100 TB path, where
+serving would precompute `recommend_batch` into a key-value store. The
+shim exists so a user of the reference can port their curl calls
+unchanged.
 """
 
 from __future__ import annotations
@@ -23,7 +29,7 @@ import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 
 from .service import (
     RecommendationService, UnknownCustomerError, UnknownStrategyError,
@@ -31,8 +37,11 @@ from .service import (
 )
 
 
-def _rows(df: DataFrame) -> list[dict]:
-    return [r.asDict(recursive=True) for r in df.collect()]
+def _rows(rows: DataFrame | list[Row]) -> list[dict]:
+    """JSON-ready dicts of a DataFrame's rows or of already-collected rows."""
+    if isinstance(rows, DataFrame):
+        rows = rows.collect()
+    return [r.asDict(recursive=True) for r in rows]
 
 
 def _routes(service: RecommendationService, engine) -> dict:

@@ -17,7 +17,7 @@ Thin functions mirroring the two FastAPI surfaces without HTTP:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Row, SparkSession, functions as F
 
 from ..graphs.pagerank import pagerank
 from ..operators.cooccurrence import (
@@ -45,9 +45,31 @@ def clamp_top_n(top_n: int, lo: int = 1, hi: int = 10) -> int:
     return max(lo, min(hi, top_n))
 
 
+#: Rows of each limit-only /recs answer collected at service build. Each
+#: answer has one row per product, so this caps the snapshot's driver
+#: memory at 3·SNAPSHOT_ROWS small rows however large the catalog grows;
+#: a `limit` past a full (exactly SNAPSHOT_ROWS-row) snapshot falls
+#: through to the Spark path, since tp2's `limit` has no upper bound.
+SNAPSHOT_ROWS = 1000
+
+#: /recs kinds whose answer depends only on `limit` (similarity only when
+#: no customer_id is given), served from the snapshot
+SNAPSHOT_STRATEGIES = ("co_occurrence", "similarity", "pagerank")
+
+
 class RecommendationService:
     """tp2-shaped strategy dispatch over reference-schema tables
-    (customers/products/orders/order_items/events)."""
+    (customers/products/orders/order_items/events).
+
+    `co_occurrence`, `similarity` without a customer and the `pagerank`
+    stub depend only on `limit`: their first SNAPSHOT_ROWS rows are
+    collected once, here, and a request slices that list without running
+    a Spark job. A slice of a total order is `ORDER BY … LIMIT n`, so the
+    answers are those of the Spark path. Per-customer `similarity`,
+    `pagerank_exact` and a `limit` past a full snapshot run a Spark plan
+    per request. Like the cached incidence, every answer reflects the
+    tables as of service build.
+    """
 
     def __init__(self, spark: SparkSession, tables: dict[str, DataFrame]):
         self.spark = spark
@@ -56,14 +78,28 @@ class RecommendationService:
         self.incidence = incidence_pairs(
             order_incidence(tables["orders"], self.items),
             tables["events"]).cache()
+        self._snapshot_rows = SNAPSHOT_ROWS
+        self._snapshot = {s: self._ranked(s, None, SNAPSHOT_ROWS).collect()
+                          for s in SNAPSHOT_STRATEGIES}
 
     def recs(self, strategy: str, customer_id: str | None = None,
-             limit: int = 10) -> DataFrame:
+             limit: int = 10) -> list[Row]:
         """GET /recs — dispatch (tp2/app/main.py:62-89)."""
         # tp2's `limit: int = 10` has NO upper bound (main.py:66) — the
         # [1,10] clamp belongs to tp1's top_n only (clamp_top_n); here we
         # just refuse negatives, as Cypher's LIMIT would
         limit = max(0, limit)
+        snap = None if strategy == "similarity" and customer_id is not None \
+            else self._snapshot.get(strategy)
+        if snap is not None and (limit <= len(snap)
+                                 or len(snap) < self._snapshot_rows):
+            return snap[:limit]
+        return self._ranked(strategy, customer_id, limit).collect()
+
+    def _ranked(self, strategy: str, customer_id: str | None,
+                limit: int) -> DataFrame:
+        """The Spark plan of one /recs request: the strategy's answer in
+        its (score desc, product_id asc) total order, first `limit` rows."""
         if strategy == "co_occurrence":
             # ignores customer_id, as the reference does (main.py:92-99)
             return cooccurrence_top_partners(self.items, limit)

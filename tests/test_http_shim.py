@@ -4,11 +4,16 @@ stdlib shim over the Spark service/engine layer (recommend/http.py)."""
 from __future__ import annotations
 
 import json
+import random
 import urllib.error
 import urllib.request
+from concurrent.futures import ThreadPoolExecutor
+from urllib.parse import urlencode
 
 import pytest
+from pyspark.sql import functions as F
 
+from graph_database_spark.recommend import service as service_mod
 from graph_database_spark.recommend.engine import SparkRecommendationEngine
 from graph_database_spark.recommend.http import serve
 from graph_database_spark.recommend.service import RecommendationService
@@ -103,3 +108,81 @@ def test_internal_errors_are_well_formed_500(server, monkeypatch):
     # reach the client (ADVICE r5)
     assert body["detail"] == "internal error"
     assert "spark exploded" not in str(body)
+
+
+@pytest.fixture(scope="module")
+def small_snapshot_server(spark, toy):
+    """A shim whose service snapshot holds K = 2 rows, so the toy data's
+    limits reach both the snapshot slice and the Spark fallback."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(service_mod, "SNAPSHOT_ROWS", 2)
+        service = RecommendationService(spark, toy)
+    srv = serve(service, None)
+    yield f"http://{srv.server_address[0]}:{srv.server_address[1]}"
+    srv.shutdown()
+    srv.server_close()
+
+
+def test_concurrent_recs_match_answers_sent_alone(small_snapshot_server):
+    """8 client threads share the service (and its snapshot) through the
+    threaded shim; every body equals the same request's body sent alone."""
+    rng = random.Random(20261017)
+    # pagerank_exact runs a whole PageRank loop per request, so the
+    # seeded mix sends it once, beside the cheaper strategies
+    pool = [(strategy, customer, limit)
+            for strategy in ("co_occurrence", "similarity", "pagerank")
+            for customer in (None, "C1", "C2")
+            for limit in (0, 1, 2, 3, 4)]
+    mix = [("pagerank_exact", None, 3)] + rng.sample(pool, 31)
+    # every snapshot strategy on both sides of K, with and without a
+    # customer
+    assert {(s, c is None, n <= 2) for s, c, n in mix
+            if s != "pagerank_exact"} == {
+        (s, c, k) for s in ("co_occurrence", "similarity", "pagerank")
+        for c in (True, False) for k in (True, False)}
+
+    def path(req):
+        strategy, customer, limit = req
+        params = {"strategy": strategy, "limit": limit}
+        if customer is not None:
+            params["customer_id"] = customer
+        return f"{small_snapshot_server}/recs?{urlencode(params)}"
+
+    alone = {req: _get(path(req)) for req in set(mix)}
+    assert all(status == 200 for status, _ in alone.values())
+    with ThreadPoolExecutor(max_workers=8) as pool_exec:
+        together = list(pool_exec.map(lambda r: _get(path(r)), mix))
+    for req, got in zip(mix, together):
+        assert got == alone[req], req
+
+
+def test_malformed_limit_is_422_and_unknown_strategy_400(server):
+    status, body = _get(f"{server}/recs?strategy=co_occurrence&limit=abc")
+    assert status == 422 and "detail" in body
+    status, body = _get(f"{server}/recs?strategy=bogus&limit=3")
+    assert status == 400 and "bogus" in body["detail"]
+
+
+def test_spark_failure_is_500_and_next_request_succeeds(server, monkeypatch):
+    """A Spark job that fails mid-request (the per-customer operator's plan
+    raises inside an executor task) returns the generic 500; the shim,
+    its session and the service serve the next request normally."""
+    url = f"{server}/recs?strategy=similarity&customer_id=C2&limit=5"
+    status, want = _get(url)
+    assert status == 200 and want["recommendations"]
+
+    def failing_plan(incidence, customer_id):
+        return incidence.select(
+            "product_id",
+            F.raise_error(F.lit("injected failure")).cast("long")
+            .alias("cf_count"))
+
+    monkeypatch.setattr(service_mod, "user_cf_scores", failing_plan)
+    status, body = _get(url)
+    assert status == 500 and body == {"detail": "internal error"}
+    monkeypatch.undo()
+    assert _get(url) == (200, want)
+    status, body = _get(f"{server}/recs?strategy=co_occurrence&limit=10")
+    assert status == 200 and {(r["product_id"], r["co_count"])
+                              for r in body["recommendations"]} == {
+        ("P2", 2), ("P1", 1), ("P4", 1)}
