@@ -12,13 +12,17 @@ a real FastAPI app is a mechanical re-decoration.
 `/recs` answers that depend only on `limit` (`co_occurrence`,
 `similarity` without a customer, the `pagerank` stub) come from a
 snapshot of their first `service.SNAPSHOT_ROWS` rows collected when the
-service is built, so those requests run no Spark job and reflect the
-tables as of service build. Per-customer `similarity`, `pagerank_exact`,
-a `limit` past a full snapshot and both `/customers` routes still run a
-Spark plan per request: a demo/test surface, not the 100 TB path, where
-serving would precompute `recommend_batch` into a key-value store. The
-shim exists so a user of the reference can port their curl calls
-unchanged.
+service is built. Per-customer `similarity` comes from the service's
+incidence index: the cached incidence collected once at build, up to
+`service.INCIDENCE_ROWS` rows, as two integer code arrays that a numpy
+kernel scans per request. None of these requests runs a Spark job, and
+all reflect the tables as of service build. Per-customer `similarity`
+falls back to its Spark plan when the incidence is over that bound or
+has a null or non-string key. `pagerank_exact`, a `limit` past a full
+snapshot and both `/customers` routes still run a Spark plan per
+request: a demo/test surface, not the 100 TB path, where serving would
+precompute `recommend_batch` into a key-value store. The shim exists so
+a user of the reference can port their curl calls unchanged.
 """
 
 from __future__ import annotations

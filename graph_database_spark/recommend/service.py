@@ -17,7 +17,11 @@ Thin functions mirroring the two FastAPI surfaces without HTTP:
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Row, SparkSession, functions as F
+from pyspark.sql.types import StringType
 
 from ..graphs.pagerank import pagerank
 from ..operators.cooccurrence import (
@@ -56,6 +60,75 @@ SNAPSHOT_ROWS = 1000
 #: no customer_id is given), served from the snapshot
 SNAPSHOT_STRATEGIES = ("co_occurrence", "similarity", "pagerank")
 
+#: Incidence rows up to which the service keeps the driver-side index that
+#: answers per-customer `similarity`. A request costs the kernel
+#: O(|incidence|), so the bound is the largest size measured by
+#: scripts/ab_cf_index.py at which the kernel stays at least 10× faster
+#: than the Spark plan. On a 4-vCPU host (bench_results/ab/ab_cf_index.json)
+#: the kernel took 0.32 / 2.6 / 26.7 ms against the Spark plan's
+#: 866 / 791 / 3911 ms at 10k / 200k / 2M rows, 147× faster at the
+#: largest size measured. At this bound the two code arrays take 32 MB of
+#: driver memory and the build's Arrow collect took 1.9 s.
+INCIDENCE_ROWS = 2_000_000
+
+
+class IncidenceIndex:
+    """The cached (customer_id, product_id) incidence as two int64 code
+    arrays on the driver, one entry per incidence row. Product codes
+    follow the sorted product_id order, so ascending code order is the
+    `product_id asc` tie-break of the Spark plan."""
+
+    def __init__(self, table: pa.Table):
+        customers, self.cust = _codes(table.column("customer_id"))
+        self.customers = {c: i for i, c in enumerate(customers)}
+        self.products, self.prod = _codes(table.column("product_id"))
+
+    def user_cf(self, customer_id, limit: int) -> list[Row]:
+        """`user_cf_scores(incidence, customer_id)` in its (cf_count desc,
+        product_id asc) order, first `limit` rows, with the same per-path
+        `p1 <> p2` semantics: co-customer c2 supports p2 iff it shares a
+        seed with c1 other than p2 itself."""
+        c1 = self.customers.get(customer_id)
+        if c1 is None or limit == 0:
+            return []
+        seed = np.zeros(len(self.products), dtype=np.int8)
+        seed[self.prod[self.cust == c1]] = 1
+        row_seed = seed[self.prod]
+        shared = np.bincount(self.cust[row_seed == 1],
+                             minlength=len(self.customers))
+        shared[c1] = 0
+        # the incidence is distinct, so a row count is count(DISTINCT c2)
+        cf = np.bincount(self.prod[shared[self.cust] > row_seed],
+                         minlength=len(self.products))
+        hit = np.flatnonzero(cf)
+        top = hit[np.lexsort((hit, -cf[hit]))][:limit]
+        return [Row(product_id=self.products[i], cf_count=int(cf[i]))
+                for i in top]
+
+
+def _codes(col: pa.ChunkedArray) -> tuple[list, np.ndarray]:
+    """(sorted distinct values, int64 code of each entry)."""
+    values = pc.unique(col)
+    values = values.take(pc.sort_indices(values))
+    codes = pc.index_in(col, value_set=values).to_numpy()
+    return values.to_pylist(), codes.astype(np.int64)
+
+
+def incidence_index(incidence: DataFrame) -> IncidenceIndex | None:
+    """Collect the incidence through Arrow into an IncidenceIndex, or None
+    when the Spark plan must answer instead: more than INCIDENCE_ROWS
+    rows, a null key, or a key that is not a string (whose equality and
+    order the kernel would not share with Spark)."""
+    keys = ("customer_id", "product_id")
+    if not all(isinstance(incidence.schema[k].dataType, StringType)
+               for k in keys):
+        return None
+    table = incidence.select(*keys).limit(INCIDENCE_ROWS + 1).toArrow()
+    if table.num_rows > INCIDENCE_ROWS or any(
+            table.column(k).null_count for k in keys):
+        return None
+    return IncidenceIndex(table)
+
 
 class RecommendationService:
     """tp2-shaped strategy dispatch over reference-schema tables
@@ -65,10 +138,17 @@ class RecommendationService:
     stub depend only on `limit`: their first SNAPSHOT_ROWS rows are
     collected once, here, and a request slices that list without running
     a Spark job. A slice of a total order is `ORDER BY … LIMIT n`, so the
-    answers are those of the Spark path. Per-customer `similarity`,
-    `pagerank_exact` and a `limit` past a full snapshot run a Spark plan
-    per request. Like the cached incidence, every answer reflects the
-    tables as of service build.
+    answers are those of the Spark path.
+
+    Per-customer `similarity` is answered from an IncidenceIndex: the
+    cached incidence, collected once here as two integer code arrays,
+    over which a numpy kernel runs the 3-hop filter with no Spark job.
+    The Spark plan (`user_cf_scores`) answers instead when the incidence
+    has more than INCIDENCE_ROWS rows, a null key or a key that is not a
+    string, and for a customer_id that is not a string. `pagerank_exact`
+    and a `limit` past a full snapshot run a Spark plan per request. Like
+    the cached incidence, every answer reflects the tables as of service
+    build.
     """
 
     def __init__(self, spark: SparkSession, tables: dict[str, DataFrame]):
@@ -81,6 +161,7 @@ class RecommendationService:
         self._snapshot_rows = SNAPSHOT_ROWS
         self._snapshot = {s: self._ranked(s, None, SNAPSHOT_ROWS).collect()
                           for s in SNAPSHOT_STRATEGIES}
+        self._index = incidence_index(self.incidence)
 
     def recs(self, strategy: str, customer_id: str | None = None,
              limit: int = 10) -> list[Row]:
@@ -89,11 +170,14 @@ class RecommendationService:
         # [1,10] clamp belongs to tp1's top_n only (clamp_top_n); here we
         # just refuse negatives, as Cypher's LIMIT would
         limit = max(0, limit)
-        snap = None if strategy == "similarity" and customer_id is not None \
-            else self._snapshot.get(strategy)
-        if snap is not None and (limit <= len(snap)
-                                 or len(snap) < self._snapshot_rows):
-            return snap[:limit]
+        if strategy == "similarity" and customer_id is not None:
+            if self._index is not None and isinstance(customer_id, str):
+                return self._index.user_cf(customer_id, limit)
+        else:
+            snap = self._snapshot.get(strategy)
+            if snap is not None and (limit <= len(snap)
+                                     or len(snap) < self._snapshot_rows):
+                return snap[:limit]
         return self._ranked(strategy, customer_id, limit).collect()
 
     def _ranked(self, strategy: str, customer_id: str | None,

@@ -1,4 +1,5 @@
-"""Cache hygiene of the iterative graph loops.
+"""Cache hygiene of the iterative graph loops and the registry's batch
+recommendation jobs.
 
 After a loop's result is collected, the session must hold no new cached
 plan, and every RDD the run left persisted must be a `localCheckpoint`
@@ -6,7 +7,8 @@ plan, and every RDD the run left persisted must be a `localCheckpoint`
 forgot to release. Each entry point runs at the default pin bound and
 again with `_EDGE_PIN_ROWS` forced to -1 in every module that imports
 it, which puts every loop on its pinned-cache branch (the test checks
-that something was pinned there).
+that something was pinned there). The registry jobs outside `graphs/`
+run once each on the smoke testdata.
 """
 
 from __future__ import annotations
@@ -16,6 +18,7 @@ from pyspark.sql import functions as F
 
 from graph_database_spark.graphs import anf, hits, traversal
 from graph_database_spark.graphs import pagerank as pr
+from graph_database_spark.registry import QUERIES
 
 _PIN_MODULES = (pr, traversal, hits, anf)
 
@@ -85,15 +88,32 @@ def test_iterative_loop_leaves_no_cache(spark, monkeypatch, graph, entry,
             return _pin(*a)
         monkeypatch.setattr(mod, "_pin_for_iteration", counted)
     v, e, landmarks = graph
+    _assert_leaves_no_cache(spark,
+                            lambda: ENTRIES[entry](spark, v, e, landmarks))
+    if forced_pin:
+        assert pins, "the forced regime pinned nothing"
+
+
+REGISTRY_JOBS = ("recommend_batch", "similarity_jaccard_topk",
+                 "cooccurrence_pairs", "customer_cf")
+
+
+@pytest.mark.parametrize("name", REGISTRY_JOBS)
+def test_registry_job_leaves_no_cache(spark, sf_smoke, name):
+    _assert_leaves_no_cache(
+        spark, lambda: QUERIES[name](spark, sf_smoke).collect())
+
+
+def _assert_leaves_no_cache(spark, run) -> None:
+    """`run()` adds no cacheManager entry and leaves only
+    `localCheckpoint` RDDs newly persisted."""
     cache = spark._jsparkSession.sharedState().cacheManager()
     jsc = spark.sparkContext._jsc
     cached_before = cache.numCachedEntries()
     rdds_before = set(jsc.getPersistentRDDs().keySet().toArray())
 
-    ENTRIES[entry](spark, v, e, landmarks)
+    run()
 
-    if forced_pin:
-        assert pins, "the forced regime pinned nothing"
     assert cache.numCachedEntries() == cached_before
     persisted = jsc.getPersistentRDDs()
     leaked = [persisted.get(i).rdd().toDebugString()

@@ -3,6 +3,7 @@ stdlib shim over the Spark service/engine layer (recommend/http.py)."""
 
 from __future__ import annotations
 
+import contextlib
 import json
 import random
 import urllib.error
@@ -110,22 +111,46 @@ def test_internal_errors_are_well_formed_500(server, monkeypatch):
     assert "spark exploded" not in str(body)
 
 
+@contextlib.contextmanager
+def _shim(service, engine):
+    """Serve on a free port; yields the base URL."""
+    srv = serve(service, engine)
+    try:
+        yield f"http://{srv.server_address[0]}:{srv.server_address[1]}"
+    finally:
+        srv.shutdown()
+        srv.server_close()
+
+
+def _service(spark, tables, **consts):
+    """A service built with the given `service` module constants."""
+    with pytest.MonkeyPatch.context() as mp:
+        for name, value in consts.items():
+            mp.setattr(service_mod, name, value)
+        return RecommendationService(spark, tables)
+
+
 @pytest.fixture(scope="module")
 def small_snapshot_server(spark, toy):
     """A shim whose service snapshot holds K = 2 rows, so the toy data's
     limits reach both the snapshot slice and the Spark fallback."""
-    with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(service_mod, "SNAPSHOT_ROWS", 2)
-        service = RecommendationService(spark, toy)
-    srv = serve(service, None)
-    yield f"http://{srv.server_address[0]}:{srv.server_address[1]}"
-    srv.shutdown()
-    srv.server_close()
+    with _shim(_service(spark, toy, SNAPSHOT_ROWS=2), None) as url:
+        yield url
 
 
-def test_concurrent_recs_match_answers_sent_alone(small_snapshot_server):
-    """8 client threads share the service (and its snapshot) through the
-    threaded shim; every body equals the same request's body sent alone."""
+@pytest.fixture(scope="module")
+def spark_path_server(spark, toy):
+    """As small_snapshot_server, with the incidence bound below the toy
+    incidence, so per-customer similarity runs the Spark plan."""
+    with _shim(_service(spark, toy, SNAPSHOT_ROWS=2, INCIDENCE_ROWS=0),
+               None) as url:
+        yield url
+
+
+def _concurrent_recs_match_answers_sent_alone(base):
+    """8 client threads share the service (its snapshot and its incidence
+    index) through the threaded shim; every body equals the same
+    request's body sent alone."""
     rng = random.Random(20261017)
     # pagerank_exact runs a whole PageRank loop per request, so the
     # seeded mix sends it once, beside the cheaper strategies
@@ -146,7 +171,7 @@ def test_concurrent_recs_match_answers_sent_alone(small_snapshot_server):
         params = {"strategy": strategy, "limit": limit}
         if customer is not None:
             params["customer_id"] = customer
-        return f"{small_snapshot_server}/recs?{urlencode(params)}"
+        return f"{base}/recs?{urlencode(params)}"
 
     alone = {req: _get(path(req)) for req in set(mix)}
     assert all(status == 200 for status, _ in alone.values())
@@ -156,6 +181,15 @@ def test_concurrent_recs_match_answers_sent_alone(small_snapshot_server):
         assert got == alone[req], req
 
 
+def test_concurrent_recs_match_answers_sent_alone(small_snapshot_server):
+    _concurrent_recs_match_answers_sent_alone(small_snapshot_server)
+
+
+def test_concurrent_recs_match_answers_sent_alone_on_spark_path(
+        spark_path_server):
+    _concurrent_recs_match_answers_sent_alone(spark_path_server)
+
+
 def test_malformed_limit_is_422_and_unknown_strategy_400(server):
     status, body = _get(f"{server}/recs?strategy=co_occurrence&limit=abc")
     assert status == 422 and "detail" in body
@@ -163,10 +197,14 @@ def test_malformed_limit_is_422_and_unknown_strategy_400(server):
     assert status == 400 and "bogus" in body["detail"]
 
 
-def test_spark_failure_is_500_and_next_request_succeeds(server, monkeypatch):
+def test_spark_failure_is_500_and_next_request_succeeds(spark_path_server,
+                                                       monkeypatch):
     """A Spark job that fails mid-request (the per-customer operator's plan
     raises inside an executor task) returns the generic 500; the shim,
-    its session and the service serve the next request normally."""
+    its session and the service serve the next request normally. The
+    shim's incidence bound is forced below the toy incidence, so the
+    per-customer request runs that Spark plan."""
+    server = spark_path_server
     url = f"{server}/recs?strategy=similarity&customer_id=C2&limit=5"
     status, want = _get(url)
     assert status == 200 and want["recommendations"]
@@ -186,3 +224,38 @@ def test_spark_failure_is_500_and_next_request_succeeds(server, monkeypatch):
     assert status == 200 and {(r["product_id"], r["co_count"])
                               for r in body["recommendations"]} == {
         ("P2", 2), ("P1", 1), ("P4", 1)}
+
+
+@pytest.fixture(scope="module")
+def roles_server(spark, toy_roles):
+    """A shim with an engine (and no /recs service) over the toy tables
+    plus a no-history customer. PageRank stops after 5 supersteps: the
+    test compares answers under concurrency, not with the goldens."""
+    engine = SparkRecommendationEngine(spark, toy_roles, max_iterations=5,
+                                       num_partitions=4)
+    with _shim(None, engine) as url:
+        yield url
+
+
+def test_concurrent_customer_routes_match_answers_sent_alone(roles_server):
+    """4 client threads send seeded /customers requests for every customer
+    role (buyer, event-only, no-history, unknown) to both routes; every
+    body equals the same request's body sent alone, and an unknown id
+    stays a 404."""
+    roles = {"C2": 200, "C3": 200, "C4": 200, "X1": 404}
+    rng = random.Random(20261018)
+    # every role on both routes with a seeded top_n (0 and 11 clamp), in
+    # a seeded order
+    mix = [f"/customers/{cid}/{route}?top_n={rng.choice((0, 2, 11))}"
+           for cid in roles for route in ("recommendations", "strategies")]
+    rng.shuffle(mix)
+    alone = {p: _get(roles_server + p) for p in mix}
+    for p, (status, body) in alone.items():
+        assert status == roles[p.split("/")[2]], (p, body)
+    # the no-history customer falls back to global PageRank
+    assert any("global_pagerank" in body.get("strategies", {})
+               for p, (_, body) in alone.items() if "/C4/" in p)
+    with ThreadPoolExecutor(max_workers=4) as pool_exec:
+        together = list(pool_exec.map(lambda p: _get(roles_server + p), mix))
+    for p, got in zip(mix, together):
+        assert got == alone[p], p
