@@ -9,20 +9,20 @@ route handlers are thin JSON adapters: every decision (strategy dispatch,
 `recommend/service.py` / `recommend/engine.py`, so swapping this shim for
 a real FastAPI app is a mechanical re-decoration.
 
-`/recs` answers that depend only on `limit` (`co_occurrence`,
-`similarity` without a customer, the `pagerank` stub) come from a
-snapshot of their first `service.SNAPSHOT_ROWS` rows collected when the
-service is built. Per-customer `similarity` comes from the service's
-incidence index: the cached incidence collected once at build, up to
-`service.INCIDENCE_ROWS` rows, as two integer code arrays that a numpy
-kernel scans per request. None of these requests runs a Spark job, and
-all reflect the tables as of service build. Per-customer `similarity`
-falls back to its Spark plan when the incidence is over that bound or
-has a null or non-string key. `pagerank_exact`, a `limit` past a full
-snapshot and both `/customers` routes still run a Spark plan per
-request: a demo/test surface, not the 100 TB path, where serving would
-precompute `recommend_batch` into a key-value store. The shim exists so
-a user of the reference can port their curl calls unchanged.
+`/recs` is answered from the service's one index: the cached incidence
+and the order lines, collected once at build, each up to
+`service.INCIDENCE_ROWS` rows. The answers that depend only on `limit`
+(`co_occurrence`, `similarity` without a customer, the `pagerank` stub)
+slice rankings counted at build, and per-customer `similarity` runs a
+numpy kernel over the incidence codes, so none of these requests runs a
+Spark job; `pagerank_exact` runs PageRank once, on first use, and slices
+the kept ranking. All reflect the tables as of service build. The one
+fallback, when a collect is over the bound or has a null or non-string
+key, is a Spark plan per request. Both `/customers` routes still run
+Spark plans per request: a demo/test surface, not the 100 TB path, where
+serving would precompute `recommend_batch` into a key-value store. The
+shim exists so a user of the reference can port their curl calls
+unchanged.
 """
 
 from __future__ import annotations

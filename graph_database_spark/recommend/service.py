@@ -17,6 +17,8 @@ Thin functions mirroring the two FastAPI surfaces without HTTP:
 
 from __future__ import annotations
 
+import threading
+
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -49,39 +51,63 @@ def clamp_top_n(top_n: int, lo: int = 1, hi: int = 10) -> int:
     return max(lo, min(hi, top_n))
 
 
-#: Rows of each limit-only /recs answer collected at service build. Each
-#: answer has one row per product, so this caps the snapshot's driver
-#: memory at 3·SNAPSHOT_ROWS small rows however large the catalog grows;
-#: a `limit` past a full (exactly SNAPSHOT_ROWS-row) snapshot falls
-#: through to the Spark path, since tp2's `limit` has no upper bound.
-SNAPSHOT_ROWS = 1000
-
-#: /recs kinds whose answer depends only on `limit` (similarity only when
-#: no customer_id is given), served from the snapshot
-SNAPSHOT_STRATEGIES = ("co_occurrence", "similarity", "pagerank")
-
-#: Incidence rows up to which the service keeps the driver-side index that
-#: answers per-customer `similarity`. A request costs the kernel
-#: O(|incidence|), so the bound is the largest size measured by
-#: scripts/ab_cf_index.py at which the kernel stays at least 10× faster
-#: than the Spark plan. On a 4-vCPU host (bench_results/ab/ab_cf_index.json)
-#: the kernel took 0.32 / 2.6 / 26.7 ms against the Spark plan's
-#: 866 / 791 / 3911 ms at 10k / 200k / 2M rows, 147× faster at the
-#: largest size measured. At this bound the two code arrays take 32 MB of
-#: driver memory and the build's Arrow collect took 1.9 s.
+#: Rows up to which the service keeps its driver-side index; it bounds
+#: each of the index's two collects, the cached incidence and the
+#: (order_id, product_id) lines of order_items. A per-customer
+#: `similarity` request costs the kernel O(|incidence|), so the bound is
+#: the largest size measured by scripts/ab_cf_index.py at which the
+#: kernel stays at least 10× faster than the Spark plan. On a 4-vCPU host
+#: (bench_results/ab/ab_cf_index.json) the kernel took 0.32 / 2.6 / 26.7 ms
+#: against the Spark plan's 866 / 791 / 3911 ms at 10k / 200k / 2M rows,
+#: 147× faster at the largest size measured, and the incidence's Arrow
+#: collect took 1.9 s. At the bound each collect encodes to two int64
+#: code arrays of 32 MB, 64 MB of driver memory for both during the
+#: build; the index keeps the incidence's, and of the order lines only
+#: per-product counts.
 INCIDENCE_ROWS = 2_000_000
 
 
 class IncidenceIndex:
     """The cached (customer_id, product_id) incidence as two int64 code
-    arrays on the driver, one entry per incidence row. Product codes
-    follow the sorted product_id order, so ascending code order is the
-    `product_id asc` tie-break of the Spark plan."""
+    arrays on the driver, one entry per incidence row, and the three
+    limit-only answers counted once from it and from the (order_id,
+    product_id) lines of order_items, each ranked by (count desc,
+    product_id asc). Product codes cover both collects and follow the
+    sorted product_id order, so ascending code order is the
+    `product_id asc` tie-break of the Spark plans."""
 
-    def __init__(self, table: pa.Table):
-        customers, self.cust = _codes(table.column("customer_id"))
-        self.customers = {c: i for i, c in enumerate(customers)}
-        self.products, self.prod = _codes(table.column("product_id"))
+    def __init__(self, incidence: pa.Table, lines: pa.Table):
+        customers = _sorted_distinct(incidence.column("customer_id"))
+        self.customers = {c: i for i, c in enumerate(customers.to_pylist())}
+        self.cust = _codes(incidence.column("customer_id"), customers)
+        products = _sorted_distinct(incidence.column("product_id"),
+                                    lines.column("product_id"))
+        self.products = products.to_pylist()
+        self.prod = _codes(incidence.column("product_id"), products)
+        n = len(self.products)
+        orders = lines.column("order_id")
+        # distinct lines, as _item_pairs and order_frequency count them
+        order, prod = np.divmod(np.unique(
+            _codes(orders, _sorted_distinct(orders)) * n
+            + _codes(lines.column("product_id"), products)), n)
+        basket = np.bincount(order)
+        counts = {
+            # count(DISTINCT customer): the incidence is distinct
+            "similarity": ("reach", np.bincount(self.prod, minlength=n)),
+            "pagerank": ("order_count", np.bincount(prod, minlength=n)),
+            # the ordered self-join pairs p with each other product of
+            # each of its orders
+            "co_occurrence": ("co_count", np.bincount(
+                prod, weights=basket[order] - 1,
+                minlength=n).astype(np.int64)),
+        }
+        self.ranked = {s: (column, c, _ranking(c))
+                       for s, (column, c) in counts.items()}
+
+    def top(self, strategy: str, limit: int) -> list[Row]:
+        """The first `limit` rows of a limit-only answer."""
+        column, counts, ranking = self.ranked[strategy]
+        return self._rows(column, counts, ranking[:limit])
 
     def user_cf(self, customer_id, limit: int) -> list[Row]:
         """`user_cf_scores(incidence, customer_id)` in its (cf_count desc,
@@ -100,55 +126,69 @@ class IncidenceIndex:
         # the incidence is distinct, so a row count is count(DISTINCT c2)
         cf = np.bincount(self.prod[shared[self.cust] > row_seed],
                          minlength=len(self.products))
-        hit = np.flatnonzero(cf)
-        top = hit[np.lexsort((hit, -cf[hit]))][:limit]
-        return [Row(product_id=self.products[i], cf_count=int(cf[i]))
-                for i in top]
+        return self._rows("cf_count", cf, _ranking(cf)[:limit])
+
+    def _rows(self, column: str, counts: np.ndarray,
+              codes: np.ndarray) -> list[Row]:
+        row = Row("product_id", column)
+        return [row(self.products[i], int(counts[i])) for i in codes]
 
 
-def _codes(col: pa.ChunkedArray) -> tuple[list, np.ndarray]:
-    """(sorted distinct values, int64 code of each entry)."""
-    values = pc.unique(col)
-    values = values.take(pc.sort_indices(values))
-    codes = pc.index_in(col, value_set=values).to_numpy()
-    return values.to_pylist(), codes.astype(np.int64)
+def _ranking(counts: np.ndarray) -> np.ndarray:
+    """Codes whose count is > 0, by (count desc, code asc)."""
+    hit = np.flatnonzero(counts > 0)
+    return hit[np.lexsort((hit, -counts[hit]))]
 
 
-def incidence_index(incidence: DataFrame) -> IncidenceIndex | None:
-    """Collect the incidence through Arrow into an IncidenceIndex, or None
-    when the Spark plan must answer instead: more than INCIDENCE_ROWS
-    rows, a null key, or a key that is not a string (whose equality and
-    order the kernel would not share with Spark)."""
-    keys = ("customer_id", "product_id")
-    if not all(isinstance(incidence.schema[k].dataType, StringType)
-               for k in keys):
-        return None
-    table = incidence.select(*keys).limit(INCIDENCE_ROWS + 1).toArrow()
-    if table.num_rows > INCIDENCE_ROWS or any(
-            table.column(k).null_count for k in keys):
-        return None
-    return IncidenceIndex(table)
+def _sorted_distinct(*cols: pa.ChunkedArray) -> pa.Array:
+    values = pc.unique(pa.chunked_array(
+        [chunk for col in cols for chunk in col.chunks], cols[0].type))
+    return values.take(pc.sort_indices(values))
+
+
+def _codes(col: pa.ChunkedArray, values: pa.Array) -> np.ndarray:
+    """The int64 position of each entry of `col` in `values`."""
+    return pc.index_in(col, value_set=values).to_numpy().astype(np.int64)
+
+
+def incidence_index(incidence: DataFrame,
+                    items: DataFrame) -> IncidenceIndex | None:
+    """Collect the incidence and the order lines of `items` through Arrow
+    into an IncidenceIndex, or None when the Spark plans must answer
+    instead: either collect over INCIDENCE_ROWS rows, a null key, or a key
+    that is not a string (whose equality and order the index would not
+    share with Spark)."""
+    tables = []
+    for frame, keys in ((incidence, ("customer_id", "product_id")),
+                        (items, ("order_id", "product_id"))):
+        if not all(isinstance(frame.schema[k].dataType, StringType)
+                   for k in keys):
+            return None
+        table = frame.select(*keys).limit(INCIDENCE_ROWS + 1).toArrow()
+        if table.num_rows > INCIDENCE_ROWS or any(
+                table.column(k).null_count for k in keys):
+            return None
+        tables.append(table)
+    return IncidenceIndex(*tables)
 
 
 class RecommendationService:
     """tp2-shaped strategy dispatch over reference-schema tables
     (customers/products/orders/order_items/events).
 
-    `co_occurrence`, `similarity` without a customer and the `pagerank`
-    stub depend only on `limit`: their first SNAPSHOT_ROWS rows are
-    collected once, here, and a request slices that list without running
-    a Spark job. A slice of a total order is `ORDER BY … LIMIT n`, so the
-    answers are those of the Spark path.
+    Requests are answered from one driver-side IncidenceIndex, built here
+    from two Arrow collects, each bounded by INCIDENCE_ROWS: the cached
+    incidence and the order lines. `co_occurrence`, `similarity` without
+    a customer and the `pagerank` stub slice a ranking counted at build;
+    per-customer `similarity` runs a numpy kernel, the 3-hop filter, over
+    the incidence codes. None of these runs a Spark job. `pagerank_exact`
+    runs its Spark plan once, on first use, and slices the kept ranking.
 
-    Per-customer `similarity` is answered from an IncidenceIndex: the
-    cached incidence, collected once here as two integer code arrays,
-    over which a numpy kernel runs the 3-hop filter with no Spark job.
-    The Spark plan (`user_cf_scores`) answers instead when the incidence
-    has more than INCIDENCE_ROWS rows, a null key or a key that is not a
-    string, and for a customer_id that is not a string. `pagerank_exact`
-    and a `limit` past a full snapshot run a Spark plan per request. Like
-    the cached incidence, every answer reflects the tables as of service
-    build.
+    The one fallback is the per-request Spark plan (`_ranked`), which
+    answers every request when there is no index (a collect over the
+    bound, a null key or a key that is not a string) and per-customer
+    `similarity` for a customer_id that is not a string. Like the cached
+    incidence, every answer reflects the tables as of service build.
     """
 
     def __init__(self, spark: SparkSession, tables: dict[str, DataFrame]):
@@ -158,10 +198,9 @@ class RecommendationService:
         self.incidence = incidence_pairs(
             order_incidence(tables["orders"], self.items),
             tables["events"]).cache()
-        self._snapshot_rows = SNAPSHOT_ROWS
-        self._snapshot = {s: self._ranked(s, None, SNAPSHOT_ROWS).collect()
-                          for s in SNAPSHOT_STRATEGIES}
-        self._index = incidence_index(self.incidence)
+        self._index = incidence_index(self.incidence, self.items)
+        self._pagerank_rows: list[Row] | None = None
+        self._pagerank_lock = threading.Lock()
 
     def recs(self, strategy: str, customer_id: str | None = None,
              limit: int = 10) -> list[Row]:
@@ -170,15 +209,25 @@ class RecommendationService:
         # [1,10] clamp belongs to tp1's top_n only (clamp_top_n); here we
         # just refuse negatives, as Cypher's LIMIT would
         limit = max(0, limit)
-        if strategy == "similarity" and customer_id is not None:
-            if self._index is not None and isinstance(customer_id, str):
-                return self._index.user_cf(customer_id, limit)
-        else:
-            snap = self._snapshot.get(strategy)
-            if snap is not None and (limit <= len(snap)
-                                     or len(snap) < self._snapshot_rows):
-                return snap[:limit]
+        index = self._index
+        if index is not None:
+            if strategy == "similarity" and customer_id is not None:
+                if isinstance(customer_id, str):
+                    return index.user_cf(customer_id, limit)
+            elif strategy in index.ranked:
+                return index.top(strategy, limit)
+            elif strategy == "pagerank_exact":
+                return self._pagerank_exact()[:limit]
         return self._ranked(strategy, customer_id, limit).collect()
+
+    def _pagerank_exact(self) -> list[Row]:
+        """Every row of pagerank_exact's ranking, collected on first use
+        and kept; the lock makes concurrent first requests run one
+        PageRank."""
+        with self._pagerank_lock:
+            if self._pagerank_rows is None:
+                self._pagerank_rows = self._pagerank_exact_plan().collect()
+        return self._pagerank_rows
 
     def _ranked(self, strategy: str, customer_id: str | None,
                 limit: int) -> DataFrame:
@@ -201,15 +250,19 @@ class RecommendationService:
                     .orderBy(F.desc("order_count"), F.asc("product_id"))
                     .limit(limit))
         if strategy == "pagerank_exact":
-            adj = row_normalized_adjacency(cooccurrence_ordered(self.items))
-            vertices = self.tables["products"].select("id")
-            ranks = pagerank(vertices, adj)
-            return (ranks.select(F.col("id").alias("product_id"),
-                                 F.round("rank", 6).alias("rank"))
-                    .orderBy(F.desc("rank"), F.asc("product_id"))
-                    .limit(limit))
+            return self._pagerank_exact_plan().limit(limit)
         raise UnknownStrategyError(
             f"Unknown strategy: {strategy!r}; expected one of {VALID_STRATEGIES}")
+
+    def _pagerank_exact_plan(self) -> DataFrame:
+        """Real PageRank over the ordered co-occurrence graph: every
+        product's (product_id, rank) in (rank desc, product_id asc) order."""
+        adj = row_normalized_adjacency(cooccurrence_ordered(self.items))
+        vertices = self.tables["products"].select("id")
+        ranks = pagerank(vertices, adj)
+        return (ranks.select(F.col("id").alias("product_id"),
+                             F.round("rank", 6).alias("rank"))
+                .orderBy(F.desc("rank"), F.asc("product_id")))
 
 
 def customer_recommendations(engine: SparkRecommendationEngine,

@@ -17,7 +17,9 @@ from pyspark.sql import functions as F
 from graph_database_spark.recommend import service as service_mod
 from graph_database_spark.recommend.engine import SparkRecommendationEngine
 from graph_database_spark.recommend.http import serve
-from graph_database_spark.recommend.service import RecommendationService
+from graph_database_spark.recommend.service import (
+    VALID_STRATEGIES, RecommendationService,
+)
 
 
 @pytest.fixture(scope="module")
@@ -131,40 +133,30 @@ def _service(spark, tables, **consts):
 
 
 @pytest.fixture(scope="module")
-def small_snapshot_server(spark, toy):
-    """A shim whose service snapshot holds K = 2 rows, so the toy data's
-    limits reach both the snapshot slice and the Spark fallback."""
-    with _shim(_service(spark, toy, SNAPSHOT_ROWS=2), None) as url:
-        yield url
-
-
-@pytest.fixture(scope="module")
 def spark_path_server(spark, toy):
-    """As small_snapshot_server, with the incidence bound below the toy
-    incidence, so per-customer similarity runs the Spark plan."""
-    with _shim(_service(spark, toy, SNAPSHOT_ROWS=2, INCIDENCE_ROWS=0),
-               None) as url:
+    """A shim whose service has its index bound below the toy tables, so
+    every /recs request runs the Spark plan."""
+    with _shim(_service(spark, toy, INCIDENCE_ROWS=0), None) as url:
         yield url
 
 
 def _concurrent_recs_match_answers_sent_alone(base):
-    """8 client threads share the service (its snapshot and its incidence
-    index) through the threaded shim; every body equals the same
-    request's body sent alone."""
+    """8 client threads share the service (its index, or its Spark path)
+    through the threaded shim; every body equals the same request's body
+    sent alone."""
     rng = random.Random(20261017)
-    # pagerank_exact runs a whole PageRank loop per request, so the
-    # seeded mix sends it once, beside the cheaper strategies
     pool = [(strategy, customer, limit)
             for strategy in ("co_occurrence", "similarity", "pagerank")
             for customer in (None, "C1", "C2")
             for limit in (0, 1, 2, 3, 4)]
-    mix = [("pagerank_exact", None, 3)] + rng.sample(pool, 31)
-    # every snapshot strategy on both sides of K, with and without a
-    # customer
-    assert {(s, c is None, n <= 2) for s, c, n in mix
-            if s != "pagerank_exact"} == {
-        (s, c, k) for s in ("co_occurrence", "similarity", "pagerank")
-        for c in (True, False) for k in (True, False)}
+    # pagerank_exact runs a whole PageRank loop per request on the Spark
+    # path, so the seeded mix sends it twice, beside the cheaper strategies
+    mix = ([("pagerank_exact", None, 3), ("pagerank_exact", "C2", 2)]
+           + rng.sample(pool, 30))
+    # every strategy with and without a customer, and every limit
+    assert {(s, c is None) for s, c, _ in mix} == {
+        (s, c) for s in VALID_STRATEGIES for c in (True, False)}
+    assert {n for _, _, n in mix} == {0, 1, 2, 3, 4}
 
     def path(req):
         strategy, customer, limit = req
@@ -181,8 +173,8 @@ def _concurrent_recs_match_answers_sent_alone(base):
         assert got == alone[req], req
 
 
-def test_concurrent_recs_match_answers_sent_alone(small_snapshot_server):
-    _concurrent_recs_match_answers_sent_alone(small_snapshot_server)
+def test_concurrent_recs_match_answers_sent_alone(server):
+    _concurrent_recs_match_answers_sent_alone(server)
 
 
 def test_concurrent_recs_match_answers_sent_alone_on_spark_path(
@@ -202,7 +194,7 @@ def test_spark_failure_is_500_and_next_request_succeeds(spark_path_server,
     """A Spark job that fails mid-request (the per-customer operator's plan
     raises inside an executor task) returns the generic 500; the shim,
     its session and the service serve the next request normally. The
-    shim's incidence bound is forced below the toy incidence, so the
+    shim's index bound is forced below the toy tables, so the
     per-customer request runs that Spark plan."""
     server = spark_path_server
     url = f"{server}/recs?strategy=similarity&customer_id=C2&limit=5"
@@ -259,3 +251,36 @@ def test_concurrent_customer_routes_match_answers_sent_alone(roles_server):
         together = list(pool_exec.map(lambda p: _get(roles_server + p), mix))
     for p, got in zip(mix, together):
         assert got == alone[p], p
+
+
+def test_customer_routes_fault_injection(roles_server, monkeypatch):
+    """On both /customers routes: a malformed top_n is a 422; a Spark job
+    that fails inside an executor task (the engine's similarity scores
+    replaced by a raise_error plan) is the generic 500, and the next
+    request is a 200 with the earlier body; an unknown id stays a 404."""
+    routes = ("recommendations", "strategies")
+    for route in routes:
+        status, body = _get(f"{roles_server}/customers/C2/{route}?top_n=abc")
+        assert status == 422 and "detail" in body, route
+    want = {r: _get(f"{roles_server}/customers/C2/{r}?top_n=3")
+            for r in routes}
+    assert all(status == 200 for status, _ in want.values())
+
+    def failing_scores(self, seeds):
+        # every product, so rows survive the routes' seed exclusion
+        return self.products.select(
+            F.col("id").alias("product_id"),
+            F.raise_error(F.lit("injected failure")).cast("double")
+            .alias("score"))
+
+    monkeypatch.setattr(SparkRecommendationEngine, "_similarity_scores",
+                        failing_scores)
+    for route in routes:
+        status, body = _get(f"{roles_server}/customers/C2/{route}?top_n=3")
+        assert (status, body) == (500, {"detail": "internal error"}), route
+        assert _get(f"{roles_server}/customers/X1/{route}")[0] == 404
+    monkeypatch.undo()
+    for route in routes:
+        assert _get(f"{roles_server}/customers/C2/{route}?top_n=3") \
+            == want[route], route
+        assert _get(f"{roles_server}/customers/X1/{route}")[0] == 404

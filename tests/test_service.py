@@ -7,11 +7,14 @@ import contextlib
 import datetime as dt
 import itertools
 import random
+import threading
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from graph_database_spark.graphs.pagerank import pagerank
 from graph_database_spark.operators.cooccurrence import (
     cooccurrence_top_partners,
 )
@@ -22,7 +25,8 @@ from graph_database_spark.operators.similarity import user_cf_scores
 from graph_database_spark.plans.sql_runner import run_sql, run_sql_script
 from graph_database_spark.recommend import service as service_mod
 from graph_database_spark.recommend.service import (
-    RecommendationService, UnknownStrategyError, clamp_top_n,
+    VALID_STRATEGIES, RecommendationService, UnknownStrategyError,
+    clamp_top_n,
 )
 
 
@@ -120,7 +124,7 @@ def _job_group(spark):
     """Run the block under a fresh job group; yields a callable returning
     the ids of the Spark jobs the block started."""
     sc = spark.sparkContext
-    group = f"svc-snapshot-{next(_groups)}"
+    group = f"svc-{next(_groups)}"
     sc.setJobGroup(group, group)
     try:
         yield lambda: sc.statusTracker().getJobIdsForGroup(group)
@@ -140,30 +144,106 @@ def _spark_path(svc, strategy, n):
             .orderBy(F.desc("order_count"), F.asc("product_id")).limit(n))
 
 
-def test_snapshot_equals_spark_path_on_ties(spark, toy, monkeypatch):
-    """With the snapshot cut to K = 2 rows, every limit 0..K+1 of every
-    snapshot strategy returns the Spark path's ordered rows. The toy data
-    ties P1/P4 at co_count 1 and every product at reach 2, so the
-    product_id tie-break is what the slice must reproduce. limit <= K is
-    served from the snapshot with no Spark job; K+1 falls through."""
-    k = 2
-    monkeypatch.setattr(service_mod, "SNAPSHOT_ROWS", k)
-    svc = RecommendationService(spark, toy)
-    for strategy in service_mod.SNAPSHOT_STRATEGIES:
-        for n in range(k + 2):
+LIMIT_ONLY = ("co_occurrence", "similarity", "pagerank")
+
+
+def _fields_and_values(rows):
+    return [(list(r.__fields__), tuple(r)) for r in rows]
+
+
+def _assert_index_equals_spark_path(spark, svc):
+    """Every limit 0..|products|+1 of every limit-only strategy returns the
+    Spark path's rows (values, column names and order), with no job."""
+    assert svc._index is not None
+    for strategy in LIMIT_ONLY:
+        for n in range(len(svc._index.products) + 2):
             want = _spark_path(svc, strategy, n).collect()
             with _job_group(spark) as jobs:
                 got = svc.recs(strategy, limit=n)
                 ran = jobs()
             assert got == want, (strategy, n)
-            assert [r.asDict() for r in got] == [r.asDict() for r in want]
-            assert (ran == []) == (n <= k), (strategy, n, ran)
+            assert _fields_and_values(got) == _fields_and_values(want)
+            assert ran == [], (strategy, n, ran)
 
 
-def test_snapshot_request_starts_no_spark_job(spark, service,
-                                             spark_path_service):
-    # the toy catalog is far below SNAPSHOT_ROWS, so any limit is a slice
-    for strategy in service_mod.SNAPSHOT_STRATEGIES:
+def test_index_equals_spark_path_on_ties(spark, service):
+    """The toy data ties P1/P4 at co_count 1 and every product at reach 2,
+    so the product_id tie-break is what each ranking must reproduce."""
+    _assert_index_equals_spark_path(spark, service)
+
+
+def _random_tables(spark, toy):
+    """Seeded tables whose order lines repeat, reach an order missing from
+    `orders` and hold a single-item basket, with a product seen only in
+    events; every limit-only answer has tied counts."""
+    rng = random.Random(20261019)
+    ts = dt.datetime(2024, 4, 1)
+    orders = [(f"O{i:02d}", f"c{rng.randrange(8)}", ts) for i in range(20)]
+    lines = [(rng.choice([o for o, _, _ in orders[:19]] + ["O99"]),
+              f"p{int(9 * rng.random() ** 2)}", 1) for _ in range(50)]
+    lines += lines[:8] + [("O19", "p_solo", 1)]
+    events = [(f"E{i}", f"c{rng.randrange(10)}",
+               f"p{int(9 * rng.random() ** 2)}", "view", ts)
+              for i in range(30)] + [("E99", "c3", "p_event", "view", ts)]
+    return {**toy,
+            "orders": spark.createDataFrame(orders, toy["orders"].schema),
+            "order_items": spark.createDataFrame(
+                lines, toy["order_items"].schema),
+            "events": spark.createDataFrame(events, toy["events"].schema)}
+
+
+def test_index_equals_spark_path_on_random_tables(spark, toy):
+    svc = RecommendationService(spark, _random_tables(spark, toy))
+    assert "p_event" in svc._index.products
+    answers = {s: svc.recs(s, limit=100) for s in LIMIT_ONLY}
+    # p_solo's only order holds nothing else: a co_count of 0, absent
+    assert "p_solo" not in {r["product_id"] for r in answers["co_occurrence"]}
+    assert "p_solo" in {r["product_id"] for r in answers["pagerank"]}
+    for rows in answers.values():
+        counts = [r[1] for r in rows]
+        assert len(set(counts)) < len(counts) and len(set(counts)) > 1
+    _assert_index_equals_spark_path(spark, svc)
+
+
+def _nullable(schema):
+    return StructType([StructField(f.name, f.dataType, True)
+                       for f in schema.fields])
+
+
+@pytest.mark.parametrize("case", ["null_order_id", "null_product_id",
+                                  "long_order_id"])
+def test_order_lines_without_index_answer_on_spark_path(spark, toy, case):
+    """An order_items key that is null or not a string leaves no index;
+    every request then runs the Spark plan, with the same answers."""
+    tables = dict(toy)
+    if case == "long_order_id":  # "O3" → 3, in orders.id as well
+        def number(col):
+            return F.substring(col, 2, 9).cast("long").alias(col)
+        tables["orders"] = toy["orders"].select(
+            number("id"), "customer_id", "ts")
+        tables["order_items"] = toy["order_items"].select(
+            number("order_id"), "product_id", "quantity")
+    else:
+        extra = ((None, "P3", 1) if case == "null_order_id"
+                 else ("O1", None, 1))
+        tables["order_items"] = toy["order_items"].unionByName(
+            spark.createDataFrame([extra],
+                                  _nullable(toy["order_items"].schema)))
+    svc = RecommendationService(spark, tables)
+    assert svc._index is None
+    for strategy in LIMIT_ONLY:
+        for n in (0, 3):
+            want = _spark_path(svc, strategy, n).collect()
+            with _job_group(spark) as jobs:
+                got = svc.recs(strategy, limit=n)
+                ran = jobs()
+            assert _fields_and_values(got) == _fields_and_values(want)
+            if n > 0:  # Spark folds LIMIT 0 away without a job
+                assert ran, (case, strategy, n)
+
+
+def test_request_starts_no_spark_job(spark, service, spark_path_service):
+    for strategy in LIMIT_ONLY:
         with _job_group(spark) as jobs:
             got = service.recs(strategy, customer_id=None, limit=50)
             assert jobs() == [], strategy
@@ -181,6 +261,60 @@ def test_snapshot_request_starts_no_spark_job(spark, service,
         assert spark_path_service.recs("similarity", customer_id="C1",
                                        limit=3) == got
         assert jobs()
+
+
+#: Jobs of a cold RecommendationService build on toy_roles: 6 for the
+#: incidence collect, which also materialises the cached incidence, and
+#: 1 for the order lines' collect (a warm build runs 1 + 1). With the row
+#: snapshot's three build plans, since deleted, a cold build ran 19.
+BUILD_JOBS = 7
+
+
+def test_build_and_request_job_counts(spark, service, toy_roles):
+    """A later build plan, or a request kind that starts a job on the
+    index, fails here."""
+    # a cold build: drop the cached incidence these tables share with
+    # the module's service (the next build caches it again)
+    RecommendationService(spark, toy_roles).incidence.unpersist()
+    with _job_group(spark) as jobs:
+        RecommendationService(spark, toy_roles)
+        assert len(jobs()) == BUILD_JOBS
+    service.recs("pagerank_exact", limit=1)  # first use runs PageRank
+    with _job_group(spark) as jobs:
+        for strategy in VALID_STRATEGIES:
+            for customer in (None, "C1", "C4"):
+                service.recs(strategy, customer_id=customer, limit=3)
+        assert jobs() == []
+
+
+def test_pagerank_exact_runs_once_then_slices(spark, toy_roles,
+                                              monkeypatch):
+    """4 threads that send the first pagerank_exact request together run
+    one PageRank; every later request slices its kept ranking."""
+    svc = RecommendationService(spark, toy_roles)
+    calls = []
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return pagerank(*args, **kwargs)
+
+    monkeypatch.setattr(service_mod, "pagerank", counted)
+    start = threading.Barrier(4)
+
+    def first(_):
+        start.wait(timeout=60)
+        return svc.recs("pagerank_exact", limit=4)
+
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        got = list(pool.map(first, range(4)))
+    assert len(calls) == 1
+    assert got[1:] == got[:1] * 3
+    ranks = {r["product_id"]: r["rank"] for r in got[0]}
+    assert ranks["P2"] == pytest.approx(0.463293, abs=1e-4)
+    with _job_group(spark) as jobs:
+        assert svc.recs("pagerank_exact", limit=2) == got[0][:2]
+        assert jobs() == []
+    assert len(calls) == 1
 
 
 # buyers, event-only, no-history and an id that is no customer at all
@@ -227,7 +361,9 @@ def test_index_equals_spark_path_on_random_incidence(spark):
               f"p{int(12 * rng.random() ** 2):02d}") for _ in range(160)}
     inc = spark.createDataFrame(sorted(pairs),
                                 "customer_id string, product_id string")
-    index = service_mod.incidence_index(inc)
+    index = service_mod.incidence_index(
+        inc, inc.select(F.col("customer_id").alias("order_id"),
+                        "product_id"))
     counts = set()
     for c in ("c00", "c07", "c13", "c21", "c39"):
         want = _cf_spark_path(inc, c, 13)
@@ -238,21 +374,23 @@ def test_index_equals_spark_path_on_random_incidence(spark):
 
 
 def test_index_bound_is_inclusive(spark, service, monkeypatch):
-    n = service.incidence.count()
-    monkeypatch.setattr(service_mod, "INCIDENCE_ROWS", n)
-    assert service_mod.incidence_index(service.incidence) is not None
-    monkeypatch.setattr(service_mod, "INCIDENCE_ROWS", n - 1)
-    assert service_mod.incidence_index(service.incidence) is None
+    """The bound caps each collect: the incidence and the order lines."""
+    for inc, items in ((service.incidence, service.items.limit(2)),
+                       (service.incidence.limit(2), service.items)):
+        n = max(inc.count(), items.count())
+        monkeypatch.setattr(service_mod, "INCIDENCE_ROWS", n)
+        assert service_mod.incidence_index(inc, items) is not None
+        monkeypatch.setattr(service_mod, "INCIDENCE_ROWS", n - 1)
+        assert service_mod.incidence_index(inc, items) is None
 
 
-def test_non_string_key_incidence_has_no_index(spark):
+def test_non_string_key_incidence_has_no_index(spark, toy):
     inc = spark.createDataFrame([(1, 2)], "customer_id long, product_id long")
-    assert service_mod.incidence_index(inc) is None
+    assert service_mod.incidence_index(inc, toy["order_items"]) is None
 
 
 def test_null_key_incidence_routes_to_spark_path(spark, toy):
-    schema = StructType([StructField(f.name, f.dataType, True)
-                         for f in toy["events"].schema.fields])
+    schema = _nullable(toy["events"].schema)
     null_event = spark.createDataFrame(
         [("E6", None, "P1", "view", dt.datetime(2024, 4, 4))], schema)
     tables = {**toy, "events": toy["events"].unionByName(null_event)}
