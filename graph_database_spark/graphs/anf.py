@@ -28,35 +28,22 @@ from functools import reduce
 from pyspark.sql import DataFrame, functions as F
 
 from ..operators.sketches import HLL_M, hll_estimate, hll_sketch
-from .pagerank import (
-    _BROADCAST_STATE_ROWS, _EDGE_PIN_ROWS, _iter_partitions,
-    _pin_for_iteration, _repartition_checkpoint,
-)
+from .superstep import _iter_partitions, iteration_frames, pinned_regime
 
 
-def _pin_edges(edges: DataFrame, n_vertices: int) -> tuple[DataFrame, bool]:
-    """(edge frame ready for iteration, pinned?). The
-    one-off checkpoint stops every superstep re-executing the caller's
-    whole edge-building subtree (for the purchase graph, a 4-table ETL
-    join). Whether the checkpoint is then ALSO pinned in a
-    dst-partitioned sorted cache is regime-gated on the register state's
-    saturation bound |V|·m (measured rule 3, SCALING.md pinned-cache
-    appendix): while the state side stays broadcast-small, the superstep
-    join is a broadcast-hash join whose edge side merely streams — the
-    row-format checkpoint streams faster than a columnar cache. Past the
-    bound the state outgrows any session broadcast threshold mid-run
-    (balls saturate toward |V|·m register rows), the join flips to
-    sort-merge, and the cache's reported partitioning/ordering is what
-    keeps the per-superstep edge Exchange+Sort out of the plan."""
+def _iteration_edges(state: DataFrame, edges: DataFrame):
+    """`superstep.iteration_frames` over the edges, partitioned on dst.
+    The one-off checkpoint stops every superstep re-executing the
+    caller's whole edge-building subtree (for the purchase graph, a
+    4-table ETL join). The regime gate counts the register state at its
+    saturation bound |V|·m, not at its starting size: balls saturate
+    toward |V|·m register rows, so past that bound the state outgrows
+    any session broadcast threshold mid-run and the superstep join flips
+    to sort-merge, where the pin's partitioning keeps the per-superstep
+    edge Exchange+Sort out of the plan."""
+    n_vertices = state.count()
     edges = edges.localCheckpoint()
     m = edges.count()
-    # second gate (_EDGE_PIN_ROWS, pagerank.py): past the measured edge-
-    # row bound the checkpoint's per-row deserialization outgrows the
-    # cache's columnar decode even in the broadcast regime (the sf1-
-    # measured inversion on the pagerank-family loops) — pin there too.
-    if n_vertices * HLL_M <= _BROADCAST_STATE_ROWS and m <= _EDGE_PIN_ROWS:
-        n = _iter_partitions(edges.sparkSession.sparkContext, m, m)
-        return _repartition_checkpoint(edges, n), False
     # NOTE (r13, measured): hinting the ~1M-row edge checkpoint broadcast
     # here (build side of every superstep join, saving the register
     # state's per-superstep Exchange+Sort) was A/B'd and REJECTED — the
@@ -64,10 +51,11 @@ def _pin_edges(edges: DataFrame, n_vertices: int) -> tuple[DataFrame, bool]:
     # saved on both session classes (driver-default diameter 0.79×,
     # tuned marker-adjusted ≈0.82-0.91×; OPTIMIZATION_r13.md item 4).
     # Each superstep streams register rows (≥ edge count once balls grow)
-    # out of the cache's partitions — size by edge rows at the STATE
+    # out of the edge frame's partitions — size by edge rows at the STATE
     # weight so the contrib map stage keeps real parallelism.
     n = _iter_partitions(edges.sparkSession.sparkContext, m, m)
-    return _pin_for_iteration(edges, n, "dst"), True
+    return iteration_frames(pinned_regime(n_vertices * HLL_M, m), n,
+                            (edges, "dst"))
 
 
 def _init_state(vertices: DataFrame) -> DataFrame:
@@ -127,9 +115,8 @@ def hyperanf_curve(vertices: DataFrame, edges: DataFrame,
     total is a 1-row aggregate of the ≤ Σ min(m, ball) register table;
     the union of iters+1 such rows is driver-sized by definition."""
     state = _init_state(vertices)
-    edges, pinned = _pin_edges(edges, state.count())
     outs = []
-    try:
+    with _iteration_edges(state, edges) as (edges,):
         for k in range(iters + 1):
             if k:
                 state = _superstep(state, edges)
@@ -140,9 +127,6 @@ def hyperanf_curve(vertices: DataFrame, edges: DataFrame,
         # edges are still registered — released any earlier, no
         # superstep would read the pin
         res = reduce(DataFrame.unionByName, outs).localCheckpoint()
-    finally:
-        if pinned:
-            edges.unpersist(False)
     return res
 
 
@@ -159,9 +143,7 @@ def effective_diameter(vertices: DataFrame, edges: DataFrame,
     only the float curve — state stays distributed."""
     curve: list[float] = []
     state = _init_state(vertices)
-    edges, pinned = _pin_edges(edges, state.count())
-
-    try:
+    with _iteration_edges(state, edges) as (edges,):
         curve.append(float(_nf(state).head()["nf"]))
         for _ in range(max_iters):
             # lazy superstep checkpoint: the _nf estimate below is the
@@ -171,9 +153,6 @@ def effective_diameter(vertices: DataFrame, edges: DataFrame,
             curve.append(float(_nf(state).head()["nf"]))
             if curve[-1] <= curve[-2] * (1.0 + growth_tol):
                 break
-    finally:
-        if pinned:
-            edges.unpersist(False)
     target = alpha * curve[-1]
     for k, v in enumerate(curve):
         if v >= target:

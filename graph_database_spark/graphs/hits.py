@@ -7,31 +7,24 @@ ranks products by how much hub-weight buys them, hub ranks customers by
 how authoritative their baskets are — the classic bipartite
 reinforcement (Kleinberg, JACM 1999).
 
-Execution mirrors graphs.pagerank: a driver loop over DataFrames. While
-the score frames fit the broadcast gate, both half-step joins are
-broadcast-hash joins and the edge side streams from ONE row-format
-checkpoint (measured rule 3: a sorted columnar cache pays a per-scan
-decode for partitioning a BHJ never uses). In the big regime the edge
-table is pinned TWICE — hash-partitioned+sorted+cached on src for the
-authority half-step and on dst for the hub half-step
-(`_pin_for_iteration`), so neither half-step re-shuffles or re-sorts
-edges; only the vertex-sized score frames move per iteration,
-merge-pinned aggregates throughout (see _pin_for_iteration's docstring
-for the policy). L1 normalization rides
-along as a 1-row broadcast aggregate (no driver sync); lineage is
-truncated per iteration with localCheckpoint. Fixed iteration count (no
-convergence probe) keeps the whole fixed point replayable by an external
-engine — the same contract as `pagerank(tol=-1)`, giving the DuckDB
-oracle a value-level check.
+Execution mirrors graphs.pagerank: a driver loop over DataFrames with
+the edge table prepared by the regime gate in `graphs.superstep`. In the
+pinned regime the edges are pinned TWICE, on src for the authority
+half-step and on dst for the hub half-step, so neither half-step
+re-shuffles or re-sorts edges; in the checkpoint regime both share one
+checkpoint. L1 normalization rides along as a 1-row broadcast aggregate
+(no driver sync); lineage is truncated per iteration with
+localCheckpoint. Fixed iteration count (no convergence probe) keeps the
+whole fixed point replayable by an external engine — the same contract
+as `pagerank(tol=-1)`, giving the DuckDB oracle a value-level check.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .pagerank import (
-    _BROADCAST_STATE_ROWS, _EDGE_PIN_ROWS, _iter_partitions,
-    _pin_for_iteration, _repartition_checkpoint,
+from .superstep import (
+    _iter_partitions, hint_state, iteration_frames, pinned_regime,
 )
 
 
@@ -72,38 +65,6 @@ def bipartite_hits(edges: DataFrame, max_iter: int = 10,
     n_state = max(hubs.count(), e.select("dst").distinct().count())
     n_parts = num_partitions or _iter_partitions(
         edges.sparkSession.sparkContext, n_state, m)
-    # the AUTHORITY half-step joins edges on src (summing h over
-    # out-edges of each hub lands on dst), the HUB half-step on dst —
-    # one sorted copy per direction in the big regime so neither
-    # half-step ever re-shuffles/re-sorts the edge table (2× cache, the
-    # GraphX-style trade: at scale a second edge cache is far cheaper
-    # than max_iter edge shuffles).
-    # score frames: broadcast under the state gate (measured par with
-    # the pre-r11 hinted shape at sf0.1), merge-pin above it so a
-    # generous session autoBroadcastJoinThreshold can't move a half-step
-    # aggregate onto a driver-blocking broadcast side
-    bcast_state = n_state <= _BROADCAST_STATE_ROWS
-    # Regime gate (measured rule 3 + the _EDGE_PIN_ROWS row bound,
-    # SCALING.md pinned-cache appendix): under the gate the score frames
-    # broadcast, both half-step joins are broadcast-hash joins, and the
-    # edge sides merely STREAM — the row-format checkpoint streams
-    # faster than a sorted columnar cache THERE, but only up to the
-    # measured edge-row bound (per-scan row deserialization is linear in
-    # rows; the sf1 A/B measured the pin 1.21× faster at 7.7M edges), so
-    # both directions share the one checkpoint only while small. Pin per
-    # direction past either gate — in the big regime the caches'
-    # reported partitioning/ordering saves the per-iteration edge
-    # Exchange+Sort.
-    edges_pinned = not (bcast_state and m <= _EDGE_PIN_ROWS)
-    if not edges_pinned:
-        e_src = e_dst = _repartition_checkpoint(e, n_parts)
-    else:
-        e_src = _pin_for_iteration(e, n_parts, "src")
-        e_dst = _pin_for_iteration(e, n_parts, "dst")
-
-    def _b(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if bcast_state else df.hint("merge")
-
     if init_hubs is None:
         h = hubs.withColumn("h", F.lit(1.0)).localCheckpoint()
     else:
@@ -131,10 +92,16 @@ def bipartite_hits(edges: DataFrame, max_iter: int = 10,
                 .select("dst", (F.col("a") / F.col("__t")).alias("a")))
 
     it = -1  # max_iter <= 0 never enters the loop → iteration count 0
-    try:
+    # the AUTHORITY half-step joins edges on src (summing h over
+    # out-edges of each hub lands on dst), the HUB half-step on dst —
+    # one sorted copy per direction in the pinned regime (2× cache, the
+    # GraphX-style trade: at scale a second edge cache is far cheaper
+    # than max_iter edge shuffles)
+    with iteration_frames(pinned_regime(n_state, m), n_parts,
+                          (e, "src"), (e, "dst")) as (e_src, e_dst):
         for it in range(max_iter):
             a = _authorities(h)
-            h_new = (e_dst.join(_b(a), "dst")
+            h_new = (e_dst.join(hint_state(a, n_state), "dst")
                      .groupBy("src").agg(F.sum("a").alias("h")))
             tot_h = h_new.agg(F.sum("h").alias("__t"))
             h_next = (h_new.crossJoin(F.broadcast(tot_h))
@@ -155,14 +122,9 @@ def bipartite_hits(edges: DataFrame, max_iter: int = 10,
             if delta is not None and delta < tol:
                 break
 
-        # the closing half-step still reads the e_src cache — checkpoint
-        # it before releasing the pinned edge copies
+        # the closing half-step still reads the e_src frame — checkpoint
+        # it before the pinned edge copies are released
         a = _authorities(h).localCheckpoint()
-    finally:
-        # finally-scoped: an aborted iteration must not leak the 2 pins
-        if edges_pinned:
-            e_src.unpersist(False)
-            e_dst.unpersist(False)
     out = (
         h.select(F.lit("hub").alias("side"), F.col("src").alias("id"),
                  F.round("h", 6).alias("score"))

@@ -1,0 +1,195 @@
+"""The physical plan of every superstep loop in `graphs/`: partition
+sizing, the regime gate, the state-side hint and the pin's lifetime.
+
+Each loop (PageRank, HITS, BFS, Bellman-Ford, CC, LPA, HyperANF) is the
+Pregel-on-DataFrames shape: a driver loop that joins a vertex-sized
+state frame to a static edge frame once per superstep and truncates the
+state's lineage with `localCheckpoint`. The static frames are prepared
+by REGIME (measured, SCALING.md pinned-cache appendix). While the state
+broadcasts (`state_cells <= _BROADCAST_STATE_ROWS`) each superstep join
+is a broadcast-hash join whose edge side merely streams, so the static
+frames stay ROW-FORMAT checkpoints re-partitioned once to the loop's
+count (`_repartition_checkpoint`): a sorted columnar cache would pay a
+columnar→row decode per scan for partitioning a BHJ never uses (rule 3:
+the checkpoint streams ~15% faster; the r11 unconditional pin regressed
+the driver bench 1.19–1.45× exactly here). Past the state gate, or past
+the measured edge-row bound `_EDGE_PIN_ROWS` even while the state still
+broadcasts, the static frames are hash-partitioned, sorted and CACHED
+once (`_pin_for_iteration`), so each superstep's sort-merge join reads
+them with no Exchange and no Sort and only the vertex-sized state
+shuffles. `pinned_regime` is that gate, `hint_state` the matching hint
+on the state side of a superstep join, and `iteration_frames` prepares
+the static frames and releases every pin when the loop exits, however
+it exits. Per-superstep cost is bounded by the state shuffle plus a
+cached edge scan, which AQE skew-splits for hot vertices. Two loops keep
+a measured exception: LPA always pins, and the landmark pair (BFS,
+Bellman-Ford) streams its up-front checkpoint without the repartition.
+"""
+
+from __future__ import annotations
+
+from contextlib import contextmanager
+from typing import Iterator
+
+from pyspark.sql import DataFrame, functions as F
+
+# Partition sizing for the per-iteration frames: every superstep pays one
+# task per partition per stage, so a 2k-row rank frame on 32 partitions is
+# ~30 near-empty tasks × 3 stages × 50 iterations of pure overhead. Target
+# a healthy rows-per-partition and cap at the cluster's parallelism — on a
+# 1000-executor cluster with billions of edges the cap binds and behavior
+# is unchanged; pass num_partitions explicitly to override.
+#
+# STATE rows drive the count ~20× harder than edge rows: every iteration
+# shuffles/sorts only state-sized frames, while edges are sorted ONCE at
+# pin time and then merely scanned — so edges tolerate much fuller
+# partitions. Measured at sf0.1 (2.39M edges / 20k vertices, local[32]):
+# sizing by max(state, edges)/50k gives n_parts=32 and 0.67–0.87 s per
+# iteration; state-driven sizing gives n_parts=2–3 and 0.36–0.48 s —
+# near-empty state tasks were pure scheduler overhead.
+_ROWS_PER_PARTITION = 50_000
+_EDGE_ROWS_PER_PARTITION = 1_000_000
+
+# Hint-broadcast gate for WIDE or keyed state (the blocked PageRank
+# state, traversal frontiers): state cells (rows × value columns) at or
+# below this get F.broadcast hints in the loop. A 65-column 20k-row
+# PageRank state is ~10.4 MB and falls just past Catalyst's 10 MB
+# auto-broadcast into per-iteration Exchange+Sort of the wide frame —
+# measured 20.3 s (hinted) vs 27–32 s (hint-free) for ppr_fixed20_batch
+# at sf0.1. 5M cells ≈ 40 MB broadcast at the gate's edge; above it the
+# pinned-cache shuffle shape takes over.
+_BROADCAST_STATE_ROWS = 5_000_000
+
+# Upper bound (rows) for the broadcast-regime ROW-FORMAT checkpoint on a
+# frame that streams through every superstep's broadcast-hash join. Rule 3
+# ("checkpoint beats the sorted columnar cache under a BHJ, ~15%") held at
+# every scale it was measured — all sf0.1 loop frames, i.e. up to the
+# 2.39M-row co-occurrence adjacency, on both session classes — but
+# INVERTED at sf1: pagerank_fixed20 (23.9M-row adjacency) and hits_fixed10
+# (7.7M-row purchase bipartite) ran 1.10–1.33× faster with the pinned
+# cache on BOTH session classes (driver-default 0.75/0.83 old-over-new
+# with markers at 0.92–0.97; tuned 0.87/0.91 with markers at 0.93–0.95;
+# interleaved min-of-3 — bench_results/ab/, 2026-08-18). Mechanism: the
+# BHJ streams the big side either way, but a checkpoint pays a per-row
+# deserialization that grows linearly with row count, while the cache's
+# columnar decode amortizes over vectorized batches — a fixed per-scan
+# cost that dominates only on SMALL frames. Boundary = the geometric
+# midpoint of the measured bracket (checkpoint wins ≤ 2.39M, pin wins
+# ≥ 7.7M). Above it, pin even in the broadcast regime; at 100 TB
+# everything pins regardless (the state gate is false). The bound applies
+# to EVERY loop including the wide batch-PPR state: the r12 sf1 A/B
+# contradicted across session classes there (driver-default: pin 1.28×
+# faster; tuned: checkpoint 1.34× faster), and the r13 re-run on a
+# quieter host (markers 0.925–1.008 on both classes) read tuned pin 1.21×
+# faster, past the band, and driver-default par (0.96)
+# (bench_results/ab/ab_batchppr_sf1_r13.json).
+_EDGE_PIN_ROWS = 4_000_000
+
+
+def _iter_partitions(spark_ctx, state_rows: int = 0,
+                     edge_rows: int = 0) -> int:
+    """Partition count for a superstep loop: state rows at
+    _ROWS_PER_PARTITION, edge rows at the much looser
+    _EDGE_ROWS_PER_PARTITION (edges are sorted once and scanned
+    thereafter), capped at the cluster parallelism."""
+    want = max(2,
+               -(-state_rows // _ROWS_PER_PARTITION),
+               -(-edge_rows // _EDGE_ROWS_PER_PARTITION))
+    return min(spark_ctx.defaultParallelism, want)
+
+
+def pinned_regime(state_cells: int, edge_rows: int) -> bool:
+    """The regime gate: True pins the static frames (`_pin_for_iteration`),
+    False checkpoints them. Checkpoint only while BOTH hold — the state
+    broadcasts, so the static side merely streams through a BHJ, and the
+    streamed frame is under the measured `_EDGE_PIN_ROWS` bound."""
+    return (state_cells > _BROADCAST_STATE_ROWS
+            or edge_rows > _EDGE_PIN_ROWS)
+
+
+def hint_state(df: DataFrame, state_cells: int) -> DataFrame:
+    """The hint on the STATE side of a superstep join: broadcast under the
+    state gate; above it, pin to a merge join so a generous session
+    autoBroadcastJoinThreshold can never move an aggregate subplan onto a
+    driver-blocking broadcast side (see _pin_for_iteration)."""
+    if state_cells <= _BROADCAST_STATE_ROWS:
+        return F.broadcast(df)
+    return df.hint("merge")
+
+
+def _pin_for_iteration(df: DataFrame, n_parts: int, *keys: str) -> DataFrame:
+    """Hash-partition, sort, and CACHE a frame that is joined on `keys`
+    every superstep (the edge table; the static personalization frame).
+
+    persist — not localCheckpoint — because an InMemoryTableScan REPORTS
+    the cached plan's outputPartitioning and outputOrdering to the
+    optimizer, so every iteration's sort-merge join reuses the cache with
+    zero Exchange and zero Sort on this side. A checkpointed LogicalRDD
+    does NOT carry partitioning in Spark 4.1 (measured): the old
+    repartition+localCheckpoint shape silently re-shuffled and re-sorted
+    the full edge table under every superstep's join.
+
+    Hint policy for the loops built on this (measured, see the SCALING.md
+    r11 appendix): the STATE side of each superstep join carries a
+    size-gated F.broadcast hint (`hint_state`), and every per-iteration
+    AGGREGATE (contrib / argmax / half-step) is pinned with .hint("merge")
+    so that no session autoBroadcastJoinThreshold can move an aggregation
+    subplan onto a driver-blocking broadcast side — hinted-broadcast
+    aggregates serialized each iteration into sequential broadcast
+    sub-jobs, measured 2–6× slower per iteration depending on host load.
+
+    MEMORY_AND_DISK (persist's default): at cluster scale a 100 TB edge
+    cache spills per-executor and is still far cheaper than one edge
+    shuffle per superstep.
+    """
+    return (df.repartition(n_parts, *keys)
+              .sortWithinPartitions(*keys)
+              .persist())
+
+
+def _repartition_checkpoint(df: DataFrame, n_parts: int) -> DataFrame:
+    """Broadcast-regime static-frame prep: a ROW-FORMAT checkpoint at the
+    loop's partition count. The first checkpoint inherits whatever
+    partitioning the caller's ETL ended on — under AQE's advisory sizes
+    that is often a handful of partitions, which would cap every
+    superstep's streaming scan at that parallelism; and a too-high count
+    (the session shuffle default) pays near-empty-task scheduler overhead
+    per iteration instead. One round-robin shuffle at setup fixes the
+    count for all max_iter scans while staying row-format.
+
+    A frame that already IS a checkpoint at `n_parts` partitions is
+    returned as it is. The partition count is read only off a checkpoint
+    (its RDD is already computed); any other plan is re-partitioned
+    without a probe, since reading its partitions could run it."""
+    logical = df._jdf.queryExecution().logical()
+    if (logical.getClass().getSimpleName() == "LogicalRDD"
+            and logical.rdd().getNumPartitions() == n_parts):
+        return df
+    return df.repartition(n_parts).localCheckpoint()
+
+
+@contextmanager
+def iteration_frames(pinned: bool, n_parts: int,
+                     *frames: tuple[DataFrame, str]
+                     ) -> Iterator[list[DataFrame]]:
+    """Prepare the (frame, join key) pairs a loop re-joins every superstep
+    and yield them in order: pinned on their key (`_pin_for_iteration`)
+    or checkpointed (`_repartition_checkpoint`), where a frame given twice
+    shares one checkpoint. Every pin is unpersisted on exit, also when an
+    iteration raises, so the loop's result must hang off checkpointed
+    state only before the block ends."""
+    prepared: list[DataFrame] = []
+    checkpoints: dict[int, DataFrame] = {}
+    try:
+        for df, key in frames:
+            if pinned:
+                prepared.append(_pin_for_iteration(df, n_parts, key))
+            else:
+                if id(df) not in checkpoints:
+                    checkpoints[id(df)] = _repartition_checkpoint(df, n_parts)
+                prepared.append(checkpoints[id(df)])
+        yield prepared
+    finally:
+        if pinned:
+            for df in prepared:
+                df.unpersist(False)

@@ -8,29 +8,36 @@ truncated with localCheckpoint — the same Pregel-on-DataFrames shape as
 graphs.pagerank.
 
 Scale notes: each superstep shuffles the frontier (BFS) or the full label
-set (CC) against the edge table, prepared by REGIME (measured rule 3,
-SCALING.md pinned-cache appendix): a row-format checkpoint re-partitioned
-once to the loop count while the state side broadcasts (the edge side
-merely streams through a BHJ there), a hash-partitioned sorted cache
-(`_pin_for_iteration` — cached scans keep partitioning/ordering,
-checkpoints do not) in the big regime, so per-superstep movement is
-state-sized. Keyed frontiers carry a size-gated broadcast hint and every
-per-superstep aggregate is merge-pinned (see _pin_for_iteration's
-docstring for the measured policy). BFS work is proportional to the
-expanding frontier; CC label propagation converges in O(diameter)
-supersteps (the driver testdata co-occurrence graphs have tiny diameters;
-for pathological chains `connected_components_star` below is the
-O(log n)-round alternative).
+set (CC) against the edge table, which `graphs.superstep` prepares by
+regime, so per-superstep movement is state-sized. Keyed frontiers carry
+the state-side hint and every per-superstep aggregate is merge-pinned
+(see superstep._pin_for_iteration for the measured policy). BFS work is
+proportional to the expanding frontier; CC label propagation converges
+in O(diameter) supersteps (the driver testdata co-occurrence graphs have
+tiny diameters; for pathological chains `connected_components_star`
+below is the O(log n)-round alternative).
 """
 
 from __future__ import annotations
 
+from contextlib import nullcontext
+
 from pyspark.sql import DataFrame, functions as F
 
-from .pagerank import (
-    _BROADCAST_STATE_ROWS, _EDGE_PIN_ROWS, _iter_partitions,
-    _pin_for_iteration, _prep_iter_edges, _repartition_checkpoint,
+from .superstep import (
+    _iter_partitions, hint_state, iteration_frames, pinned_regime,
 )
+
+
+def _landmark_edges(edges: DataFrame, cells: int, m: int, n_parts: int):
+    """`superstep.iteration_frames` for the landmark pair's edges, except
+    that the checkpoint regime streams the up-front checkpoint as it is:
+    with the one-time repartition the other loops do, both queries ran
+    0.84-1.03× old-over-new in sf0.01 A/Bs, below the noise markers on
+    the tuned session, and each run started two more jobs."""
+    if pinned_regime(cells, m):
+        return iteration_frames(True, n_parts, (edges, "src"))
+    return nullcontext([edges])
 
 
 def shortest_paths(edges: DataFrame, landmarks: DataFrame,
@@ -51,47 +58,30 @@ def shortest_paths(edges: DataFrame, landmarks: DataFrame,
     edges = edges.localCheckpoint()
     m = edges.count()
     # KEYED (id, landmark) state — the class where the measured gated
-    # hint beats stats-driven planning (see _BROADCAST_STATE_ROWS). In
-    # the broadcast regime the EDGE side streams through every hop's
-    # hash join, and a row-format checkpoint streams faster than the
-    # sorted columnar cache (whose per-scan decode measured ~15% on the
-    # SSSP twin at sf0.1) — so only the big regime pins, where the
-    # cache's reported partitioning is what saves the per-round edge
-    # shuffle+sort under the sort-merge join.
+    # hint beats stats-driven planning (superstep._BROADCAST_STATE_ROWS),
+    # so the gate counts (vertex, landmark) cells
     n_landmarks = landmarks.count()
     nv = (edges.select(F.col("src").alias("v"))
           .unionByName(edges.select(F.col("dst").alias("v")))
           .distinct().count())
-    bcast_state = nv * max(1, n_landmarks) <= _BROADCAST_STATE_ROWS
-    # pin past the broadcast regime OR past the measured edge-row bound
-    # (the checkpoint's per-row deserialization is linear in rows — the
-    # sf1-measured inversion on the pagerank-family loops; same
-    # streamed-BHJ shape here)
-    edges_pinned = not (bcast_state and m <= _EDGE_PIN_ROWS)
-    if edges_pinned:
-        # per-hop join emits up to |E|·|landmarks| expansion rows out of
-        # the cache's partitions — size by that work product
-        n_parts = num_partitions or _iter_partitions(
-            edges.sparkSession.sparkContext, m * max(1, n_landmarks), m)
-        edges = _pin_for_iteration(edges, n_parts, "src")
-
-    def _b(df: DataFrame) -> DataFrame:
-        # big regime: pin to a merge join so a generous session
-        # autoBroadcastJoinThreshold can never move an aggregate subplan
-        # onto a driver-blocking broadcast side (see _pin_for_iteration)
-        return F.broadcast(df) if bcast_state else df.hint("merge")
+    cells = nv * max(1, n_landmarks)
+    # per-hop join emits up to |E|·|landmarks| expansion rows out of
+    # the edge frame's partitions — size by that work product
+    n_parts = num_partitions or _iter_partitions(
+        edges.sparkSession.sparkContext, m * max(1, n_landmarks), m)
 
     dist = landmarks.select(
         F.col("id"), F.col("id").alias("landmark"),
         F.lit(0).alias("dist")).localCheckpoint()
     frontier = dist
 
-    try:
+    with _landmark_edges(edges, cells, m, n_parts) as (edges,):
         for hop in range(1, max_hops + 1):
             # expand: neighbors of the frontier not yet seen for that
             # landmark
             expanded = (
-                edges.join(_b(frontier), frontier["id"] == edges["src"])
+                edges.join(hint_state(frontier, cells),
+                           frontier["id"] == edges["src"])
                 .select(F.col("dst").alias("id"), "landmark",
                         F.lit(hop).alias("dist"))
                 .distinct()
@@ -104,11 +94,6 @@ def shortest_paths(edges: DataFrame, landmarks: DataFrame,
                 break
             dist = dist.unionByName(new_frontier).localCheckpoint()
             frontier = new_frontier
-    finally:
-        # finally-scoped like pagerank/HITS/CC: an exception mid-loop
-        # (e.g. during the isEmpty probe) must not leak the pinned cache
-        if edges_pinned:
-            edges.unpersist(False)
     return dist
 
 
@@ -148,23 +133,12 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
         sym = sym.distinct()
     sym = sym.localCheckpoint()
     m = sym.count()
-    # labels / neighbor_min are |V|-sized — state sizing uses the vertex
-    # count; the symmetrized edge count enters at the looser edge weight
+    # labels / neighbor_min are |V|-sized — state sizing and the regime
+    # gate use the vertex count; the symmetrized edge count enters at the
+    # looser edge weight
     nv = vertices.count()
     n_parts = num_partitions or _iter_partitions(
         edges.sparkSession.sparkContext, nv, m)
-    # Regime gate (measured rule 3 + the _EDGE_PIN_ROWS row bound —
-    # pagerank.py:_prep_iter_edges): while the label state broadcasts
-    # AND the symmetrized edge list stays under the measured row bound,
-    # each superstep's propagation join streams the edge side through a
-    # BHJ — keep the row-format checkpoint (re-partitioned once to the
-    # loop count); pin past either gate (the merge-pinned neighbor_min
-    # aggregate makes the cache's partitioning load-bearing in the big
-    # regime; past the row bound the checkpoint's per-row
-    # deserialization outgrows the cache decode — the sf1-measured
-    # inversion on the pagerank-family loops, same streamed-join shape).
-    bcast_state = nv <= _BROADCAST_STATE_ROWS
-    sym, sym_pinned = _prep_iter_edges(sym, n_parts, bcast_state, m, "src")
 
     if init_labels is None:
         labels = vertices.select("id", F.col("id").alias("component")) \
@@ -191,7 +165,8 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
         ).first()["s"]
 
     prev_sum = _label_sum(labels) if numeric_ids else None
-    try:
+    with iteration_frames(pinned_regime(nv, m), n_parts,
+                          (sym, "src")) as (sym,):
         for _ in range(max_iter):
             neighbor_min = (
                 sym.join(labels, labels["id"] == sym["src"])
@@ -199,8 +174,8 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
                 .agg(F.min("component").alias("n_comp"))
             )
             new_labels = (
-                # merge-pin the aggregate side: see _pin_for_iteration's
-                # hint policy
+                # merge-pin the aggregate side: see the hint policy in
+                # superstep._pin_for_iteration
                 labels.join(neighbor_min.hint("merge"), "id", "left")
                 .select("id", F.least(
                     F.col("component"),
@@ -222,9 +197,6 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
             labels = new_labels
             if unchanged:
                 break
-    finally:
-        if sym_pinned:
-            sym.unpersist(False)
     return labels
 
 
@@ -269,27 +241,16 @@ def weighted_shortest_paths(edges: DataFrame, landmarks: DataFrame,
     """
     edges = edges.select("src", "dst", "weight").localCheckpoint()
     m = edges.count()
-    # same regime split as shortest_paths: broadcast regime streams the
-    # row-format checkpoint (measured faster than the columnar cache);
-    # big regime pins, sized by the |E|·|landmarks| relax work product
+    # same keyed state and sizing as shortest_paths: the gate counts
+    # (vertex, landmark) cells, partitions follow the |E|·|landmarks|
+    # relax work product
     n_landmarks = landmarks.count()
     nv = (edges.select(F.col("src").alias("v"))
           .unionByName(edges.select(F.col("dst").alias("v")))
           .distinct().count())
-    bcast_state = nv * max(1, n_landmarks) <= _BROADCAST_STATE_ROWS
-    # same two-condition gate as shortest_paths (rule 3 + the measured
-    # _EDGE_PIN_ROWS bound)
-    edges_pinned = not (bcast_state and m <= _EDGE_PIN_ROWS)
-    if edges_pinned:
-        n_parts = num_partitions or _iter_partitions(
-            edges.sparkSession.sparkContext, m * max(1, n_landmarks), m)
-        edges = _pin_for_iteration(edges, n_parts, "src")
-
-    def _b(df: DataFrame) -> DataFrame:
-        # big regime: pin to a merge join so a generous session
-        # autoBroadcastJoinThreshold can never move an aggregate subplan
-        # onto a driver-blocking broadcast side (see _pin_for_iteration)
-        return F.broadcast(df) if bcast_state else df.hint("merge")
+    cells = nv * max(1, n_landmarks)
+    n_parts = num_partitions or _iter_partitions(
+        edges.sparkSession.sparkContext, m * max(1, n_landmarks), m)
 
     zero = landmarks.select(
         F.col("id"), F.col("id").alias("landmark"),
@@ -307,10 +268,11 @@ def weighted_shortest_paths(edges: DataFrame, landmarks: DataFrame,
                 .localCheckpoint())
 
     done = 0
-    try:
+    with _landmark_edges(edges, cells, m, n_parts) as (edges,):
         for done in range(1, rounds + 1):
             relaxed = (
-                edges.join(_b(dist), dist["id"] == edges["src"])
+                edges.join(hint_state(dist, cells),
+                           dist["id"] == edges["src"])
                 .select(F.col("dst").alias("id"), "landmark",
                         (F.col("dist") + F.col("weight")).alias("dist"))
             )
@@ -332,11 +294,6 @@ def weighted_shortest_paths(edges: DataFrame, landmarks: DataFrame,
                     break
             else:
                 dist = new_dist
-    finally:
-        # finally-scoped like pagerank/HITS/CC (ADVICE r12): a mid-loop
-        # exception must not leak the pinned cache
-        if edges_pinned:
-            edges.unpersist(False)
     if with_rounds:
         return dist, done
     return dist
@@ -501,16 +458,6 @@ def label_propagation(vertices: DataFrame, edges: DataFrame,
     nv = vertices.count()
     n_parts = num_partitions or _iter_partitions(
         edges.sparkSession.sparkContext, nv, m)
-    # LPA keeps the UNCONDITIONAL pin — measured exception to the regime
-    # gate (r12 A/B: gated 0.86×, consistent across rounds, while CC
-    # gated measured 1.08×): the symmetrized 2-col long edge list decodes
-    # trivially from the columnar cache, so rule 3's per-scan decode
-    # premium doesn't materialize, and LPA's FIXED 10 supersteps rescan
-    # the list enough times that scan cost dominates the setup sort the
-    # checkpoint saves; CC converges in ~diameter (2-4) supersteps on the
-    # co-occurrence graphs, so its setup dominates and the gate wins.
-    sym = _pin_for_iteration(sym, n_parts, "src")
-
     if init_labels is None:
         labels = vertices.select("id", F.col("id").alias("community"))
     else:
@@ -523,7 +470,15 @@ def label_propagation(vertices: DataFrame, edges: DataFrame,
     w = (Window.partitionBy("id")
          .orderBy(F.desc("cnt"), F.asc("community")))
     it = -1  # max_iter <= 0 never enters the loop → superstep count 0
-    try:
+    # LPA keeps the UNCONDITIONAL pin — measured exception to the regime
+    # gate (r12 A/B: gated 0.86×, consistent across rounds, while CC
+    # gated measured 1.08×): the symmetrized 2-col long edge list decodes
+    # trivially from the columnar cache, so rule 3's per-scan decode
+    # premium doesn't materialize, and LPA's FIXED 10 supersteps rescan
+    # the list enough times that scan cost dominates the setup sort the
+    # checkpoint saves; CC converges in ~diameter (2-4) supersteps on the
+    # co-occurrence graphs, so its setup dominates and the gate wins.
+    with iteration_frames(True, n_parts, (sym, "src")) as (sym,):
         for it in range(max_iter):
             hist = (
                 sym.join(labels, labels["id"] == sym["src"])
@@ -535,8 +490,8 @@ def label_propagation(vertices: DataFrame, edges: DataFrame,
                       .filter("__rn = 1")
                       .select("id", F.col("community").alias("n_comm")))
             updated = (
-                # merge-pin the argmax side: see _pin_for_iteration's
-                # hint policy
+                # merge-pin the argmax side: see the hint policy in
+                # superstep._pin_for_iteration
                 labels.join(winner.hint("merge"), "id", "left")
                 .select("id",
                         F.coalesce(F.col("n_comm"), F.col("community"))
@@ -551,8 +506,6 @@ def label_propagation(vertices: DataFrame, edges: DataFrame,
             labels = updated.drop("__chg")
             if stable:
                 break
-    finally:
-        sym.unpersist(False)
     if with_iterations:
         return labels, it + 1
     return labels

@@ -25,7 +25,7 @@ from .dedup import md5_long, word_shingles
 from .util import spread
 
 # Measured-count gate for dimension-sized frames this module sorts in
-# one task and broadcasts (matches graphs.pagerank._BROADCAST_STATE_ROWS).
+# one task and broadcasts (matches graphs.superstep._BROADCAST_STATE_ROWS).
 _CATALOG_MAX_ROWS = 5_000_000
 
 #: hash-space denominator for rate thresholds — rates are exact to 1e-6

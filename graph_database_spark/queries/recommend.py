@@ -19,7 +19,7 @@ from ..operators.similarity import (
     seed_expansion_scores_from_items, user_cf_scores,
 )
 from ..operators.topk import top_k_per_group
-from ..graphs.pagerank import _BROADCAST_STATE_ROWS, _ROWS_PER_PARTITION \
+from ..graphs.superstep import _BROADCAST_STATE_ROWS, _ROWS_PER_PARTITION \
     as _REC_ROWS_PER_PARTITION
 from ._shared import register, _items, _order_customer_pairs, _SQL_ITEMS, _SQL_INC
 

@@ -16,9 +16,10 @@ and the order lines, collected once at build, each up to
 slice rankings counted at build, and per-customer `similarity` runs a
 numpy kernel over the incidence codes, so none of these requests runs a
 Spark job; `pagerank_exact` runs PageRank once, on first use, and slices
-the kept ranking. All reflect the tables as of service build. The one
-fallback, when a collect is over the bound or has a null or non-string
-key, is a Spark plan per request. Both `/customers` routes still run
+the kept ranking, with or without the index. All reflect the tables as
+of service build. The one fallback for the other strategies, when a
+collect is over the bound or has a null or non-string key, is a Spark
+plan per request. Both `/customers` routes still run
 Spark plans per request: a demo/test surface, not the 100 TB path, where
 serving would precompute `recommend_batch` into a key-value store. The
 shim exists so a user of the reference can port their curl calls

@@ -182,11 +182,12 @@ class RecommendationService:
     a customer and the `pagerank` stub slice a ranking counted at build;
     per-customer `similarity` runs a numpy kernel, the 3-hop filter, over
     the incidence codes. None of these runs a Spark job. `pagerank_exact`
-    runs its Spark plan once, on first use, and slices the kept ranking.
+    runs its Spark plan once, on first use, keeps the whole ranking
+    (|products| rows) and slices it, with or without an index.
 
     The one fallback is the per-request Spark plan (`_ranked`), which
-    answers every request when there is no index (a collect over the
-    bound, a null key or a key that is not a string) and per-customer
+    answers every other request when there is no index (a collect over
+    the bound, a null key or a key that is not a string) and per-customer
     `similarity` for a customer_id that is not a string. Like the cached
     incidence, every answer reflects the tables as of service build.
     """
@@ -209,6 +210,8 @@ class RecommendationService:
         # [1,10] clamp belongs to tp1's top_n only (clamp_top_n); here we
         # just refuse negatives, as Cypher's LIMIT would
         limit = max(0, limit)
+        if strategy == "pagerank_exact":
+            return self._pagerank_exact()[:limit]
         index = self._index
         if index is not None:
             if strategy == "similarity" and customer_id is not None:
@@ -216,8 +219,6 @@ class RecommendationService:
                     return index.user_cf(customer_id, limit)
             elif strategy in index.ranked:
                 return index.top(strategy, limit)
-            elif strategy == "pagerank_exact":
-                return self._pagerank_exact()[:limit]
         return self._ranked(strategy, customer_id, limit).collect()
 
     def _pagerank_exact(self) -> list[Row]:
@@ -249,8 +250,6 @@ class RecommendationService:
             return (order_frequency(self.items)
                     .orderBy(F.desc("order_count"), F.asc("product_id"))
                     .limit(limit))
-        if strategy == "pagerank_exact":
-            return self._pagerank_exact_plan().limit(limit)
         raise UnknownStrategyError(
             f"Unknown strategy: {strategy!r}; expected one of {VALID_STRATEGIES}")
 

@@ -1,7 +1,8 @@
 #!/usr/bin/env python
-"""Interleaved same-process A/B: r11 unconditional edge pins vs the r12
-regime-gated shape, on a DRIVER-DEFAULT session (10 MB auto-broadcast,
-default shuffle partitions, no bench-only tuning) — r11 verdict item #1.
+"""Interleaved same-process A/B of the superstep-loop modules in
+graphs/: the files at a git ref against the working tree, on a
+DRIVER-DEFAULT session (10 MB auto-broadcast, default shuffle partitions,
+no bench-only tuning) or, with AB_SESSION=tuned, on session.get_spark().
 
 Methodology (the repo's measured pitfall list, .claude/skills/verify):
 separate bench processes drift 1.6-2.5x on this rig and have inverted
@@ -10,8 +11,15 @@ via sys.modules (the query functions import the graph modules lazily,
 so each pass resolves whichever module object is installed). Report the
 per-variant MIN per query.
 
+Each variant loads only the AB_MODULES that exist at its ref, in list
+order, so a module new in the working tree (superstep) is swapped in
+first on the new side and absent on the old side, whose modules import
+what they need from each other.
+
 Usage: python scripts/ab_gated_pins.py [OLD_REF] [ROUNDS]
   OLD_REF: git ref holding the old graphs/ files (default HEAD)
+  SPARK_GRAFT_SF_DIR: testdata directory (default /root/testdata/sf0.1)
+  SPARK_GRAFT_DRIVER_MEM: driver heap (default half the host's RAM)
 """
 
 from __future__ import annotations
@@ -21,6 +29,7 @@ import json
 import os
 import subprocess
 import sys
+import tempfile
 import time
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -30,38 +39,48 @@ QUERIES_UNDER_TEST = os.environ.get(
     "AB_QUERIES",
     "pagerank_fixed20,ppr_fixed20_batch,ppr_batch_focal,hits_fixed10,"
     "graph_hyperanf_nf,graph_hyperanf_diameter,pagerank_global,"
-    "connected_components_star").split(",")
+    "connected_components_star,connected_components,"
+    "shortest_paths_landmark,sssp_weighted_fixed8,"
+    "graph_lpa_communities").split(",")
 SWAPPED_MODULES = os.environ.get(
-    "AB_MODULES", "pagerank,hits,anf").split(",")
+    "AB_MODULES", "superstep,pagerank,hits,traversal,anf").split(",")
+
+
+def _half_of_physical_ram() -> str:
+    """Half the host's RAM as a driver heap size, as tests/conftest.py
+    sizes it: a larger heap than the host holds makes the JVM thrash."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, total // 2 // 2**30)}g"
 
 
 def _load_variant(ref: str, tag: str) -> dict[str, object]:
-    """Materialize the graphs submodules from a git ref as importable
-    module objects carrying the real package names (so their relative
-    imports resolve against the live package)."""
+    """Materialize the graphs submodules that exist at a git ref as
+    importable module objects carrying the real package names (so their
+    relative imports resolve against the live package)."""
     mods: dict[str, object] = {}
-    vdir = f"/tmp/ab_{tag}"
-    os.makedirs(vdir, exist_ok=True)
+    sources = {}
     for name in SWAPPED_MODULES:
-        src = subprocess.run(
+        shown = subprocess.run(
             ["git", "-C", HERE, "show",
              f"{ref}:graph_database_spark/graphs/{name}.py"],
-            capture_output=True, text=True, check=True).stdout
-        path = os.path.join(vdir, f"{name}.py")
-        with open(path, "w") as fh:
-            fh.write(src)
+            capture_output=True, text=True)
+        if shown.returncode == 0:
+            sources[name] = shown.stdout
     # load in dependency order; each load sees prior loads via sys.modules
     saved = {n: sys.modules.get(f"graph_database_spark.graphs.{n}")
-             for n in SWAPPED_MODULES}
+             for n in sources}
     try:
-        for name in SWAPPED_MODULES:
-            fq = f"graph_database_spark.graphs.{name}"
-            spec = importlib.util.spec_from_file_location(
-                fq, os.path.join(vdir, f"{name}.py"))
-            mod = importlib.util.module_from_spec(spec)
-            sys.modules[fq] = mod
-            spec.loader.exec_module(mod)
-            mods[name] = mod
+        with tempfile.TemporaryDirectory(prefix=f"ab_{tag}_") as vdir:
+            for name, src in sources.items():
+                path = os.path.join(vdir, f"{name}.py")
+                with open(path, "w") as fh:
+                    fh.write(src)
+                fq = f"graph_database_spark.graphs.{name}"
+                spec = importlib.util.spec_from_file_location(fq, path)
+                mod = importlib.util.module_from_spec(spec)
+                sys.modules[fq] = mod
+                spec.loader.exec_module(mod)
+                mods[name] = mod
     finally:
         for n, m in saved.items():
             if m is not None:
@@ -80,6 +99,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     session_kind = os.environ.get("AB_SESSION", "driver-default")
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", _half_of_physical_ram())
     from pyspark.sql import SparkSession
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if session_kind == "tuned":
@@ -90,7 +110,7 @@ def main() -> None:
                  .appName("ab-gated-pins")
                  .config("spark.sql.session.timeZone", "UTC")
                  .config("spark.driver.memory",
-                         os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+                         os.environ["SPARK_GRAFT_DRIVER_MEM"])
                  .config("spark.ui.enabled", "false")
                  .getOrCreate())
         assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") \

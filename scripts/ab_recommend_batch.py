@@ -68,7 +68,7 @@ def _inputs(spark, sf_dir):
 
 
 def q_old(spark, sf_dir) -> DataFrame:
-    from graph_database_spark.graphs.pagerank import _BROADCAST_STATE_ROWS
+    from graph_database_spark.graphs.superstep import _BROADCAST_STATE_ROWS
     from graph_database_spark.operators.topk import top_k_per_group
     cooc_top, inc = _inputs(spark, sf_dir)
     inc_small = inc.count() <= _BROADCAST_STATE_ROWS
@@ -83,8 +83,8 @@ def q_old(spark, sf_dir) -> DataFrame:
 
 
 def q_new(spark, sf_dir) -> DataFrame:
-    from graph_database_spark.graphs.pagerank import (_BROADCAST_STATE_ROWS,
-                                                      _ROWS_PER_PARTITION)
+    from graph_database_spark.graphs.superstep import (_BROADCAST_STATE_ROWS,
+                                                       _ROWS_PER_PARTITION)
     from graph_database_spark.operators.topk import top_k_per_group
     cooc_top, inc = _inputs(spark, sf_dir)
     n_inc = inc.count()

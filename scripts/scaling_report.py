@@ -321,8 +321,8 @@ HyperANF stays PINNED by measurement, not prescription: its register
 state carries no broadcast hint and saturates toward |V|·m rows — 47M
 cells at the sf0.1 purchase graph (185k vertices × 256 registers), far
 past any session threshold — so the superstep join runs sort-merge for
-most of the run and the pin's partitioning is load-bearing. The gate in
-`anf._pin_edges` uses that saturation bound (|V|·m vs the 5M-cell
+most of the run and the pin's partitioning is load-bearing. ANF's call
+of the gate (`graphs/superstep.py`) uses that saturation bound (|V|·m vs the 5M-cell
 gate), so both r12 A/B variants executed identical ANF plans at sf0.1;
 the nf/diameter swings above are pure host noise.
 
@@ -361,7 +361,7 @@ while the pinned cache's columnar decode amortizes over vectorized
 batches — a fixed per-scan cost that dominates only on small frames.
 
 The gate therefore gained a second condition (`_EDGE_PIN_ROWS = 4M`,
-pagerank.py): checkpoint only while the state broadcasts AND the
+now in `graphs/superstep.py` with the rest of the gate): checkpoint only while the state broadcasts AND the
 streamed frame stays under the measured row bound — the geometric
 midpoint of the bracket (checkpoint wins <= 2.39M rows, pin wins >=
 7.7M). Every sf0.1 loop frame measures below the bound (cooc adjacency
@@ -388,7 +388,9 @@ applies to batch PPR too, on the same measured 4M bracket as every
 other loop; no sf0.1 plan changes, since every sf0.1 loop frame is
 under the bound. Since then a single PageRank loop
 (`_pagerank_batch_blocked`) serves `pagerank()` and every
-`pagerank_batch` size, so the gate lives in one place.
+`pagerank_batch` size. Every superstep loop (PageRank, HITS, BFS,
+Bellman-Ford, CC, LPA, HyperANF) now takes its gate, its state-side
+hint and its pin lifetime from `graphs/superstep.py`.
 
 #### The earlier null attempt (kept for method history)
 

@@ -1,26 +1,30 @@
-"""Cache hygiene of the iterative graph loops and the registry's batch
-recommendation jobs.
+"""Cache hygiene, answers and plans of the iterative graph loops in both
+regimes, and cache hygiene of the registry's batch recommendation jobs.
 
 After a loop's result is collected, the session must hold no new cached
 plan, and every RDD the run left persisted must be a `localCheckpoint`
 (a lineage cut) — never a pinned edge or personalization cache the loop
-forgot to release. Each entry point runs at the default pin bound and
-again with `_EDGE_PIN_ROWS` forced to -1 in every module that imports
-it, which puts every loop on its pinned-cache branch (the test checks
-that something was pinned there). The registry jobs outside `graphs/`
-run once each on the smoke testdata.
+forgot to release. Each entry point runs at the default pin bound, where
+only label propagation pins (its measured exception to the gate), and,
+in the `pinned` case, then again with `superstep._EDGE_PIN_ROWS` forced
+to -1, which puts every loop on its pinned-cache branch. The regime
+changes how the static frames are stored, never the arithmetic: both
+runs collect the same answer, and each run starts exactly the Spark jobs
+recorded in JOBS. The registry jobs outside `graphs/` run once each on
+the smoke testdata.
 """
 
 from __future__ import annotations
 
+import itertools
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
-from graph_database_spark.graphs import anf, hits, traversal
+from graph_database_spark.graphs import anf, hits, superstep, traversal
 from graph_database_spark.graphs import pagerank as pr
 from graph_database_spark.registry import QUERIES
-
-_PIN_MODULES = (pr, traversal, hits, anf)
 
 
 def _ppr(n_keys):
@@ -56,11 +60,32 @@ ENTRIES = {
         v, e.select("src", "dst"), max_iters=3),
 }
 
+# Spark jobs per run, (default regime, forced pin), on the `graph`
+# fixture. A changed count is a changed physical plan.
+JOBS = {
+    "pagerank": (63, 63),
+    "pagerank_batch_1": (66, 66),
+    "pagerank_batch_3": (68, 68),
+    "pagerank_batch_65": (129, 129),
+    "bipartite_hits": (76, 104),
+    "shortest_paths": (39, 41),
+    "weighted_shortest_paths": (19, 21),
+    "connected_components": (39, 36),
+    "label_propagation": (25, 25),
+    "hyperanf_curve": (22, 20),
+    "effective_diameter": (30, 26),
+}
+# bipartite_hits' count moves between runs of the same code: AQE runs
+# one of its stages either as a job of its own or inside the next job,
+# by timing (ten runs of each regime read 75-78 and 102-105)
+JOB_SLACK = {"bipartite_hits": 2}
+
 
 @pytest.fixture(scope="module")
 def graph(spark):
     """12 vertices: a cycle over 0..9 with chords, 10 and 11 sinks;
-    weights row-normalized per src."""
+    weights row-normalized per src. Partition counts are fixed, so the
+    job counts do not depend on the session's parallelism."""
     pairs = ([(i, (i + 1) % 10) for i in range(10)]
              + [(i, (i + 4) % 10) for i in range(0, 10, 3)]
              + [(2, 10), (7, 11)])
@@ -68,9 +93,9 @@ def graph(spark):
     deg = df.groupBy("src").agg(F.count(F.lit(1)).alias("__d"))
     edges = df.join(deg, "src").select(
         "src", "dst", (F.lit(1.0) / F.col("__d")).alias("weight")
-    ).localCheckpoint()
+    ).repartition(4).localCheckpoint()
     landmarks = spark.createDataFrame([(0,), (5,)], "id long")
-    return spark.range(12).select("id"), edges, landmarks
+    return spark.range(0, 12, 1, 4).select("id"), edges, landmarks
 
 
 @pytest.mark.parametrize("forced_pin", [False, True],
@@ -79,19 +104,30 @@ def graph(spark):
 def test_iterative_loop_leaves_no_cache(spark, monkeypatch, graph, entry,
                                         forced_pin):
     pins = []
-    for mod in _PIN_MODULES:
-        if forced_pin:
-            monkeypatch.setattr(mod, "_EDGE_PIN_ROWS", -1)
 
-        def counted(*a, _pin=mod._pin_for_iteration):
-            pins.append(a[0])
-            return _pin(*a)
-        monkeypatch.setattr(mod, "_pin_for_iteration", counted)
+    def counted(*a, _pin=superstep._pin_for_iteration):
+        pins.append(a[0])
+        return _pin(*a)
+    monkeypatch.setattr(superstep, "_pin_for_iteration", counted)
     v, e, landmarks = graph
-    _assert_leaves_no_cache(spark,
-                            lambda: ENTRIES[entry](spark, v, e, landmarks))
+
+    def run(regime: int):
+        pins.clear()
+        with _job_group(spark) as jobs:
+            answer = _assert_leaves_no_cache(
+                spark, lambda: ENTRIES[entry](spark, v, e, landmarks))
+            n_jobs = len(jobs())
+        want, slack = JOBS[entry][regime], JOB_SLACK.get(entry, 0)
+        assert abs(n_jobs - want) <= slack, (regime, n_jobs, want)
+        return answer
+
+    default = run(0)
+    assert bool(pins) == (entry == "label_propagation"), pins
     if forced_pin:
+        monkeypatch.setattr(superstep, "_EDGE_PIN_ROWS", -1)
+        forced = run(1)
         assert pins, "the forced regime pinned nothing"
+        _assert_same_answer(_canonical(default), _canonical(forced))
 
 
 REGISTRY_JOBS = ("recommend_batch", "similarity_jaccard_topk",
@@ -104,15 +140,15 @@ def test_registry_job_leaves_no_cache(spark, sf_smoke, name):
         spark, lambda: QUERIES[name](spark, sf_smoke).collect())
 
 
-def _assert_leaves_no_cache(spark, run) -> None:
+def _assert_leaves_no_cache(spark, run):
     """`run()` adds no cacheManager entry and leaves only
-    `localCheckpoint` RDDs newly persisted."""
+    `localCheckpoint` RDDs newly persisted; returns what it returned."""
     cache = spark._jsparkSession.sharedState().cacheManager()
     jsc = spark.sparkContext._jsc
     cached_before = cache.numCachedEntries()
     rdds_before = set(jsc.getPersistentRDDs().keySet().toArray())
 
-    run()
+    result = run()
 
     assert cache.numCachedEntries() == cached_before
     persisted = jsc.getPersistentRDDs()
@@ -121,3 +157,42 @@ def _assert_leaves_no_cache(spark, run) -> None:
               if i not in rdds_before
               and not persisted.get(i).rdd().isLocallyCheckpointed()]
     assert not leaked, leaked
+    return result
+
+
+_groups = itertools.count()
+
+
+@contextmanager
+def _job_group(spark):
+    """Run the block under a fresh job group; yields a callable returning
+    the ids of the Spark jobs the block started."""
+    sc = spark.sparkContext
+    group = f"hygiene-{next(_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        yield lambda: sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def _canonical(answer):
+    """Collected rows as tuples in a fixed order (no loop promises a row
+    order); effective_diameter's (diameter, curve) stays as it is."""
+    if isinstance(answer, tuple):
+        return answer
+    return sorted((tuple(r) for r in answer), key=lambda t: tuple(
+        round(x, 9) if isinstance(x, float) else x for x in t))
+
+
+def _assert_same_answer(a, b) -> None:
+    """Equal, with floats allowed to differ by 1e-12."""
+    if isinstance(a, float) and isinstance(b, float):
+        assert b == pytest.approx(a, abs=1e-12, rel=0)
+    elif isinstance(a, (list, tuple)) and isinstance(b, (list, tuple)):
+        assert len(a) == len(b), (a, b)
+        for x, y in zip(a, b):
+            _assert_same_answer(x, y)
+    else:
+        assert a == b

@@ -149,8 +149,9 @@ def _concurrent_recs_match_answers_sent_alone(base):
             for strategy in ("co_occurrence", "similarity", "pagerank")
             for customer in (None, "C1", "C2")
             for limit in (0, 1, 2, 3, 4)]
-    # pagerank_exact runs a whole PageRank loop per request on the Spark
-    # path, so the seeded mix sends it twice, beside the cheaper strategies
+    # pagerank_exact runs a whole PageRank loop on its first request, on
+    # either path, and slices the kept ranking after that; the seeded mix
+    # sends it twice, beside the cheaper strategies
     mix = ([("pagerank_exact", None, 3), ("pagerank_exact", "C2", 2)]
            + rng.sample(pool, 30))
     # every strategy with and without a customer, and every limit

@@ -248,10 +248,9 @@ def test_hits_zero_iterations(spark):
 
 
 def test_pinned_edge_cache_joins_without_edge_exchange_or_sort(spark):
-    """_pin_for_iteration's contract — the mechanism every iterative
-    loop (pagerank / batch PPR / HITS) now rests on. This replaces the
-    old `_BROADCAST_STATE_ROWS` gate regression (VERDICT r5 #3): the r11
-    shape has no explicit gate at all.
+    """_pin_for_iteration's contract — the mechanism the pinned regime of
+    every superstep loop rests on. (The regime gate itself,
+    `superstep.pinned_regime`, is tested below.)
 
     (a) Small state: a checkpointed state frame carries size stats, so
         Catalyst broadcasts it into the pinned edge cache on its own —
@@ -268,7 +267,7 @@ def test_pinned_edge_cache_joins_without_edge_exchange_or_sort(spark):
 
     from pyspark.sql import functions as F
 
-    from graph_database_spark.graphs.pagerank import _pin_for_iteration
+    from graph_database_spark.graphs.superstep import _pin_for_iteration
 
     edges = spark.createDataFrame(
         [(i % 97, i % 53, 1.0) for i in range(4000)],
@@ -359,26 +358,55 @@ def test_edge_pin_row_bound_gates_even_in_broadcast_regime(spark):
     row-format checkpoint ONLY under the measured row bound — past it
     (7.7M-edge sf1: pin 1.2-1.33x faster) the loop pins the sorted
     columnar cache even though the state still broadcasts; and the
-    big-state regime pins regardless."""
-    from graph_database_spark.graphs import pagerank as pr
+    big-state regime pins regardless. Both bounds are inclusive."""
+    from graph_database_spark.graphs import superstep as ss
 
     edges = spark.createDataFrame(
         [(i % 7, (i + 1) % 7, 1.0) for i in range(30)],
         "src long, dst long, weight double").localCheckpoint()
 
-    small, pinned = pr._prep_iter_edges(edges, 2, True, 30, "src")
+    pinned = ss.pinned_regime(30, 30)
     assert not pinned
-    assert not small.storageLevel.useMemory  # checkpoint, not a cache
+    with ss.iteration_frames(pinned, 2, (edges, "src")) as (small,):
+        assert not small.storageLevel.useMemory  # checkpoint, not a cache
 
-    big, pinned2 = pr._prep_iter_edges(
-        edges, 2, True, pr._EDGE_PIN_ROWS + 1, "src")
+    pinned2 = ss.pinned_regime(30, ss._EDGE_PIN_ROWS + 1)
     assert pinned2
-    assert big.storageLevel.useMemory  # the sorted persisted cache
-    big.unpersist()
+    with ss.iteration_frames(pinned2, 2, (edges, "src")) as (big,):
+        assert big.storageLevel.useMemory  # the sorted persisted cache
+    assert not big.storageLevel.useMemory  # released when the loop ends
 
-    huge_state, pinned3 = pr._prep_iter_edges(edges, 2, False, 30, "src")
+    pinned3 = ss.pinned_regime(ss._BROADCAST_STATE_ROWS + 1, 30)
     assert pinned3
-    huge_state.unpersist()
+    assert not ss.pinned_regime(ss._BROADCAST_STATE_ROWS, ss._EDGE_PIN_ROWS)
+
+
+def test_iteration_frames_share_a_checkpoint_and_release_pins(spark):
+    """The checkpoint regime prepares a frame given twice once (HITS's two
+    edge directions); the pinned regime pins each pair on its own key and
+    unpersists every pin when the block raises. A checkpoint already at
+    the loop's partition count is kept as it is."""
+    from graph_database_spark.graphs import superstep as ss
+
+    edges = spark.createDataFrame(
+        [(i % 7, (i + 1) % 7) for i in range(30)],
+        "src long, dst long").repartition(3).localCheckpoint()
+
+    with ss.iteration_frames(False, 2, (edges, "src"),
+                             (edges, "dst")) as (e_src, e_dst):
+        assert e_src is e_dst
+        assert e_src.rdd.getNumPartitions() == 2
+    with ss.iteration_frames(False, 3, (edges, "src")) as (kept,):
+        assert kept is edges
+
+    with pytest.raises(RuntimeError):
+        with ss.iteration_frames(True, 2, (edges, "src"),
+                                 (edges, "dst")) as (p_src, p_dst):
+            assert p_src.storageLevel.useMemory
+            assert p_dst.storageLevel.useMemory
+            raise RuntimeError("superstep failed")
+    assert not p_src.storageLevel.useMemory
+    assert not p_dst.storageLevel.useMemory
 
 
 def test_edge_pin_row_bound_does_not_change_pagerank_results(
@@ -390,9 +418,8 @@ def test_edge_pin_row_bound_does_not_change_pagerank_results(
     different physical plan)."""
     import pytest as _pytest
 
-    from pyspark.sql import functions as F
-
     from graph_database_spark.graphs import pagerank as pr
+    from graph_database_spark.graphs import superstep as ss
 
     verts = spark.range(6).select("id")
     edges = spark.createDataFrame(
@@ -412,9 +439,19 @@ def test_edge_pin_row_bound_does_not_change_pagerank_results(
                                             max_iter=5).collect()}
         return single, batch
 
+    pins = []
+
+    def counted(*a, _pin=ss._pin_for_iteration):
+        pins.append(a[2:])
+        return _pin(*a)
+    monkeypatch.setattr(ss, "_pin_for_iteration", counted)
+
     base, base_batch = run()
-    monkeypatch.setattr(pr, "_EDGE_PIN_ROWS", 0)
+    assert pins == []
+    monkeypatch.setattr(ss, "_EDGE_PIN_ROWS", 0)
     forced, forced_batch = run()
+    # edges on src and p on id, for each of the two runs
+    assert pins == [("src",), ("id",)] * 2
     assert forced == _pytest.approx(base, abs=0.0)  # bit-identical
     assert forced_batch == base_batch
 

@@ -287,11 +287,17 @@ def test_build_and_request_job_counts(spark, service, toy_roles):
         assert jobs() == []
 
 
+@pytest.mark.parametrize("incidence_rows", [None, 0],
+                         ids=["index", "no_index"])
 def test_pagerank_exact_runs_once_then_slices(spark, toy_roles,
-                                              monkeypatch):
+                                              monkeypatch, incidence_rows):
     """4 threads that send the first pagerank_exact request together run
-    one PageRank; every later request slices its kept ranking."""
+    one PageRank; every later request slices its kept ranking. The same
+    holds for a service without an index (its bound forced to 0)."""
+    if incidence_rows is not None:
+        monkeypatch.setattr(service_mod, "INCIDENCE_ROWS", incidence_rows)
     svc = RecommendationService(spark, toy_roles)
+    assert (svc._index is None) == (incidence_rows is not None)
     calls = []
 
     def counted(*args, **kwargs):

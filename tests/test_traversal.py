@@ -425,14 +425,14 @@ def test_hyperanf_superstep_truncates_lineage_lazily(spark):
     estimate/aggregate job materializes it — but it must STILL truncate
     lineage (plan = LogicalRDD scan), or plan depth would grow with the
     radius and reintroduce the pathology localCheckpoint exists to stop."""
-    from graph_database_spark.graphs.anf import (_init_state, _pin_edges,
+    from graph_database_spark.graphs.anf import (_init_state,
+                                                 _iteration_edges,
                                                  _superstep)
 
     vertices = spark.range(0, 50).withColumnRenamed("id", "id")
     edges = spark.range(0, 49).selectExpr("id as src", "id + 1 as dst")
     state = _init_state(vertices)
-    prepped, pinned, = _pin_edges(edges, state.count())
-    try:
+    with _iteration_edges(state, edges) as (prepped,):
         stepped = _superstep(state, prepped)
         # lineage is truncated at construction time: the logical plan is
         # the checkpointed RDD, not the join+aggregate that produced it
@@ -442,6 +442,3 @@ def test_hyperanf_superstep_truncates_lineage_lazily(spark):
         # arithmetic it truncated (materialized by this collect)
         n_rows = stepped.count()
         assert n_rows >= vertices.count()
-    finally:
-        if pinned:
-            prepped.unpersist(False)
