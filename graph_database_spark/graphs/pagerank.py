@@ -13,28 +13,51 @@ Source: tp1/knoledge_graphs/recommendation.py:150-188 —
                                                 own loop, not an import)
 - converge on L1 delta < tol (1e-6) or max_iter (50); d = 0.85 (`:33-39`).
 
-One superstep loop serves every caller (`_pagerank_batch_blocked`): k
-personalization vectors ride as the COLUMNS of one |V|-row state frame,
-so each power step is a blocked SpMV — the edge table joins the state
-once and the dst aggregate sums k weighted products per edge.
-`pagerank()` runs that loop with one column; `pagerank_batch()` runs it
-over tiles of at most `_BLOCKED_KEYS_MAX` keys.
+Two regimes serve both entry points (`pagerank()`, `pagerank_batch()`),
+with the same arithmetic:
 
-The static frames (edges, the personalization frame) are prepared by
-the regime gate in `graphs.superstep`; sink mass and the convergence
-delta ride along as 1-row broadcast DataFrames / scalars, and
-`localCheckpoint` truncates state lineage so plans don't grow with
+- DRIVER-LOCAL (`_LocalGraph`, the superstep module's local regime):
+  the edges, the vertex ids, the personalization and `init_ranks` are
+  collected once per call through Arrow, all in one query, ids are
+  encoded against the sorted vertex ids, and each key steps as
+  `np.bincount(dst, weights=w·r[src])`; the answer comes back through
+  `createDataFrame`. It falls back to the Spark loop when the inputs
+  hold more than `LOCAL_EDGE_ROWS` rows together or a null, when the
+  answer (keys × vertices) would, on a floating-point id or key, ids
+  whose types differ between the frames (any two integral types compare
+  as int64), a decimal weight, p or rank, or a vertex listed twice in
+  `init_ranks`.
+- SPARK (`_pagerank_batch_blocked`): k personalization vectors ride as
+  the COLUMNS of one |V|-row state frame, so each power step is a
+  blocked SpMV — the edge table joins the state once and the dst
+  aggregate sums k weighted products per edge. `pagerank()` runs that
+  loop with one column; `pagerank_batch()` runs it over tiles of at most
+  `_BLOCKED_KEYS_MAX` keys.
+
+The Spark loop's static frames (edges, the personalization frame) are
+prepared by the regime gate in `graphs.superstep`; sink mass and the
+convergence delta ride along as 1-row broadcast DataFrames / scalars,
+and `localCheckpoint` truncates state lineage so plans don't grow with
 iteration count.
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass
 from functools import reduce
 
-from pyspark.sql import DataFrame, functions as F
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import (
+    DataType, DecimalType, DoubleType, FloatType, IntegerType, IntegralType,
+    NumericType, StructField, StructType,
+)
 
+from ..operators.util import codes, sorted_distinct
 from .superstep import (
-    _iter_partitions, hint_state, iteration_frames, pinned_regime,
+    _iter_partitions, hint_state, iteration_frames, local_regime,
+    local_tables, pinned_regime,
 )
 
 
@@ -49,7 +72,7 @@ def pagerank(vertices: DataFrame, edges: DataFrame,
 
     Returns (id, rank) — or ((id, rank), iterations_run) when
     `with_iterations=True`. Semantics identical to tp1 `_run_pagerank`;
-    runs the blocked loop with one column.
+    runs the driver-local kernel or the blocked loop with one column.
 
     `init_ranks` ((id, rank)) warm-starts the iteration — the 100 TB
     answer to "1% of edges were appended, don't recompute from 1/N":
@@ -59,18 +82,29 @@ def pagerank(vertices: DataFrame, edges: DataFrame,
     from init_ranks (newly appeared) start at 1/N; initial mass need not
     sum to 1 — the (1−d) restart term re-normalizes it geometrically.
     """
-    verts = vertices.select("id").distinct()
-    n = verts.count()
+    if personalization is not None:
+        personalization = personalization.select(
+            F.lit(0).alias("key"), "id", "p")
+    local = _LocalGraph.collect(vertices, edges, personalization,
+                                init_ranks)
+    if local is not None:
+        n = local.n
+    else:
+        verts = vertices.select("id").distinct()
+        n = verts.count()
     if n == 0:
-        out, iters = verts.withColumn("rank", F.lit(0.0)), 0
+        out, iters = (vertices.select("id").distinct()
+                      .withColumn("rank", F.lit(0.0))), 0
+    elif local is not None:
+        out, iters = local.run(damping, tol, max_iter)
     else:
         if personalization is None:
-            personalization = verts.select("id", F.lit(1.0).alias("p"))
+            personalization = verts.select(
+                F.lit(0).alias("key"), "id", F.lit(1.0).alias("p"))
         out, iters = _pagerank_batch_blocked(
-            verts, n, edges,
-            personalization.select(F.lit(0).alias("key"), "id", "p"), [0],
+            verts, n, edges, personalization, [0],
             damping, tol, max_iter, num_partitions, init_ranks)
-        out = out.select("id", "rank")
+    out = out.select("id", "rank")
     return (out, iters) if with_iterations else out
 
 
@@ -78,6 +112,14 @@ def pagerank(vertices: DataFrame, edges: DataFrame,
 # state frame (see _pagerank_batch_blocked); pagerank_batch runs a larger
 # batch as ceil(k/64) tiles of the same loop.
 _BLOCKED_KEYS_MAX = 64
+
+# Both regimes probe a key's L1 delta every _DELTA_EVERY-th iteration and
+# freeze it once the delta is under tol. Probing every third iteration
+# overshoots a key's exact stop point by at most two damped steps, each
+# moving its ranks by < tol in L1 — far inside the 1e-4 golden tolerance
+# — while the tol<0 fixed-iteration mode (the oracle-checked path) never
+# probes.
+_DELTA_EVERY = 3
 
 
 def pagerank_batch(vertices: DataFrame, edges: DataFrame,
@@ -98,15 +140,21 @@ def pagerank_batch(vertices: DataFrame, edges: DataFrame,
     Keys run in sorted tiles of at most _BLOCKED_KEYS_MAX through the
     blocked loop; the tiles' results are unioned.
     """
-    verts = vertices.select("id").distinct()
-    n = verts.count()
-    key_list = [r["key"] for r in
-                personalization.select("key").distinct().orderBy("key")
-                .collect()]
-    if n == 0 or not key_list:
+    local = _LocalGraph.collect(vertices, edges, personalization)
+    if local is not None:
+        n, key_list = local.n, local.keys
+    else:
+        verts = vertices.select("id").distinct()
+        n = verts.count()
+        key_list = [r["key"] for r in
+                    personalization.select("key").distinct().orderBy("key")
+                    .collect()]
+    if n == 0 or not len(key_list):
         return personalization.select("key").limit(0) \
             .withColumn("id", F.lit(None).cast("long")) \
             .withColumn("rank", F.lit(0.0))
+    if local is not None:
+        return local.run(damping, tol, max_iter)[0]
     tiles = [
         _pagerank_batch_blocked(
             verts, n, edges, personalization,
@@ -130,7 +178,7 @@ def _pagerank_batch_blocked(verts: DataFrame, n: int, edges: DataFrame,
     power step is a blocked SpMV: edges join the state ONCE on src and
     the dst aggregation sums k weighted products per edge. Per key: p is
     normalized to sum 1 (uniform 1/n when a key's p sums to 0), sink
-    mass is redistributed uniformly, and every DELTA_EVERY(=3)-th
+    mass is redistributed uniformly, and every _DELTA_EVERY(=3)-th
     iteration an L1 delta probe freezes the keys under tol (a frozen
     key's column is snapshotted and drops out of the state).
 
@@ -188,13 +236,8 @@ def _pagerank_batch_blocked(verts: DataFrame, n: int, edges: DataFrame,
     frozen_snap: dict[int, DataFrame] = {}
     # The convergence probe is the only per-iteration driver sync; every
     # other scalar (sink mass) rides inside the plan as a broadcast 1-row
-    # aggregate, so a no-probe iteration is ONE job (the checkpoint).
-    # Probing every DELTA_EVERY-th iteration overshoots a key's exact
-    # stop point by at most DELTA_EVERY-1 damped steps, each moving its
-    # ranks by < tol in L1 — far inside the 1e-4 golden tolerance — while
-    # the tol<0 fixed-iteration mode (the oracle-checked path) never
-    # probes.
-    DELTA_EVERY = 3
+    # aggregate, so a no-probe iteration is ONE job (the checkpoint), and
+    # a probe runs every _DELTA_EVERY-th iteration.
     it = -1  # max_iter <= 0 never enters the loop → iteration count 0
     with iteration_frames(pinned_regime(cells, m), n_parts,
                           (edges, "src"), (p_frame, "id")) as (edges, p):
@@ -237,7 +280,7 @@ def _pagerank_batch_blocked(verts: DataFrame, n: int, edges: DataFrame,
             new_ranks = stepped.select(
                 "id", "__is_sink",
                 *[_new(i).alias(r[i]) for i in live]).localCheckpoint()
-            if check_delta and it % DELTA_EVERY == DELTA_EVERY - 1:
+            if check_delta and it % _DELTA_EVERY == _DELTA_EVERY - 1:
                 # per-key L1 deltas as a join of the two checkpointed
                 # frames (carrying a __prev column through the checkpoint
                 # instead adds the same-iteration `ranks` reference the
@@ -268,3 +311,179 @@ def _pagerank_batch_blocked(verts: DataFrame, n: int, edges: DataFrame,
                      [_long(i, frozen_snap.get(i, ranks)) for i in range(k)])
         out = out.localCheckpoint()
     return out, it + 1
+
+
+@dataclass
+class _LocalGraph:
+    """PageRank's inputs on the driver, for the local regime
+    (`superstep.local_regime`): the (key, id, rank) schema of the answer,
+    the sorted vertex ids and keys, the edges that join two vertices as
+    positions in the ids, the sinks, each key's normalized
+    personalization as a dense row and the initial ranks. Without a
+    vertex or a key only the first four are set."""
+
+    spark: SparkSession
+    schema: StructType
+    ids: pa.Array
+    keys: pa.Array
+    src: np.ndarray | None = None
+    dst: np.ndarray | None = None
+    weight: np.ndarray | None = None
+    sinks: np.ndarray | None = None
+    p: np.ndarray | None = None
+    init: np.ndarray | None = None
+
+    @property
+    def n(self) -> int:
+        return len(self.ids)
+
+    @classmethod
+    def collect(cls, vertices: DataFrame, edges: DataFrame,
+                personalization: DataFrame | None = None,
+                init_ranks: DataFrame | None = None) -> _LocalGraph | None:
+        """Collect the inputs through Arrow in one query and encode them,
+        or None when the Spark loop must run instead: the bound admits no
+        row, an id or key type whose equality Arrow need not share with
+        Spark (floating point, or id types that differ between the
+        frames), a decimal weight, p or rank, inputs of more than
+        LOCAL_EDGE_ROWS rows together, a null, a vertex listed twice in
+        init_ranks (the Spark join would repeat its row), or an answer of
+        more than LOCAL_EDGE_ROWS rows."""
+        if not local_regime(0):
+            return None
+        # the frames share the edges' columns, so the one collect is no
+        # wider than the edges (plus `key`): every id rides in `src`,
+        # p and the initial ranks in `weight`
+        frames = {"edges": edges.select("src", "dst", "weight"),
+                  "vertices": vertices.select(F.col("id").alias("src"))}
+        if personalization is not None:
+            frames["pers"] = personalization.select(
+                "key", F.col("id").alias("src"), F.col("p").alias("weight"))
+        if init_ranks is not None:
+            frames["init"] = init_ranks.select(
+                F.col("id").alias("src"), F.col("rank").alias("weight"))
+        types = [(f.name, f.dataType)
+                 for df in frames.values() for f in df.schema]
+        id_kinds = {_id_kind(t) for c, t in types if c in ("src", "dst")}
+        key_type = (personalization.schema["key"].dataType
+                    if personalization is not None else IntegerType())
+        if (len(id_kinds) != 1 or None in id_kinds
+                or _id_kind(key_type) is None
+                or not all(_is_real(t) for c, t in types
+                           if c == "weight")):
+            return None
+        tables = local_tables(frames)
+        if tables is None:
+            return None
+        schema = StructType([StructField("key", key_type),
+                             StructField("id",
+                                         vertices.schema["id"].dataType),
+                             StructField("rank", DoubleType())])
+        return cls._encode(vertices.sparkSession, schema, tables,
+                           id_kinds.pop() == "integral")
+
+    @classmethod
+    def _encode(cls, spark: SparkSession, schema: StructType,
+                tables: dict[str, pa.Table],
+                integral: bool) -> _LocalGraph | None:
+        def id_codes(col: pa.ChunkedArray) -> np.ndarray:
+            return codes(col.cast(pa.int64()) if integral else col,
+                         id_values)
+
+        ids = sorted_distinct(tables["vertices"].column("src"))
+        id_values = ids.cast(pa.int64()) if integral else ids
+        pers = tables.get("pers")
+        keys = (sorted_distinct(pers.column("key")) if pers is not None
+                else pa.array([0], pa.int32()))
+        n, k = len(ids), len(keys)
+        if n == 0 or k == 0:
+            return cls(spark, schema, ids, keys)
+        if not local_regime(k * n):
+            return None
+        # a vertex with any out-edge is no sink, even when the edge's dst
+        # is not a vertex; an edge leaving or entering a non-vertex moves
+        # no rank
+        edges = tables["edges"]
+        src, dst = id_codes(edges.column("src")), id_codes(edges.column("dst"))
+        sinks = np.flatnonzero(np.bincount(src[src >= 0], minlength=n) == 0)
+        on = (src >= 0) & (dst >= 0)
+        # the blocked loop's pivot: max p per (key, vertex), 0 where a key
+        # lists no p for a vertex; each key normalized to sum 1, uniform
+        # 1/n when its p sums to 0
+        p = np.ones((k, n))
+        if pers is not None:
+            key = codes(pers.column("key"), keys)
+            vid = id_codes(pers.column("src"))
+            listed = vid >= 0
+            key, vid = key[listed], vid[listed]
+            p = np.full((k, n), -np.inf)
+            np.maximum.at(p, (key, vid),
+                          _floats(pers.column("weight"))[listed])
+            listed = np.zeros((k, n), dtype=bool)
+            listed[key, vid] = True
+            p[~listed] = 0.0
+        totals = p.sum(axis=1, keepdims=True)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            p = np.where(totals > 0, p / totals, 1.0 / n)
+        init = np.full(n, 1.0 / n)
+        if "init" in tables:
+            vid = id_codes(tables["init"].column("src"))
+            listed = vid >= 0
+            if np.unique(vid[listed]).size < listed.sum():
+                return None
+            init[vid[listed]] = _floats(
+                tables["init"].column("weight"))[listed]
+        return cls(spark, schema, ids, keys, src[on], dst[on],
+                   _floats(edges.column("weight"))[on], sinks, p, init)
+
+    def run(self, damping: float, tol: float,
+            max_iter: int) -> tuple[DataFrame, int]:
+        """((key, id, rank), iterations_run): the blocked loop's answer,
+        one key at a time. Each step is `_pagerank_batch_blocked`'s update
+        in its order of operations; a key freezes at its own probe under
+        tol, and the iteration count is the last key's."""
+        n, k = self.n, len(self.keys)
+        ranks = np.empty((k, n))
+        iters = 0
+        for j in range(k):
+            r, it = self.init, -1
+            for it in range(max_iter):
+                new = ((1.0 - damping) * self.p[j]
+                       + damping * np.bincount(
+                           self.dst, weights=self.weight * r[self.src],
+                           minlength=n))
+                if self.sinks.size:
+                    new = new + damping * r[self.sinks].sum() / n
+                frozen = (tol >= 0 and it % _DELTA_EVERY == _DELTA_EVERY - 1
+                          and np.abs(new - r).sum() < tol)
+                r = new
+                if frozen:
+                    break
+            ranks[j] = r
+            iters = max(iters, it + 1)
+        return self.spark.createDataFrame(pa.table({
+            "key": self.keys.take(np.repeat(np.arange(k), n)),
+            "id": self.ids.take(np.tile(np.arange(n), k)),
+            "rank": ranks.ravel()}), self.schema), iters
+
+
+def _id_kind(dtype: DataType) -> str | None:
+    """The equality the local regime gives ids or keys of `dtype`: every
+    integral type as int64, any other type as its own Arrow values, and
+    none for floating point (Spark joins NaN to NaN and -0.0 to 0.0)."""
+    if isinstance(dtype, IntegralType):
+        return "integral"
+    if isinstance(dtype, (FloatType, DoubleType)):
+        return None
+    return dtype.simpleString()
+
+
+def _is_real(dtype: DataType) -> bool:
+    """A numeric type the local regime reads as float64 with Spark's
+    results (decimal arithmetic is not float64's)."""
+    return (isinstance(dtype, NumericType)
+            and not isinstance(dtype, DecimalType))
+
+
+def _floats(col: pa.ChunkedArray) -> np.ndarray:
+    return col.to_numpy().astype(np.float64)

@@ -24,13 +24,27 @@ it exits. Per-superstep cost is bounded by the state shuffle plus a
 cached edge scan, which AQE skew-splits for hot vertices. Two loops keep
 a measured exception: LPA always pins, and the landmark pair (BFS,
 Bellman-Ford) streams its up-front checkpoint without the repartition.
+
+A third regime sits below both: the DRIVER-LOCAL one. At toy and
+benchmark sizes a Spark superstep costs its fixed per-job overhead, not
+work, so a loop whose inputs collect through Arrow in one query to at
+most `LOCAL_EDGE_ROWS` rows together with no null (`local_tables`), and
+whose answer fits the same bound (`local_regime`), runs as a numpy
+kernel on the driver and hands its answer back with `createDataFrame`:
+the inputs' own stages and one collect, no job per superstep. Past the
+bound, or on a null, the loop runs in Spark as above, its plans
+unchanged. PageRank is the only loop with a local branch so far
+(`pagerank._LocalGraph`).
 """
 
 from __future__ import annotations
 
 from contextlib import contextmanager
+from functools import reduce
 from typing import Iterator
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
 # Partition sizing for the per-iteration frames: every superstep pays one
@@ -85,6 +99,27 @@ _BROADCAST_STATE_ROWS = 5_000_000
 # (bench_results/ab/ab_batchppr_sf1_r13.json).
 _EDGE_PIN_ROWS = 4_000_000
 
+# Rows up to which a loop runs on the driver (the local regime, today
+# PageRank's): it bounds the one Arrow collect of the loop's inputs, all
+# frames together (the edges are nearly all of it), and the rows of its
+# answer. The bound is the largest input size measured by
+# scripts/ab_local_pagerank.py at which the local regime used at most
+# half the Spark loop's CPU, on ppr_fixed20_batch's inputs (3 keys, 20
+# fixed iterations, adjacency built inside each call). On a 4-vCPU host
+# with perfbench's 1 GB driver heap (bench_results/ab/
+# ab_local_pagerank.json) it used 2.8 / 2.1 / 3.2 / 18.9 s of CPU against
+# the Spark loop's 16.2 / 12.6 / 12.6 / 53.0 s on the batch_registry
+# tables and sf0.001 / sf0.01 / sf0.1 (18.9k / 18.1k / 234k / 2.41M input
+# rows), 2.8× less at the largest size, every rank within 1e-12. At the
+# bound the collect is 83 MB of Arrow (src, dst, weight, key and a frame
+# tag per row), which the JVM holds as one task's result, a few copies
+# at once, inside the 1 GB heap: sf0.1 ran there in every round, after
+# the Spark loop's runs too, where a collect with a column per input
+# column (about 130 MB) ran out of heap. Python holds the table once
+# more, plus about 95 MB of int64 codes, weights and one step's
+# temporaries; an answer at the bound is another 55 MB each way.
+LOCAL_EDGE_ROWS = 2_412_143
+
 
 def _iter_partitions(spark_ctx, state_rows: int = 0,
                      edge_rows: int = 0) -> int:
@@ -98,12 +133,49 @@ def _iter_partitions(spark_ctx, state_rows: int = 0,
     return min(spark_ctx.defaultParallelism, want)
 
 
+def state_broadcasts(cells: int) -> bool:
+    """The state gate: True while a frame of `cells` (rows × value
+    columns) is small enough to broadcast (`_BROADCAST_STATE_ROWS`,
+    inclusive). The superstep loops ask it of their state; the registry
+    asks it of the frames it broadcasts outside a loop."""
+    return cells <= _BROADCAST_STATE_ROWS
+
+
+def local_regime(rows: int) -> bool:
+    """The driver-local gate: True while `rows` rows, of the inputs or of
+    the answer, may stay on the driver (`LOCAL_EDGE_ROWS`, inclusive)."""
+    return rows <= LOCAL_EDGE_ROWS
+
+
+def local_tables(frames: dict[str, DataFrame]
+                 ) -> dict[str, pa.Table] | None:
+    """The local regime's collect: every frame in ONE Arrow collect, a
+    tagged `unionByName` (missing columns null), so the frames' upstream
+    stages run as the jobs of one query; split back into one table of its
+    own columns per frame. None when the loop must run in Spark instead:
+    more than LOCAL_EDGE_ROWS rows together, or a null in any frame's
+    own columns. Same-named columns take their common type."""
+    tagged = [df.withColumn("__frame", F.lit(i))
+              for i, df in enumerate(frames.values())]
+    union = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True),
+                   tagged)
+    table = union.limit(LOCAL_EDGE_ROWS + 1).toArrow()
+    if not local_regime(table.num_rows):
+        return None
+    tables = {name: table.filter(pc.equal(table.column("__frame"), i))
+              .select(df.columns)
+              for i, (name, df) in enumerate(frames.items())}
+    if any(col.null_count for t in tables.values() for col in t.columns):
+        return None
+    return tables
+
+
 def pinned_regime(state_cells: int, edge_rows: int) -> bool:
     """The regime gate: True pins the static frames (`_pin_for_iteration`),
     False checkpoints them. Checkpoint only while BOTH hold — the state
     broadcasts, so the static side merely streams through a BHJ, and the
     streamed frame is under the measured `_EDGE_PIN_ROWS` bound."""
-    return (state_cells > _BROADCAST_STATE_ROWS
+    return (not state_broadcasts(state_cells)
             or edge_rows > _EDGE_PIN_ROWS)
 
 
@@ -112,7 +184,7 @@ def hint_state(df: DataFrame, state_cells: int) -> DataFrame:
     state gate; above it, pin to a merge join so a generous session
     autoBroadcastJoinThreshold can never move an aggregate subplan onto a
     driver-blocking broadcast side (see _pin_for_iteration)."""
-    if state_cells <= _BROADCAST_STATE_ROWS:
+    if state_broadcasts(state_cells):
         return F.broadcast(df)
     return df.hint("merge")
 

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
 
@@ -43,3 +46,18 @@ def salted_join(skewed: DataFrame, other: DataFrame, key: str,
         "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt)])))
     out = salted_left.join(replicated_right, [key, "__salt"], how)
     return out.drop("__salt")
+
+
+def sorted_distinct(*cols: pa.ChunkedArray) -> pa.Array:
+    """The distinct values of Arrow columns of one type, sorted: the code
+    book of `codes`."""
+    values = pc.unique(pa.chunked_array(
+        [chunk for col in cols for chunk in col.chunks], cols[0].type))
+    return values.take(pc.sort_indices(values))
+
+
+def codes(col: pa.ChunkedArray, values: pa.Array) -> np.ndarray:
+    """The int64 position of each entry of `col` in `values`, -1 where
+    `values` does not hold it."""
+    return (pc.index_in(col, value_set=values).fill_null(-1)
+            .to_numpy().astype(np.int64))

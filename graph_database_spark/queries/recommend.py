@@ -19,8 +19,9 @@ from ..operators.similarity import (
     seed_expansion_scores_from_items, user_cf_scores,
 )
 from ..operators.topk import top_k_per_group
-from ..graphs.superstep import _BROADCAST_STATE_ROWS, _ROWS_PER_PARTITION \
-    as _REC_ROWS_PER_PARTITION
+from ..graphs.superstep import (
+    _ROWS_PER_PARTITION as _REC_ROWS_PER_PARTITION, state_broadcasts,
+)
 from ._shared import register, _items, _order_customer_pairs, _SQL_ITEMS, _SQL_INC
 
 # ---------------------------------------------------------------------------
@@ -184,8 +185,7 @@ def q_similarity_jaccard_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the 128-cap bounds the per-customer k² pair fan-out (p99 basket ≈ 77
     # at sf0.1, so it's exact locally; at 100 TB it's the skew guard) —
     # the oracle applies the identical ROW_NUMBER truncation
-    jac = jaccard_pairs(inc, broadcast_sizes=inc.count()
-                        <= _BROADCAST_STATE_ROWS,
+    jac = jaccard_pairs(inc, broadcast_sizes=state_broadcasts(inc.count()),
                         max_products_per_customer=128)
     return (
         jac.orderBy(F.desc("jaccard"), F.asc("src"), F.asc("dst")).limit(500)
@@ -304,7 +304,7 @@ def q_recommend_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # |customers|×|catalog| incidence is genuinely fact-sized — fall back to
     # the shuffle anti-join.
     n_inc = inc.count()
-    inc_small = n_inc <= _BROADCAST_STATE_ROWS
+    inc_small = state_broadcasts(n_inc)
     excl = F.broadcast(inc) if inc_small else inc
     # ONE exchange keyed customer_id on the narrow incidence frame,
     # BEFORE the ×30 expansion (guide §2.1/§2.4 — establish the

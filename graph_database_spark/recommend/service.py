@@ -21,7 +21,6 @@ import threading
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Row, SparkSession, functions as F
 from pyspark.sql.types import StringType
 
@@ -32,6 +31,7 @@ from ..operators.cooccurrence import (
 from ..operators.incidence import incidence_pairs, order_incidence
 from ..operators.popularity import distinct_reach, order_frequency
 from ..operators.similarity import user_cf_scores
+from ..operators.util import codes, sorted_distinct
 from .engine import SparkRecommendationEngine
 
 
@@ -77,19 +77,19 @@ class IncidenceIndex:
     `product_id asc` tie-break of the Spark plans."""
 
     def __init__(self, incidence: pa.Table, lines: pa.Table):
-        customers = _sorted_distinct(incidence.column("customer_id"))
+        customers = sorted_distinct(incidence.column("customer_id"))
         self.customers = {c: i for i, c in enumerate(customers.to_pylist())}
-        self.cust = _codes(incidence.column("customer_id"), customers)
-        products = _sorted_distinct(incidence.column("product_id"),
-                                    lines.column("product_id"))
+        self.cust = codes(incidence.column("customer_id"), customers)
+        products = sorted_distinct(incidence.column("product_id"),
+                                   lines.column("product_id"))
         self.products = products.to_pylist()
-        self.prod = _codes(incidence.column("product_id"), products)
+        self.prod = codes(incidence.column("product_id"), products)
         n = len(self.products)
         orders = lines.column("order_id")
         # distinct lines, as _item_pairs and order_frequency count them
         order, prod = np.divmod(np.unique(
-            _codes(orders, _sorted_distinct(orders)) * n
-            + _codes(lines.column("product_id"), products)), n)
+            codes(orders, sorted_distinct(orders)) * n
+            + codes(lines.column("product_id"), products)), n)
         basket = np.bincount(order)
         counts = {
             # count(DISTINCT customer): the incidence is distinct
@@ -138,17 +138,6 @@ def _ranking(counts: np.ndarray) -> np.ndarray:
     """Codes whose count is > 0, by (count desc, code asc)."""
     hit = np.flatnonzero(counts > 0)
     return hit[np.lexsort((hit, -counts[hit]))]
-
-
-def _sorted_distinct(*cols: pa.ChunkedArray) -> pa.Array:
-    values = pc.unique(pa.chunked_array(
-        [chunk for col in cols for chunk in col.chunks], cols[0].type))
-    return values.take(pc.sort_indices(values))
-
-
-def _codes(col: pa.ChunkedArray, values: pa.Array) -> np.ndarray:
-    """The int64 position of each entry of `col` in `values`."""
-    return pc.index_in(col, value_set=values).to_numpy().astype(np.int64)
 
 
 def incidence_index(incidence: DataFrame,

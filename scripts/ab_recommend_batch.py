@@ -68,10 +68,10 @@ def _inputs(spark, sf_dir):
 
 
 def q_old(spark, sf_dir) -> DataFrame:
-    from graph_database_spark.graphs.superstep import _BROADCAST_STATE_ROWS
+    from graph_database_spark.graphs.superstep import state_broadcasts
     from graph_database_spark.operators.topk import top_k_per_group
     cooc_top, inc = _inputs(spark, sf_dir)
-    inc_small = inc.count() <= _BROADCAST_STATE_ROWS
+    inc_small = state_broadcasts(inc.count())
     excl = F.broadcast(inc) if inc_small else inc
     scored = (
         inc.join(cooc_top, inc["product_id"] == cooc_top["src"])
@@ -83,12 +83,12 @@ def q_old(spark, sf_dir) -> DataFrame:
 
 
 def q_new(spark, sf_dir) -> DataFrame:
-    from graph_database_spark.graphs.superstep import (_BROADCAST_STATE_ROWS,
-                                                       _ROWS_PER_PARTITION)
+    from graph_database_spark.graphs.superstep import (_ROWS_PER_PARTITION,
+                                                       state_broadcasts)
     from graph_database_spark.operators.topk import top_k_per_group
     cooc_top, inc = _inputs(spark, sf_dir)
     n_inc = inc.count()
-    inc_small = n_inc <= _BROADCAST_STATE_ROWS
+    inc_small = state_broadcasts(n_inc)
     excl = F.broadcast(inc) if inc_small else inc
     # ONE exchange keyed customer_id on the narrow incidence frame; the
     # x30 expansion, the (customer_id, product_id) aggregate and the

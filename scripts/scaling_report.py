@@ -392,6 +392,22 @@ under the bound. Since then a single PageRank loop
 Bellman-Ford, CC, LPA, HyperANF) now takes its gate, its state-side
 hint and its pin lifetime from `graphs/superstep.py`.
 
+**A third, driver-local regime, PageRank only so far.** Below
+`superstep.LOCAL_EDGE_ROWS` (2,412,143 rows: the inputs of one call
+together, collected through Arrow in one query, and the answer's keys ×
+vertices) PageRank runs on the driver as a numpy power iteration
+(`np.bincount` per key and step): the inputs' own stages and one collect,
+no job per superstep. Past the bound, or on a null, the Spark loop and
+the gate above apply unchanged. On `ppr_fixed20_batch`'s inputs
+(`scripts/ab_local_pagerank.py`, 4 vCPUs, 1 GB driver heap, adjacency
+built inside each call) it used 2.8 / 2.1 / 3.2 / 18.9 s of CPU against
+the Spark loop's 16.2 / 12.6 / 12.6 / 53.0 s on perfbench's batch
+tables, sf0.001, sf0.01 and sf0.1 (2.41M input rows), every rank within
+1e-12 (`bench_results/ab/ab_local_pagerank.json`). Every sf0.1 PageRank
+input is within the bound, so the sf0.1 `pagerank_*` / `ppr_*` timings
+in the tables above predate it; the sf1 adjacency (23.9M rows) stays on
+the Spark loop.
+
 #### The earlier null attempt (kept for method history)
 
 The same harness was pointed at the gen_sfbig sf1 corpus on both

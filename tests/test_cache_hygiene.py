@@ -4,14 +4,18 @@ regimes, and cache hygiene of the registry's batch recommendation jobs.
 After a loop's result is collected, the session must hold no new cached
 plan, and every RDD the run left persisted must be a `localCheckpoint`
 (a lineage cut) — never a pinned edge or personalization cache the loop
-forgot to release. Each entry point runs at the default pin bound, where
-only label propagation pins (its measured exception to the gate), and,
-in the `pinned` case, then again with `superstep._EDGE_PIN_ROWS` forced
-to -1, which puts every loop on its pinned-cache branch. The regime
-changes how the static frames are stored, never the arithmetic: both
-runs collect the same answer, and each run starts exactly the Spark jobs
-recorded in JOBS. The registry jobs outside `graphs/` run once each on
-the smoke testdata.
+forgot to release. Each entry point runs at the default bounds, where
+only label propagation pins (its measured exception to the gate) and
+PageRank runs on the driver (its local regime); in the `default` case a
+PageRank entry then runs again with `superstep.LOCAL_EDGE_ROWS` forced to
+-1, which puts it on the Spark loop's checkpoint branch, and in the
+`pinned` case every entry runs again with `superstep._EDGE_PIN_ROWS`
+(and the local bound) forced to -1, which puts every loop on its
+pinned-cache branch. The regime changes how the frames are stored and
+where the arithmetic runs, never its result: the runs collect the same
+answer, and each run starts exactly the Spark jobs recorded in JOBS and
+SPARK_JOBS. The registry jobs outside `graphs/` run once each on the
+smoke testdata.
 """
 
 from __future__ import annotations
@@ -61,12 +65,15 @@ ENTRIES = {
 }
 
 # Spark jobs per run, (default regime, forced pin), on the `graph`
-# fixture. A changed count is a changed physical plan.
+# fixture. A changed count is a changed physical plan. At the default
+# bounds PageRank runs locally: one Arrow collect of all its inputs (their
+# own stages aside: here a range and a checkpoint have none), and no job
+# for its answer.
 JOBS = {
-    "pagerank": (63, 63),
-    "pagerank_batch_1": (66, 66),
-    "pagerank_batch_3": (68, 68),
-    "pagerank_batch_65": (129, 129),
+    "pagerank": (1, 63),
+    "pagerank_batch_1": (1, 66),
+    "pagerank_batch_3": (1, 68),
+    "pagerank_batch_65": (1, 129),
     "bipartite_hits": (76, 104),
     "shortest_paths": (39, 41),
     "weighted_shortest_paths": (19, 21),
@@ -79,6 +86,10 @@ JOBS = {
 # one of its stages either as a job of its own or inside the next job,
 # by timing (ten runs of each regime read 75-78 and 102-105)
 JOB_SLACK = {"bipartite_hits": 2}
+# Spark jobs of a PageRank run with the local bound forced to -1: the
+# Spark loop on its checkpoint branch
+SPARK_JOBS = {"pagerank": 63, "pagerank_batch_1": 66,
+              "pagerank_batch_3": 68, "pagerank_batch_65": 129}
 
 
 @pytest.fixture(scope="module")
@@ -111,23 +122,104 @@ def test_iterative_loop_leaves_no_cache(spark, monkeypatch, graph, entry,
     monkeypatch.setattr(superstep, "_pin_for_iteration", counted)
     v, e, landmarks = graph
 
-    def run(regime: int):
+    def run(want: int):
         pins.clear()
         with _job_group(spark) as jobs:
             answer = _assert_leaves_no_cache(
                 spark, lambda: ENTRIES[entry](spark, v, e, landmarks))
             n_jobs = len(jobs())
-        want, slack = JOBS[entry][regime], JOB_SLACK.get(entry, 0)
-        assert abs(n_jobs - want) <= slack, (regime, n_jobs, want)
+        slack = JOB_SLACK.get(entry, 0)
+        assert abs(n_jobs - want) <= slack, (n_jobs, want)
         return answer
 
-    default = run(0)
+    default = run(JOBS[entry][0])
     assert bool(pins) == (entry == "label_propagation"), pins
+    monkeypatch.setattr(superstep, "LOCAL_EDGE_ROWS", -1)
     if forced_pin:
         monkeypatch.setattr(superstep, "_EDGE_PIN_ROWS", -1)
-        forced = run(1)
+        forced = run(JOBS[entry][1])
         assert pins, "the forced regime pinned nothing"
         _assert_same_answer(_canonical(default), _canonical(forced))
+    elif entry in SPARK_JOBS:
+        spark_loop = run(SPARK_JOBS[entry])
+        assert not pins
+        _assert_same_answer(_canonical(default), _canonical(spark_loop))
+
+
+def test_pagerank_local_regime_matches_spark_loop(spark, monkeypatch):
+    """PageRank's driver-local kernel against the Spark loop (the local
+    bound forced to -1) on string ids with every case the kernel encodes:
+    sinks, a vertex whose only out-edge leaves the vertex set (no sink),
+    an edge from a non-vertex, a duplicated edge; 65 keys (two Spark
+    tiles) with an all-zero key, a key whose only id is no vertex and an
+    id listed twice; init_ranks that miss vertices and list a non-vertex.
+    Answers and iteration counts agree (floats within 1e-12), and a local
+    call starts one Spark job, the collect of all its inputs. A null in
+    an edge column, or inputs one row over the bound, run the Spark loop;
+    the bound is inclusive."""
+    ids = [f"v{i:02d}" for i in range(12)]
+    verts = spark.createDataFrame([(i,) for i in ids], "id string")
+    pairs = ([(i, (i + 1) % 10) for i in range(10)]
+             + [(i, (i * 3 + 2) % 10) for i in range(0, 10, 2)]
+             + [(2, 11), (7, 11)])
+    edges = spark.createDataFrame(
+        [(ids[a], ids[b], (a + b) % 4 / 4 + 0.1) for a, b in pairs]
+        + [(ids[10], "x99", 1.0), ("y00", ids[5], 1.0),
+           (ids[1], ids[2], 0.3)],
+        "src string, dst string, weight double")
+    pers = spark.createDataFrame(
+        [(k, ids[k % 12], 1.0) for k in range(62)]
+        + [(k, ids[k * 5 % 12], 0.5) for k in range(1, 62, 2)]
+        + [(62, "z00", 1.0), (63, ids[3], 2.0), (63, ids[3], 0.7),
+           (63, ids[4], 1.0), (64, ids[0], 0.0)],
+        "key long, id string, p double")
+    init = spark.createDataFrame(
+        [(ids[i], 0.05 + i / 100) for i in range(0, 12, 2)]
+        + [("w00", 0.5)], "id string, rank double")
+    seeds = pers.filter("key = 63").select("id", "p")
+    calls = []
+
+    def counted(*a, _loop=pr._pagerank_batch_blocked, **kw):
+        calls.append(a[4])
+        return _loop(*a, **kw)
+    monkeypatch.setattr(pr, "_pagerank_batch_blocked", counted)
+
+    def run(want_jobs: int | None):
+        with _job_group(spark) as jobs:
+            batch = _assert_leaves_no_cache(spark, lambda: pr.pagerank_batch(
+                verts, edges, pers, tol=1e-4, max_iter=9).collect())
+            assert want_jobs is None or len(jobs()) == want_jobs
+        with _job_group(spark) as jobs:
+            single, iters = _assert_leaves_no_cache(spark, single_run)
+            assert want_jobs is None or len(jobs()) == want_jobs
+        return _canonical(batch), _canonical(single), iters
+
+    def single_run():
+        ranks, iters = pr.pagerank(verts, edges, personalization=seeds,
+                                   init_ranks=init, tol=1e-6,
+                                   with_iterations=True)
+        return ranks.collect(), iters
+
+    local = run(1)
+    assert calls == []
+    monkeypatch.setattr(superstep, "LOCAL_EDGE_ROWS", -1)
+    spark_loop = run(None)
+    assert [len(keys) for keys in calls] == [64, 1, 1]
+    assert len(local[0]) == 65 * 12
+    _assert_same_answer(local, spark_loop)
+
+    def regime(edge_frame, bound: int) -> str:
+        calls.clear()
+        monkeypatch.setattr(superstep, "LOCAL_EDGE_ROWS", bound)
+        pr.pagerank(verts, edge_frame, max_iter=1).collect()
+        return "spark" if calls else "local"
+
+    # 20 edges and 12 vertices; the answer has 12 rows
+    assert regime(edges, 32) == "local"
+    assert regime(edges, 31) == "spark"
+    with_null = edges.unionByName(spark.createDataFrame(
+        [(ids[0], None, 1.0)], "src string, dst string, weight double"))
+    assert regime(with_null, 100) == "spark"
 
 
 REGISTRY_JOBS = ("recommend_batch", "similarity_jaccard_topk",

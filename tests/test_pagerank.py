@@ -1,5 +1,9 @@
 """Golden-output tests for PageRank against the values captured from the
-reference tp1 engine (FIXTURES.md §3)."""
+reference tp1 engine (FIXTURES.md §3).
+
+Every PageRank test runs both regimes in turn (`_regimes`): the
+driver-local kernel the toy graphs take at the default bound, then the
+Spark superstep loop with `superstep.LOCAL_EDGE_ROWS` forced to -1."""
 
 from __future__ import annotations
 
@@ -9,11 +13,21 @@ from pyspark.sql import functions as F
 from graph_database_spark.operators.cooccurrence import (
     cooccurrence_unordered, symmetrize, row_normalized_adjacency,
 )
+from graph_database_spark.graphs import superstep
 from graph_database_spark.graphs.pagerank import pagerank, pagerank_batch
 
 GOLDEN_GLOBAL = {"P1": 0.244544, "P2": 0.463293, "P3": 0.047619, "P4": 0.244544}
 # strategy_breakdown C3 personalized (seeds={P1}) raw ranks normalized by max
 # aren't the raw ranks; raw PPR ranks appear via recommend tests instead.
+
+
+def _regimes(monkeypatch):
+    """Put each PageRank regime in force in turn and yield its name: the
+    driver-local kernel at the default bound, then the Spark superstep
+    loop with the local bound forced to -1."""
+    yield "local"
+    monkeypatch.setattr(superstep, "LOCAL_EDGE_ROWS", -1)
+    yield "spark"
 
 
 @pytest.fixture(scope="module")
@@ -36,13 +50,14 @@ def test_toy_adjacency(toy_graph):
     }
 
 
-def test_global_pagerank_golden(toy_graph):
+def test_global_pagerank_golden(toy_graph, monkeypatch):
     vertices, adj = toy_graph
-    ranks = pagerank(vertices, adj, num_partitions=4)
-    got = {r["id"]: r["rank"] for r in ranks.collect()}
-    assert set(got) == set(GOLDEN_GLOBAL)
-    for k, v in GOLDEN_GLOBAL.items():
-        assert got[k] == pytest.approx(v, abs=1e-4), k
+    for regime in _regimes(monkeypatch):
+        ranks = pagerank(vertices, adj, num_partitions=4)
+        got = {r["id"]: r["rank"] for r in ranks.collect()}
+        assert set(got) == set(GOLDEN_GLOBAL)
+        for k, v in GOLDEN_GLOBAL.items():
+            assert got[k] == pytest.approx(v, abs=1e-4), (regime, k)
 
 
 def _numpy_pagerank(n, edges, p_vec, damping=0.85, iters=30):
@@ -63,9 +78,9 @@ def _numpy_pagerank(n, edges, p_vec, damping=0.85, iters=30):
 
 
 @pytest.mark.parametrize("case", ["sink", "personalized", "two_components"])
-def test_pagerank_matches_numpy_power_iteration(spark, case):
+def test_pagerank_matches_numpy_power_iteration(spark, monkeypatch, case):
     """GraphFrames-independent cross-check on 5-node graphs with sinks and
-    personalization: the Spark loop at fixed 30 iterations must agree with
+    personalization: both regimes at fixed 30 iterations must agree with
     a dense numpy power iteration to 1e-8."""
     n = 5
     ids = list(range(n))
@@ -85,11 +100,13 @@ def test_pagerank_matches_numpy_power_iteration(spark, case):
     want = _numpy_pagerank(n, edges, p_vec)
     vertices = spark.createDataFrame([(i,) for i in ids], ["id"])
     edf = spark.createDataFrame(edges, ["src", "dst", "weight"])
-    got = {r["id"]: r["rank"] for r in
-           pagerank(vertices, edf, personalization=pers,
-                    tol=-1.0, max_iter=30, num_partitions=4).collect()}
-    for i in ids:
-        assert got[i] == pytest.approx(want[i], abs=1e-8), (case, i)
+    for regime in _regimes(monkeypatch):
+        got = {r["id"]: r["rank"] for r in
+               pagerank(vertices, edf, personalization=pers,
+                        tol=-1.0, max_iter=30, num_partitions=4).collect()}
+        for i in ids:
+            assert got[i] == pytest.approx(want[i], abs=1e-8), \
+                (regime, case, i)
 
 
 def test_bipartite_hits_matches_numpy(spark):
@@ -126,23 +143,26 @@ def test_bipartite_hits_matches_numpy(spark):
     assert got[("authority", 1)] > got[("authority", 3)]
 
 
-def test_pagerank_batch_matches_single(spark, toy_graph):
+def test_pagerank_batch_matches_single(spark, toy_graph, monkeypatch):
     vertices, adj = toy_graph
     # personalized on seeds {P1} (customer C3's seed set)
     pers = spark.createDataFrame([("c", "P1", 1.0)], ["key", "id", "p"])
-    single = pagerank(
-        vertices, adj,
-        personalization=spark.createDataFrame([("P1", 1.0)], ["id", "p"]),
-        num_partitions=4)
-    batch = pagerank_batch(vertices, adj, pers, num_partitions=4)
-    s = {r["id"]: r["rank"] for r in single.collect()}
-    b = {r["id"]: r["rank"] for r in batch.filter(F.col("key") == "c").collect()}
-    assert set(s) == set(b)
-    for k in s:
-        assert b[k] == pytest.approx(s[k], abs=1e-9), k
+    for regime in _regimes(monkeypatch):
+        single = pagerank(
+            vertices, adj,
+            personalization=spark.createDataFrame([("P1", 1.0)],
+                                                  ["id", "p"]),
+            num_partitions=4)
+        batch = pagerank_batch(vertices, adj, pers, num_partitions=4)
+        s = {r["id"]: r["rank"] for r in single.collect()}
+        b = {r["id"]: r["rank"]
+             for r in batch.filter(F.col("key") == "c").collect()}
+        assert set(s) == set(b)
+        for k in s:
+            assert b[k] == pytest.approx(s[k], abs=1e-9), (regime, k)
 
 
-def test_pagerank_warm_start(spark):
+def test_pagerank_warm_start(spark, monkeypatch):
     """Incremental PageRank: after a small edge append, warm-starting from
     yesterday's ranks must (a) reach the SAME fixed point (unique for the
     damped contraction — any init converges to it) and (b) spend
@@ -167,34 +187,36 @@ def test_pagerank_warm_start(spark):
 
     verts = spark.createDataFrame([(i,) for i in range(n)], ["id"])
     e_old, e_new = norm_edges(base), norm_edges(base + extra)
-    prev, _ = pagerank(verts, e_old, tol=1e-6, max_iter=300,
-                       with_iterations=True)
-    prev = prev.localCheckpoint()
-    cold, it_cold = pagerank(verts, e_new, tol=1e-6, max_iter=300,
-                             with_iterations=True)
-    warm, it_warm = pagerank(verts, e_new, tol=1e-6, max_iter=300,
-                             init_ranks=prev, with_iterations=True)
-    assert it_warm <= 0.6 * it_cold, (it_warm, it_cold)
-    c = {r["id"]: r["rank"] for r in cold.collect()}
-    w = {r["id"]: r["rank"] for r in warm.collect()}
-    assert max(abs(c[i] - w[i]) for i in c) < 1e-6
-    # warm-starting from the exact fixed point stops at the first
-    # convergence probe — the floor of the iteration loop
-    _, it_fp = pagerank(verts, e_new, tol=1e-6, max_iter=300,
-                        init_ranks=cold.localCheckpoint(),
-                        with_iterations=True)
-    assert it_fp == 3
+    for regime in _regimes(monkeypatch):
+        prev, _ = pagerank(verts, e_old, tol=1e-6, max_iter=300,
+                           with_iterations=True)
+        prev = prev.localCheckpoint()
+        cold, it_cold = pagerank(verts, e_new, tol=1e-6, max_iter=300,
+                                 with_iterations=True)
+        warm, it_warm = pagerank(verts, e_new, tol=1e-6, max_iter=300,
+                                 init_ranks=prev, with_iterations=True)
+        assert it_warm <= 0.6 * it_cold, (regime, it_warm, it_cold)
+        c = {r["id"]: r["rank"] for r in cold.collect()}
+        w = {r["id"]: r["rank"] for r in warm.collect()}
+        assert max(abs(c[i] - w[i]) for i in c) < 1e-6
+        # warm-starting from the exact fixed point stops at the first
+        # convergence probe — the floor of the iteration loop
+        _, it_fp = pagerank(verts, e_new, tol=1e-6, max_iter=300,
+                            init_ranks=cold.localCheckpoint(),
+                            with_iterations=True)
+        assert it_fp == 3, regime
 
 
-def test_pagerank_zero_iterations(spark):
+def test_pagerank_zero_iterations(spark, monkeypatch):
     """max_iter=0 with with_iterations=True returns (uniform init, 0)
     instead of raising on an unbound loop variable."""
     verts = spark.createDataFrame([(0,), (1,)], ["id"])
     edges = spark.createDataFrame([(0, 1, 1.0)], ["src", "dst", "weight"])
-    out, iters = pagerank(verts, edges, max_iter=0, with_iterations=True)
-    assert iters == 0
-    ranks = {r["id"]: r["rank"] for r in out.collect()}
-    assert ranks == pytest.approx({0: 0.5, 1: 0.5})
+    for regime in _regimes(monkeypatch):
+        out, iters = pagerank(verts, edges, max_iter=0, with_iterations=True)
+        assert iters == 0, regime
+        ranks = {r["id"]: r["rank"] for r in out.collect()}
+        assert ranks == pytest.approx({0: 0.5, 1: 0.5}), regime
 
 
 def test_hits_warm_start(spark):
@@ -308,11 +330,11 @@ def test_pinned_edge_cache_joins_without_edge_exchange_or_sort(spark):
     pinned.unpersist()
 
 
-def test_converged_iteration_count_is_pinned_k9(spark):
+def test_converged_iteration_count_is_pinned_k9(spark, monkeypatch):
     """pagerank_converged_check's oracle unrolls exactly k*=9 steps — a
-    constant of the driver's deterministic sf0.01 corpus. If testdata
-    ever changes vintage, THIS test fails locally before the external
-    hash does, naming the re-measure step."""
+    constant of the driver's deterministic sf0.01 corpus, in both
+    regimes. If testdata ever changes vintage, THIS test fails locally
+    before the external hash does, naming the re-measure step."""
     from pyspark.sql import functions as F
 
     from graph_database_spark.graphs.pagerank import pagerank
@@ -327,11 +349,13 @@ def test_converged_iteration_count_is_pinned_k9(spark):
                                    broadcast_row_sums=True)
     verts = load_table(spark, sf, "part").select(
         F.col("p_partkey").alias("id"))
-    _ranks, k = pagerank(verts, adj, tol=1e-6, max_iter=50,
-                         with_iterations=True)
-    assert k == 9, (
-        f"converged at {k} iterations, oracle unrolls 9 — re-measure k* "
-        "and update _pagerank_unrolled_sql/_ppr_unrolled_sql call sites")
+    for regime in _regimes(monkeypatch):
+        _ranks, k = pagerank(verts, adj, tol=1e-6, max_iter=50,
+                             with_iterations=True)
+        assert k == 9, (
+            f"{regime}: converged at {k} iterations, oracle unrolls 9 — "
+            "re-measure k* and update _pagerank_unrolled_sql/"
+            "_ppr_unrolled_sql call sites")
 
 
 def test_pagerank_submodule_not_shadowed():
@@ -415,7 +439,8 @@ def test_edge_pin_row_bound_does_not_change_pagerank_results(
     pinned-edge branch while the state still broadcasts — the mixed
     shape must produce bit-identical ranks for pagerank and
     pagerank_batch (the prep is semantics-free: same arithmetic,
-    different physical plan)."""
+    different physical plan). The local regime pins nothing at either
+    bound."""
     import pytest as _pytest
 
     from graph_database_spark.graphs import pagerank as pr
@@ -446,14 +471,20 @@ def test_edge_pin_row_bound_does_not_change_pagerank_results(
         return _pin(*a)
     monkeypatch.setattr(ss, "_pin_for_iteration", counted)
 
-    base, base_batch = run()
-    assert pins == []
-    monkeypatch.setattr(ss, "_EDGE_PIN_ROWS", 0)
-    forced, forced_batch = run()
-    # edges on src and p on id, for each of the two runs
-    assert pins == [("src",), ("id",)] * 2
-    assert forced == _pytest.approx(base, abs=0.0)  # bit-identical
-    assert forced_batch == base_batch
+    edge_pin_rows = ss._EDGE_PIN_ROWS
+    for regime in _regimes(monkeypatch):
+        pins.clear()
+        monkeypatch.setattr(ss, "_EDGE_PIN_ROWS", edge_pin_rows)
+        base, base_batch = run()
+        assert pins == []
+        monkeypatch.setattr(ss, "_EDGE_PIN_ROWS", 0)
+        forced, forced_batch = run()
+        # the Spark loop pins edges on src and p on id, for each of the
+        # two runs
+        assert pins == ([] if regime == "local"
+                        else [("src",), ("id",)] * 2), regime
+        assert forced == _pytest.approx(base, abs=0.0)  # bit-identical
+        assert forced_batch == base_batch
 
 
 def _numpy_ppr_probed(n, edges, p_vec, tol, max_iter, damping=0.85):
@@ -478,14 +509,15 @@ def _numpy_ppr_probed(n, edges, p_vec, tol, max_iter, damping=0.85):
 
 @pytest.mark.parametrize("tol,max_iter", [(-1.0, 4), (1e-4, 50)],
                          ids=["fixed", "converged"])
-def test_pagerank_batch_tiles_match_per_key_pagerank(spark, tol, max_iter):
+def test_pagerank_batch_tiles_match_per_key_pagerank(spark, monkeypatch, tol,
+                                                     max_iter):
     """65 keys run as two blocked tiles (64 + 1) on a graph with sinks:
     every key's ranks must equal its own single-key answer to 1e-12 —
     tile membership, the per-key freeze points and the union change
     nothing. Keys 0 and 63 (both ends of the first tile) and 64 (all-zero p, the
     uniform fallback, alone in the second tile) are checked against
     pagerank(personalization=...); all 65 against a dense power
-    iteration with the same probe-and-freeze rule."""
+    iteration with the same probe-and-freeze rule. Both regimes."""
     n = 10
     # vertices 8 and 9 are sinks (in-edges, no out-edges)
     pairs = ([(i, (i + 1) % 8) for i in range(8)]
@@ -500,24 +532,25 @@ def test_pagerank_batch_tiles_match_per_key_pagerank(spark, tol, max_iter):
         + [(k, (k * 7) % n, 0.5) for k in range(64) if k % 2] \
         + [(64, 3, 0.0)]
     pers = spark.createDataFrame(rows, "key long, id long, p double")
-    batch = {(r["key"], r["id"]): r["rank"]
-             for r in pagerank_batch(verts, edges, pers, tol=tol,
-                                     max_iter=max_iter).collect()}
-    assert len(batch) == 65 * n
-    for key in range(65):
-        p_vec = [0.0] * n
-        for k, i, p in rows:
-            if k == key:
-                p_vec[i] += p
-        want = _numpy_ppr_probed(n, edge_rows, p_vec, tol, max_iter)
-        for i in range(n):
-            assert batch[(key, i)] == pytest.approx(want[i], abs=1e-12), \
-                (key, i)
-    for key in (0, 63, 64):
-        single = pagerank(
-            verts, edges, tol=tol, max_iter=max_iter,
-            personalization=pers.filter(F.col("key") == key)
-            .select("id", "p"))
-        for r in single.collect():
-            assert batch[(key, r["id"])] == pytest.approx(
-                r["rank"], abs=1e-12), (key, r["id"])
+    for regime in _regimes(monkeypatch):
+        batch = {(r["key"], r["id"]): r["rank"]
+                 for r in pagerank_batch(verts, edges, pers, tol=tol,
+                                         max_iter=max_iter).collect()}
+        assert len(batch) == 65 * n
+        for key in range(65):
+            p_vec = [0.0] * n
+            for k, i, p in rows:
+                if k == key:
+                    p_vec[i] += p
+            want = _numpy_ppr_probed(n, edge_rows, p_vec, tol, max_iter)
+            for i in range(n):
+                assert batch[(key, i)] == pytest.approx(want[i], abs=1e-12), \
+                    (regime, key, i)
+        for key in (0, 63, 64):
+            single = pagerank(
+                verts, edges, tol=tol, max_iter=max_iter,
+                personalization=pers.filter(F.col("key") == key)
+                .select("id", "p"))
+            for r in single.collect():
+                assert batch[(key, r["id"])] == pytest.approx(
+                    r["rank"], abs=1e-12), (regime, key, r["id"])
