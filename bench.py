@@ -166,12 +166,11 @@ def main() -> None:
     session_mode = os.environ.get("SPARK_GRAFT_BENCH_SESSION", "tuned")
     if session_mode == "driver-default":
         from pyspark.sql import SparkSession
-        from graph_database_spark.session import cpu_count
+        from graph_database_spark.session import cpu_count, driver_memory
         spark = (SparkSession.builder.master(f"local[{cpu_count()}]")
                  .appName("gds-bench-driver-default")
                  .config("spark.sql.session.timeZone", "UTC")
-                 .config("spark.driver.memory",
-                         os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+                 .config("spark.driver.memory", driver_memory())
                  .config("spark.ui.enabled", "false")
                  .getOrCreate())
     elif session_mode == "tuned":

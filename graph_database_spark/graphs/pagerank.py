@@ -13,13 +13,15 @@ Source: tp1/knoledge_graphs/recommendation.py:150-188 —
                                                 own loop, not an import)
 - converge on L1 delta < tol (1e-6) or max_iter (50); d = 0.85 (`:33-39`).
 
-Two regimes serve both entry points (`pagerank()`, `pagerank_batch()`),
-with the same arithmetic:
+Both entry points (`pagerank()`, `pagerank_batch()`) are thin wrappers
+over one body (`_pagerank`), which builds the answer's schema once and
+picks one of two regimes with the same arithmetic:
 
 - DRIVER-LOCAL (`_LocalGraph`, the superstep module's local regime):
   the edges, the vertex ids, the personalization and `init_ranks` are
-  collected once per call through Arrow, all in one query, ids are
-  encoded against the sorted vertex ids, and each key steps as
+  collected in the program's one bounded collect
+  (`superstep.local_tables`, at most `LOCAL_EDGE_ROWS` rows together),
+  ids are encoded against the sorted vertex ids, and each key steps as
   `np.bincount(dst, weights=w·r[src])`; the answer comes back through
   `createDataFrame`. It falls back to the Spark loop when the inputs
   hold more than `LOCAL_EDGE_ROWS` rows together or a null, when the
@@ -85,25 +87,8 @@ def pagerank(vertices: DataFrame, edges: DataFrame,
     if personalization is not None:
         personalization = personalization.select(
             F.lit(0).alias("key"), "id", "p")
-    local = _LocalGraph.collect(vertices, edges, personalization,
-                                init_ranks)
-    if local is not None:
-        n = local.n
-    else:
-        verts = vertices.select("id").distinct()
-        n = verts.count()
-    if n == 0:
-        out, iters = (vertices.select("id").distinct()
-                      .withColumn("rank", F.lit(0.0))), 0
-    elif local is not None:
-        out, iters = local.run(damping, tol, max_iter)
-    else:
-        if personalization is None:
-            personalization = verts.select(
-                F.lit(0).alias("key"), "id", F.lit(1.0).alias("p"))
-        out, iters = _pagerank_batch_blocked(
-            verts, n, edges, personalization, [0],
-            damping, tol, max_iter, num_partitions, init_ranks)
+    out, iters = _pagerank(vertices, edges, personalization, [0], damping,
+                           tol, max_iter, num_partitions, init_ranks)
     out = out.select("id", "rank")
     return (out, iters) if with_iterations else out
 
@@ -140,28 +125,56 @@ def pagerank_batch(vertices: DataFrame, edges: DataFrame,
     Keys run in sorted tiles of at most _BLOCKED_KEYS_MAX through the
     blocked loop; the tiles' results are unioned.
     """
-    local = _LocalGraph.collect(vertices, edges, personalization)
+    return _pagerank(vertices, edges, personalization, None, damping, tol,
+                     max_iter, num_partitions)[0]
+
+
+def _pagerank(vertices: DataFrame, edges: DataFrame,
+              personalization: DataFrame | None, key_list: list | None,
+              damping: float, tol: float, max_iter: int,
+              num_partitions: int | None,
+              init_ranks: DataFrame | None = None) -> tuple[DataFrame, int]:
+    """The body of both entry points: ((key, id, rank), iterations_run).
+    It builds the answer's schema (the key type of `personalization`, an
+    int without one; the id type of `vertices`), which both regimes
+    return, then runs the driver-local kernel when `_LocalGraph.collect`
+    admits the inputs and the blocked loop otherwise, in tiles of at most
+    _BLOCKED_KEYS_MAX keys. `key_list` is the sorted keys when the caller
+    knows them, else the Spark regime collects them. No personalization
+    is the uniform one."""
+    key_type = (personalization.schema["key"].dataType
+                if personalization is not None else IntegerType())
+    schema = StructType([StructField("key", key_type),
+                         StructField("id", vertices.schema["id"].dataType),
+                         StructField("rank", DoubleType())])
+    local = _LocalGraph.collect(vertices, edges, schema, personalization,
+                                init_ranks)
     if local is not None:
         n, key_list = local.n, local.keys
     else:
         verts = vertices.select("id").distinct()
         n = verts.count()
-        key_list = [r["key"] for r in
-                    personalization.select("key").distinct().orderBy("key")
-                    .collect()]
+        if key_list is None:
+            key_list = [r["key"] for r in
+                        personalization.select("key").distinct()
+                        .orderBy("key").collect()]
     if n == 0 or not len(key_list):
-        return personalization.select("key").limit(0) \
-            .withColumn("id", F.lit(None).cast("long")) \
-            .withColumn("rank", F.lit(0.0))
+        return vertices.sparkSession.createDataFrame([], schema), 0
     if local is not None:
-        return local.run(damping, tol, max_iter)[0]
+        return local.run(damping, tol, max_iter)
+    if personalization is None:
+        personalization = verts.select(
+            F.lit(0).alias("key"), "id", F.lit(1.0).alias("p"))
     tiles = [
         _pagerank_batch_blocked(
             verts, n, edges, personalization,
             key_list[i:i + _BLOCKED_KEYS_MAX],
-            damping, tol, max_iter, num_partitions)[0]
+            damping, tol, max_iter, num_partitions, init_ranks)
         for i in range(0, len(key_list), _BLOCKED_KEYS_MAX)]
-    return reduce(DataFrame.unionByName, tiles)
+    # a key literal types itself by its value (a long key of 32-bit
+    # values would come back int), so the answer takes the schema's types
+    return (reduce(DataFrame.unionByName, [out for out, _ in tiles])
+            .to(schema), max(iters for _, iters in tiles))
 
 
 def _pagerank_batch_blocked(verts: DataFrame, n: int, edges: DataFrame,
@@ -339,18 +352,18 @@ class _LocalGraph:
 
     @classmethod
     def collect(cls, vertices: DataFrame, edges: DataFrame,
+                schema: StructType,
                 personalization: DataFrame | None = None,
                 init_ranks: DataFrame | None = None) -> _LocalGraph | None:
-        """Collect the inputs through Arrow in one query and encode them,
-        or None when the Spark loop must run instead: the bound admits no
-        row, an id or key type whose equality Arrow need not share with
-        Spark (floating point, or id types that differ between the
-        frames), a decimal weight, p or rank, inputs of more than
-        LOCAL_EDGE_ROWS rows together, a null, a vertex listed twice in
-        init_ranks (the Spark join would repeat its row), or an answer of
-        more than LOCAL_EDGE_ROWS rows."""
-        if not local_regime(0):
-            return None
+        """Collect the inputs in the one bounded collect
+        (`superstep.local_tables`) and encode them for an answer of
+        `schema`, or None when the Spark loop must run instead: an id or
+        key type whose equality Arrow need not share with Spark (floating
+        point, or id types that differ between the frames), a decimal
+        weight, p or rank, inputs of more than LOCAL_EDGE_ROWS rows
+        together, a null, a vertex listed twice in init_ranks (the Spark
+        join would repeat its row), or an answer of more than
+        LOCAL_EDGE_ROWS rows."""
         # the frames share the edges' columns, so the one collect is no
         # wider than the edges (plus `key`): every id rides in `src`,
         # p and the initial ranks in `weight`
@@ -365,20 +378,14 @@ class _LocalGraph:
         types = [(f.name, f.dataType)
                  for df in frames.values() for f in df.schema]
         id_kinds = {_id_kind(t) for c, t in types if c in ("src", "dst")}
-        key_type = (personalization.schema["key"].dataType
-                    if personalization is not None else IntegerType())
         if (len(id_kinds) != 1 or None in id_kinds
-                or _id_kind(key_type) is None
+                or _id_kind(schema["key"].dataType) is None
                 or not all(_is_real(t) for c, t in types
                            if c == "weight")):
             return None
         tables = local_tables(frames)
         if tables is None:
             return None
-        schema = StructType([StructField("key", key_type),
-                             StructField("id",
-                                         vertices.schema["id"].dataType),
-                             StructField("rank", DoubleType())])
         return cls._encode(vertices.sparkSession, schema, tables,
                            id_kinds.pop() == "integral")
 

@@ -34,7 +34,9 @@ kernel on the driver and hands its answer back with `createDataFrame`:
 the inputs' own stages and one collect, no job per superstep. Past the
 bound, or on a null, the loop runs in Spark as above, its plans
 unchanged. PageRank is the only loop with a local branch so far
-(`pagerank._LocalGraph`).
+(`pagerank._LocalGraph`). `local_tables` is the program's only bounded
+Arrow collect and `LOCAL_EDGE_ROWS` its only row bound: the serving
+index (`recommend.service.incidence_index`) is collected through it too.
 """
 
 from __future__ import annotations
@@ -99,25 +101,38 @@ _BROADCAST_STATE_ROWS = 5_000_000
 # (bench_results/ab/ab_batchppr_sf1_r13.json).
 _EDGE_PIN_ROWS = 4_000_000
 
-# Rows up to which a loop runs on the driver (the local regime, today
-# PageRank's): it bounds the one Arrow collect of the loop's inputs, all
-# frames together (the edges are nearly all of it), and the rows of its
-# answer. The bound is the largest input size measured by
-# scripts/ab_local_pagerank.py at which the local regime used at most
-# half the Spark loop's CPU, on ppr_fixed20_batch's inputs (3 keys, 20
-# fixed iterations, adjacency built inside each call). On a 4-vCPU host
-# with perfbench's 1 GB driver heap (bench_results/ab/
-# ab_local_pagerank.json) it used 2.8 / 2.1 / 3.2 / 18.9 s of CPU against
-# the Spark loop's 16.2 / 12.6 / 12.6 / 53.0 s on the batch_registry
-# tables and sf0.001 / sf0.01 / sf0.1 (18.9k / 18.1k / 234k / 2.41M input
-# rows), 2.8× less at the largest size, every rank within 1e-12. At the
-# bound the collect is 83 MB of Arrow (src, dst, weight, key and a frame
-# tag per row), which the JVM holds as one task's result, a few copies
-# at once, inside the 1 GB heap: sf0.1 ran there in every round, after
-# the Spark loop's runs too, where a collect with a column per input
-# column (about 130 MB) ran out of heap. Python holds the table once
-# more, plus about 95 MB of int64 codes, weights and one step's
-# temporaries; an answer at the bound is another 55 MB each way.
+# Rows up to which the program works on the driver: the one bound of the
+# one driver collect (`local_tables`), for every frame of the collect
+# together, and of a local kernel's answer. Two kernels read it, and it
+# is measured for both, on a 4-vCPU host:
+# - PageRank (the local regime, today the only loop with one): the
+#   largest input size measured by scripts/ab_local_pagerank.py at which
+#   the local regime used at most half the Spark loop's CPU, on
+#   ppr_fixed20_batch's inputs (3 keys, 20 fixed iterations, adjacency
+#   built inside each call). With perfbench's 1 GB driver heap
+#   (bench_results/ab/ab_local_pagerank.json) it used 2.8 / 2.1 / 3.2 /
+#   18.9 s of CPU against the Spark loop's 16.2 / 12.6 / 12.6 / 53.0 s on
+#   the batch_registry tables and sf0.001 / sf0.01 / sf0.1 (18.9k / 18.1k
+#   / 234k / 2.41M input rows), 2.8× less at the largest size, every rank
+#   within 1e-12.
+# - The serving index (`recommend.service.incidence_index`): a
+#   per-customer `/recs` similarity request costs its kernel
+#   O(|incidence|), and scripts/ab_cf_index.py (bench_results/ab/
+#   ab_cf_index.json) timed it against the Spark plan it replaces at
+#   0.20 / 2.6 / 26.8 / 25.3 ms against 620 / 617 / 2654 / 2936 ms for
+#   10k / 200k / 2M / 2,412,143 incidence rows: at least 10× faster at
+#   every size, 116× at this bound (an earlier run read 147× at 2M).
+# Memory: the JVM holds the collect as ONE task's result, a few copies at
+# once, since the limited Arrow collect plans as a CollectLimit that
+# gathers every row into one task; so the bound counts the rows of all the
+# frames together, never per frame. At the bound PageRank's collect is
+# 83 MB of Arrow (src, dst, weight, key and a frame tag per row), inside
+# the 1 GB heap: sf0.1 ran there in every round, after the Spark loop's
+# runs too, where a collect with a column per input column (about 130
+# MB) ran out of heap. Python holds the table once more, plus about 95
+# MB of int64 codes, weights and one step's temporaries; an answer at
+# the bound is another 55 MB each way. The index at the bound keeps two
+# int64 code arrays of the incidence, 37 MB at 2.41M rows.
 LOCAL_EDGE_ROWS = 2_412_143
 
 
@@ -149,12 +164,16 @@ def local_regime(rows: int) -> bool:
 
 def local_tables(frames: dict[str, DataFrame]
                  ) -> dict[str, pa.Table] | None:
-    """The local regime's collect: every frame in ONE Arrow collect, a
-    tagged `unionByName` (missing columns null), so the frames' upstream
-    stages run as the jobs of one query; split back into one table of its
-    own columns per frame. None when the loop must run in Spark instead:
-    more than LOCAL_EDGE_ROWS rows together, or a null in any frame's
-    own columns. Same-named columns take their common type."""
+    """The program's one bounded driver collect, shared by the local
+    regime's kernels and the serving index (`recommend.service`): every
+    frame in ONE Arrow collect, a tagged `unionByName` (missing columns
+    null), so the frames' upstream stages run as the jobs of one query;
+    split back into one table of its own columns per frame. None when
+    the caller must run in Spark instead: more than LOCAL_EDGE_ROWS rows
+    together, or a null in any frame's own columns. A bound that admits
+    no row runs no query. Same-named columns take their common type."""
+    if not local_regime(0):
+        return None
     tagged = [df.withColumn("__frame", F.lit(i))
               for i, df in enumerate(frames.values())]
     union = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True),

@@ -454,53 +454,44 @@ FROM ppr WHERE iter = {steps}
 """
 
 
+def _focal_ppr(spark: SparkSession, sf_dir: str, **loop) -> DataFrame:
+    """Batch PPR of the three lowest-keyed ordering customers over the
+    ordered co-occurrence adjacency, each seeded uniformly on its
+    incidence: `pagerank_batch(..., **loop)` as (customer_id, product_id,
+    rank to 6 dp). `pagerank_batch` is looked up at call time, so a
+    rebinding of the module attribute (a tracer) sees every call."""
+    from ..graphs.pagerank import pagerank_batch
+    items = _items(spark, sf_dir)
+    adj = row_normalized_adjacency(cooccurrence_ordered(items),
+                                   broadcast_row_sums=True)
+    vertices = load_table(spark, sf_dir, "part").select(
+        F.col("p_partkey").alias("id"))
+    inc = incidence_pairs(_order_customer_pairs(spark, sf_dir))
+    focal = (load_table(spark, sf_dir, "orders")
+             .select("o_custkey").distinct()
+             .orderBy("o_custkey").limit(3))
+    pers = (inc.join(F.broadcast(focal),
+                     inc["customer_id"] == focal["o_custkey"])
+            .select(F.col("customer_id").alias("key"),
+                    F.col("product_id").alias("id"),
+                    F.lit(1.0).alias("p")))
+    ranks = pagerank_batch(vertices, adj, pers, **loop)
+    return ranks.select(F.col("key").alias("customer_id"),
+                        F.col("id").alias("product_id"),
+                        F.round("rank", 6).alias("rank"))
+
+
 # The REAL tol-converged batch path (pagerank_batch defaults: tol=1e-6,
 # max_iter=50) against the oracle unrolled to the measured k* = 9 —
 # identical computation to ppr_converged_check.
 @register("ppr_batch_focal", _ppr_unrolled_sql(9))
 def q_ppr_batch_focal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..graphs.pagerank import pagerank_batch
-    items = _items(spark, sf_dir)
-    adj = row_normalized_adjacency(cooccurrence_ordered(items),
-                                   broadcast_row_sums=True)
-    vertices = load_table(spark, sf_dir, "part").select(
-        F.col("p_partkey").alias("id"))
-    inc = incidence_pairs(_order_customer_pairs(spark, sf_dir))
-    focal = (load_table(spark, sf_dir, "orders")
-             .select("o_custkey").distinct()
-             .orderBy("o_custkey").limit(3))
-    pers = (inc.join(F.broadcast(focal),
-                     inc["customer_id"] == focal["o_custkey"])
-            .select(F.col("customer_id").alias("key"),
-                    F.col("product_id").alias("id"),
-                    F.lit(1.0).alias("p")))
-    ranks = pagerank_batch(vertices, adj, pers)
-    return ranks.select(F.col("key").alias("customer_id"),
-                        F.col("id").alias("product_id"),
-                        F.round("rank", 6).alias("rank"))
+    return _focal_ppr(spark, sf_dir)
 
 
 @register("ppr_fixed20_batch", _ppr_unrolled_sql(20))
 def q_ppr_fixed20_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..graphs.pagerank import pagerank_batch
-    items = _items(spark, sf_dir)
-    adj = row_normalized_adjacency(cooccurrence_ordered(items),
-                                   broadcast_row_sums=True)
-    vertices = load_table(spark, sf_dir, "part").select(
-        F.col("p_partkey").alias("id"))
-    inc = incidence_pairs(_order_customer_pairs(spark, sf_dir))
-    focal = (load_table(spark, sf_dir, "orders")
-             .select("o_custkey").distinct()
-             .orderBy("o_custkey").limit(3))
-    pers = (inc.join(F.broadcast(focal),
-                     inc["customer_id"] == focal["o_custkey"])
-            .select(F.col("customer_id").alias("key"),
-                    F.col("product_id").alias("id"),
-                    F.lit(1.0).alias("p")))
-    ranks = pagerank_batch(vertices, adj, pers, tol=-1.0, max_iter=20)
-    return ranks.select(F.col("key").alias("customer_id"),
-                        F.col("id").alias("product_id"),
-                        F.round("rank", 6).alias("rank"))
+    return _focal_ppr(spark, sf_dir, tol=-1.0, max_iter=20)
 
 
 # Tol-converged batch PPR with an EXTERNAL value check (VERDICT r6 #2):
@@ -513,25 +504,7 @@ def q_ppr_fixed20_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hash-mismatches. k* is a constant of the driver's deterministic corpus.
 @register("ppr_converged_check", _ppr_unrolled_sql(9))
 def q_ppr_converged_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..graphs.pagerank import pagerank_batch
-    items = _items(spark, sf_dir)
-    adj = row_normalized_adjacency(cooccurrence_ordered(items),
-                                   broadcast_row_sums=True)
-    vertices = load_table(spark, sf_dir, "part").select(
-        F.col("p_partkey").alias("id"))
-    inc = incidence_pairs(_order_customer_pairs(spark, sf_dir))
-    focal = (load_table(spark, sf_dir, "orders")
-             .select("o_custkey").distinct()
-             .orderBy("o_custkey").limit(3))
-    pers = (inc.join(F.broadcast(focal),
-                     inc["customer_id"] == focal["o_custkey"])
-            .select(F.col("customer_id").alias("key"),
-                    F.col("product_id").alias("id"),
-                    F.lit(1.0).alias("p")))
-    ranks = pagerank_batch(vertices, adj, pers, tol=1e-6, max_iter=50)
-    return ranks.select(F.col("key").alias("customer_id"),
-                        F.col("id").alias("product_id"),
-                        F.round("rank", 6).alias("rank"))
+    return _focal_ppr(spark, sf_dir, tol=1e-6, max_iter=50)
 
 
 # ---------------------------------------------------------------------------

@@ -365,6 +365,38 @@ def q_cooccurrence_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.sum(F.col("a.qty") * F.col("b.qty")).alias("qty_weight")))
 
 
+def _focal_strategy_scores(spark: SparkSession, sf_dir: str
+                           ) -> tuple[DataFrame, DataFrame]:
+    """The focal customer's two closed-form strategy score maps, each
+    (product_id, sc) over the products outside its seeds: seed-expansion
+    co-occurrence (J4) and summed Jaccard (J5), the `cooc` and `sim`
+    CTEs of both queries' oracles. Seeds are broadcast into both
+    branches, and each ends in a product-sized aggregate."""
+    inc = incidence_pairs(_order_customer_pairs(spark, sf_dir)) \
+        .localCheckpoint()
+    focal = _focal_customer(spark, sf_dir)
+    seeds = (inc.filter(F.col("customer_id") == F.lit(focal))
+             .select("product_id"))
+    cooc = seed_expansion_scores_from_items(_items(spark, sf_dir), seeds) \
+        .select("product_id", F.col("score").cast("double").alias("sc"))
+    sizes = inc.groupBy("product_id").agg(F.count(F.lit(1)).alias("n"))
+    s_inc = (inc.join(F.broadcast(seeds.withColumnRenamed(
+                 "product_id", "sp")), inc["product_id"] == F.col("sp"))
+             .select("customer_id", "sp"))
+    c_inc = (inc.join(F.broadcast(seeds), "product_id", "left_anti")
+             .select("customer_id", F.col("product_id").alias("cp")))
+    sim = (s_inc.join(c_inc, "customer_id")
+           .groupBy("sp", "cp").agg(F.count(F.lit(1)).alias("i"))
+           .join(F.broadcast(sizes.withColumnRenamed("product_id", "sp")
+                             .withColumnRenamed("n", "ns")), "sp")
+           .join(F.broadcast(sizes.withColumnRenamed("product_id", "cp")
+                             .withColumnRenamed("n", "nc")), "cp")
+           .groupBy(F.col("cp").alias("product_id"))
+           .agg(F.sum(F.col("i").cast("double")
+                      / (F.col("ns") + F.col("nc") - F.col("i"))).alias("sc")))
+    return cooc, sim
+
+
 @register("recommend_focal_blend", f"""
 WITH base AS ({_SQL_ITEMS}),
 inc AS ({_SQL_INC}),
@@ -420,31 +452,7 @@ def q_recommend_focal_blend(spark: SparkSession, sf_dir: str) -> DataFrame:
     in a product-sized aggregate; normalization is a broadcast 1-row max
     crossJoin; blend is a full outer join of two product-sized frames —
     nothing fact-sized crosses a shuffle after the strategy aggregates."""
-    inc = incidence_pairs(_order_customer_pairs(spark, sf_dir)) \
-        .localCheckpoint()
-    focal = _focal_customer(spark, sf_dir)
-    seeds = (inc.filter(F.col("customer_id") == F.lit(focal))
-             .select("product_id"))
-    cooc = seed_expansion_scores_from_items(_items(spark, sf_dir), seeds) \
-        .select("product_id", F.col("score").cast("double").alias("sc"))
-
-    sizes = inc.groupBy("product_id").agg(F.count(F.lit(1)).alias("n"))
-    s_inc = (inc.join(F.broadcast(seeds.withColumnRenamed(
-                 "product_id", "sp")), inc["product_id"] == F.col("sp"))
-             .select("customer_id", "sp"))
-    c_inc = (inc.join(F.broadcast(seeds), "product_id", "left_anti")
-             .select("customer_id", F.col("product_id").alias("cp")))
-    inter = (s_inc.join(c_inc, "customer_id")
-             .groupBy("sp", "cp").agg(F.count(F.lit(1)).alias("i")))
-    sim = (inter
-           .join(F.broadcast(sizes.withColumnRenamed("product_id", "sp")
-                             .withColumnRenamed("n", "ns")), "sp")
-           .join(F.broadcast(sizes.withColumnRenamed("product_id", "cp")
-                             .withColumnRenamed("n", "nc")), "cp")
-           .groupBy(F.col("cp").alias("product_id"))
-           .agg(F.sum(F.col("i").cast("double")
-                      / (F.col("ns") + F.col("nc") - F.col("i"))).alias("sc")))
-
+    cooc, sim = _focal_strategy_scores(spark, sf_dir)
     mx = (cooc.agg(F.max("sc").alias("mc"))
           .crossJoin(sim.agg(F.max("sc").alias("ms"))))
     blended = (
@@ -510,28 +518,7 @@ def q_strategy_breakdown_focal(spark: SparkSession, sf_dir: str) -> DataFrame:
     strategy has its fixed-iteration oracle twin). Same branch plans as
     recommend_focal_blend minus normalization/blending; per-strategy
     top-10 is one WindowGroupLimit pass over the union."""
-    inc = incidence_pairs(_order_customer_pairs(spark, sf_dir)) \
-        .localCheckpoint()
-    focal = _focal_customer(spark, sf_dir)
-    seeds = (inc.filter(F.col("customer_id") == F.lit(focal))
-             .select("product_id"))
-    cooc = seed_expansion_scores_from_items(_items(spark, sf_dir), seeds) \
-        .select("product_id", F.col("score").cast("double").alias("sc"))
-    sizes = inc.groupBy("product_id").agg(F.count(F.lit(1)).alias("n"))
-    s_inc = (inc.join(F.broadcast(seeds.withColumnRenamed(
-                 "product_id", "sp")), inc["product_id"] == F.col("sp"))
-             .select("customer_id", "sp"))
-    c_inc = (inc.join(F.broadcast(seeds), "product_id", "left_anti")
-             .select("customer_id", F.col("product_id").alias("cp")))
-    sim = (s_inc.join(c_inc, "customer_id")
-           .groupBy("sp", "cp").agg(F.count(F.lit(1)).alias("i"))
-           .join(F.broadcast(sizes.withColumnRenamed("product_id", "sp")
-                             .withColumnRenamed("n", "ns")), "sp")
-           .join(F.broadcast(sizes.withColumnRenamed("product_id", "cp")
-                             .withColumnRenamed("n", "nc")), "cp")
-           .groupBy(F.col("cp").alias("product_id"))
-           .agg(F.sum(F.col("i").cast("double")
-                      / (F.col("ns") + F.col("nc") - F.col("i"))).alias("sc")))
+    cooc, sim = _focal_strategy_scores(spark, sf_dir)
     both = (cooc.select(F.lit("co_occurrence").alias("strategy"),
                         "product_id", "sc")
             .unionByName(sim.select(F.lit("similarity").alias("strategy"),

@@ -10,14 +10,15 @@ route handlers are thin JSON adapters: every decision (strategy dispatch,
 a real FastAPI app is a mechanical re-decoration.
 
 `/recs` is answered from the service's one index: the cached incidence
-and the order lines, collected once at build, each up to
-`service.INCIDENCE_ROWS` rows. The answers that depend only on `limit`
-(`co_occurrence`, `similarity` without a customer, the `pagerank` stub)
-slice rankings counted at build, and per-customer `similarity` runs a
+and the order lines, collected once at build in the program's one
+bounded collect (`graphs.superstep.local_tables`), up to
+`superstep.LOCAL_EDGE_ROWS` rows together. The answers that depend
+only on `limit` (`co_occurrence`, `similarity` without a customer, the
+`pagerank` stub) slice rankings counted at build, and per-customer `similarity` runs a
 numpy kernel over the incidence codes, so none of these requests runs a
 Spark job; `pagerank_exact` runs PageRank once, on first use, and slices
 the kept ranking, with or without the index. All reflect the tables as
-of service build. The one fallback for the other strategies, when a
+of service build. The one fallback for the other strategies, when the
 collect is over the bound or has a null or non-string key, is a Spark
 plan per request. Both `/customers` routes still run
 Spark plans per request: a demo/test surface, not the 100 TB path, where

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, Row, SparkSession, functions as F
 from pyspark.sql.types import StringType
 
 from ..graphs.pagerank import pagerank
+from ..graphs.superstep import local_tables
 from ..operators.cooccurrence import (
     cooccurrence_ordered, cooccurrence_top_partners, row_normalized_adjacency,
 )
@@ -49,22 +50,6 @@ VALID_STRATEGIES = ("co_occurrence", "similarity", "pagerank", "pagerank_exact")
 def clamp_top_n(top_n: int, lo: int = 1, hi: int = 10) -> int:
     """tp1's Query(3, ge=1, le=10) bound (api.py:66,82) as a hard clamp."""
     return max(lo, min(hi, top_n))
-
-
-#: Rows up to which the service keeps its driver-side index; it bounds
-#: each of the index's two collects, the cached incidence and the
-#: (order_id, product_id) lines of order_items. A per-customer
-#: `similarity` request costs the kernel O(|incidence|), so the bound is
-#: the largest size measured by scripts/ab_cf_index.py at which the
-#: kernel stays at least 10× faster than the Spark plan. On a 4-vCPU host
-#: (bench_results/ab/ab_cf_index.json) the kernel took 0.32 / 2.6 / 26.7 ms
-#: against the Spark plan's 866 / 791 / 3911 ms at 10k / 200k / 2M rows,
-#: 147× faster at the largest size measured, and the incidence's Arrow
-#: collect took 1.9 s. At the bound each collect encodes to two int64
-#: code arrays of 32 MB, 64 MB of driver memory for both during the
-#: build; the index keeps the incidence's, and of the order lines only
-#: per-product counts.
-INCIDENCE_ROWS = 2_000_000
 
 
 class IncidenceIndex:
@@ -142,23 +127,19 @@ def _ranking(counts: np.ndarray) -> np.ndarray:
 
 def incidence_index(incidence: DataFrame,
                     items: DataFrame) -> IncidenceIndex | None:
-    """Collect the incidence and the order lines of `items` through Arrow
-    into an IncidenceIndex, or None when the Spark plans must answer
-    instead: either collect over INCIDENCE_ROWS rows, a null key, or a key
-    that is not a string (whose equality and order the index would not
-    share with Spark)."""
-    tables = []
-    for frame, keys in ((incidence, ("customer_id", "product_id")),
-                        (items, ("order_id", "product_id"))):
-        if not all(isinstance(frame.schema[k].dataType, StringType)
-                   for k in keys):
-            return None
-        table = frame.select(*keys).limit(INCIDENCE_ROWS + 1).toArrow()
-        if table.num_rows > INCIDENCE_ROWS or any(
-                table.column(k).null_count for k in keys):
-            return None
-        tables.append(table)
-    return IncidenceIndex(*tables)
+    """Collect the incidence and the order lines of `items` into an
+    IncidenceIndex through the one bounded collect
+    (`superstep.local_tables`), or None when the Spark plans must answer
+    instead: both together over `LOCAL_EDGE_ROWS` rows, a null key, or a
+    key that is not a string (whose equality and order the index would
+    not share with Spark)."""
+    frames = {"incidence": incidence.select("customer_id", "product_id"),
+              "lines": items.select("order_id", "product_id")}
+    if not all(isinstance(f.dataType, StringType)
+               for df in frames.values() for f in df.schema):
+        return None
+    tables = local_tables(frames)
+    return IncidenceIndex(**tables) if tables is not None else None
 
 
 class RecommendationService:
@@ -166,8 +147,9 @@ class RecommendationService:
     (customers/products/orders/order_items/events).
 
     Requests are answered from one driver-side IncidenceIndex, built here
-    from two Arrow collects, each bounded by INCIDENCE_ROWS: the cached
-    incidence and the order lines. `co_occurrence`, `similarity` without
+    from the cached incidence and the order lines in the program's one
+    bounded Arrow collect (`superstep.local_tables`, `LOCAL_EDGE_ROWS`
+    rows for both together). `co_occurrence`, `similarity` without
     a customer and the `pagerank` stub slice a ranking counted at build;
     per-customer `similarity` runs a numpy kernel, the 3-hop filter, over
     the incidence codes. None of these runs a Spark job. `pagerank_exact`

@@ -22,6 +22,17 @@ def cpu_count() -> int:
         return os.cpu_count() or 8
 
 
+def driver_memory() -> str:
+    """The driver heap: `SPARK_GRAFT_DRIVER_MEM` when set, else half the
+    host's physical RAM, so the JVM cannot grow past what the host holds
+    (a 48 GB heap on a 15 GB host failed to map its memory)."""
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if mem:
+        return mem
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, total // 2 // 2**30)}g"
+
+
 def get_spark(app_name: str = "graph_database_spark",
               shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) a SparkSession with scale-sane defaults.
@@ -39,7 +50,7 @@ def get_spark(app_name: str = "graph_database_spark",
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
     )
     active = SparkSession.getActiveSession()

@@ -2,7 +2,8 @@
 """Same-process A/B of per-customer `/recs` similarity: the driver-side
 incidence index kernel (`recommend.service.IncidenceIndex.user_cf`)
 against the Spark plan it replaces (`user_cf_scores` ordered and
-limited, collected), over synthetic incidences of 10k, 200k and 2M rows.
+limited, collected), over synthetic incidences of 10k, 200k, 2M and
+2,412,143 rows (the shared collect bound, `superstep.LOCAL_EDGE_ROWS`).
 
 Each size is a cached string-keyed (customer_id, product_id) incidence,
 like the service's: 8 products per customer on average, product
@@ -11,9 +12,12 @@ customers both arms answer `limit` = 25; their rows must be equal. The
 kernel is timed over KERNEL_REPS calls per customer, the Spark path over
 SPARK_REPS after one warm-up call; each arm's figure is the median.
 
-`INCIDENCE_ROWS` in recommend/service.py is the largest measured size at
-which the kernel stays at least 10× faster than the Spark path; the
-output names it as `bound`.
+The index is built through the program's one bounded collect
+(`graphs/superstep.local_tables`), whose bound `LOCAL_EDGE_ROWS` it
+shares with the PageRank kernel; this script checks that the kernel
+stays at least 10× faster than the Spark path up to that bound, and
+names the largest measured size that does as `bound`. The bound is
+raised to the collect's rows while each index is built.
 
 Usage: python scripts/ab_cf_index.py [SIZES...]
 Env:   SPARK_GRAFT_CPUS, SPARK_GRAFT_DRIVER_MEM (default 4g)
@@ -33,7 +37,7 @@ sys.path.insert(0, HERE)
 
 from pyspark.sql import functions as F  # noqa: E402
 
-SIZES = (10_000, 200_000, 2_000_000)
+SIZES = (10_000, 200_000, 2_000_000, 2_412_143)
 CUSTOMERS = 3           # seeded customers asked per size
 LIMIT = 25
 KERNEL_REPS = 20
@@ -68,22 +72,23 @@ def _median_ms(fn, reps: int) -> float:
 
 
 def measure(spark, n_rows: int) -> dict:
+    from graph_database_spark.graphs import superstep
     from graph_database_spark.operators.similarity import user_cf_scores
     from graph_database_spark.recommend import service as service_mod
 
     inc = _incidence(spark, n_rows)
     rows = inc.count()
-    bound, service_mod.INCIDENCE_ROWS = service_mod.INCIDENCE_ROWS, rows
+    # each customer's products as one order: order lines as many as
+    # incidence rows, so the one collect holds 2 × rows
+    bound, superstep.LOCAL_EDGE_ROWS = superstep.LOCAL_EDGE_ROWS, 2 * rows
     try:
         t0 = time.perf_counter()
-        # each customer's products as one order: order lines as many as
-        # incidence rows, so the build times both collects at the size
         index = service_mod.incidence_index(
             inc, inc.select(F.col("customer_id").alias("order_id"),
                             "product_id"))
         build_s = time.perf_counter() - t0
     finally:
-        service_mod.INCIDENCE_ROWS = bound
+        superstep.LOCAL_EDGE_ROWS = bound
     customers = sorted(index.customers)[::max(1, len(index.customers)
                                               // CUSTOMERS)][:CUSTOMERS]
 

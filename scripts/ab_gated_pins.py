@@ -46,13 +46,6 @@ SWAPPED_MODULES = os.environ.get(
     "AB_MODULES", "superstep,pagerank,hits,traversal,anf").split(",")
 
 
-def _half_of_physical_ram() -> str:
-    """Half the host's RAM as a driver heap size, as tests/conftest.py
-    sizes it: a larger heap than the host holds makes the JVM thrash."""
-    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    return f"{max(1, total // 2 // 2**30)}g"
-
-
 def _load_variant(ref: str, tag: str) -> dict[str, object]:
     """Materialize the graphs submodules that exist at a git ref as
     importable module objects carrying the real package names (so their
@@ -99,8 +92,8 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     session_kind = os.environ.get("AB_SESSION", "driver-default")
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", _half_of_physical_ram())
     from pyspark.sql import SparkSession
+    from graph_database_spark.session import driver_memory
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if session_kind == "tuned":
         from graph_database_spark.session import get_spark
@@ -109,8 +102,7 @@ def main() -> None:
         spark = (SparkSession.builder.master(f"local[{cpus}]")
                  .appName("ab-gated-pins")
                  .config("spark.sql.session.timeZone", "UTC")
-                 .config("spark.driver.memory",
-                         os.environ["SPARK_GRAFT_DRIVER_MEM"])
+                 .config("spark.driver.memory", driver_memory())
                  .config("spark.ui.enabled", "false")
                  .getOrCreate())
         assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") \

@@ -53,11 +53,11 @@ def main() -> None:
         from graph_database_spark.session import get_spark
         spark = get_spark("ab-pipeline")
     else:
+        from graph_database_spark.session import driver_memory
         spark = (SparkSession.builder.master(f"local[{cpus}]")
                  .appName("ab-pipeline")
                  .config("spark.sql.session.timeZone", "UTC")
-                 .config("spark.driver.memory",
-                         os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+                 .config("spark.driver.memory", driver_memory())
                  .config("spark.ui.enabled", "false")
                  .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")

@@ -41,11 +41,11 @@ def _session():
         from graph_database_spark.session import get_spark
         spark = get_spark("ab-recommend-batch")
     else:
+        from graph_database_spark.session import driver_memory
         spark = (SparkSession.builder.master(f"local[{cpus}]")
                  .appName("ab-recommend-batch")
                  .config("spark.sql.session.timeZone", "UTC")
-                 .config("spark.driver.memory",
-                         os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+                 .config("spark.driver.memory", driver_memory())
                  .config("spark.ui.enabled", "false")
                  .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")

@@ -47,10 +47,11 @@ def norm_rows(rows, cols):
 def main():
     from pyspark.sql import SparkSession
     import __spark_entry__ as entrymod
+    from graph_database_spark.session import driver_memory
 
     spark = (SparkSession.builder.master("local[32]")
              .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.driver.memory", "48g")
+             .config("spark.driver.memory", driver_memory())
              .config("spark.sql.adaptive.enabled", "true")
              .config("spark.ui.enabled", "false")
              .getOrCreate())

@@ -1,7 +1,6 @@
 from __future__ import annotations
 
 import datetime as dt
-import os
 
 import pytest
 
@@ -10,17 +9,8 @@ from graph_database_spark.session import get_spark
 SF_SMOKE = "/root/testdata/sf0.001"
 
 
-def _half_of_physical_ram() -> str:
-    """Driver heap for the test session: half the host's RAM, so the JVM
-    cannot grow past what the host holds (the session's 48 GB default
-    thrashes a 16 GB host)."""
-    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    return f"{max(1, total // 2 // 2**30)}g"
-
-
 @pytest.fixture(scope="session")
 def spark():
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", _half_of_physical_ram())
     s = get_spark("gds-tests", shuffle_partitions=8)
     yield s
 

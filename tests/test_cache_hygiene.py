@@ -153,8 +153,10 @@ def test_pagerank_local_regime_matches_spark_loop(spark, monkeypatch):
     an edge from a non-vertex, a duplicated edge; 65 keys (two Spark
     tiles) with an all-zero key, a key whose only id is no vertex and an
     id listed twice; init_ranks that miss vertices and list a non-vertex.
-    Answers and iteration counts agree (floats within 1e-12), and a local
-    call starts one Spark job, the collect of all its inputs. A null in
+    Answers, answer schemas and iteration counts agree (floats within
+    1e-12); the `long` keys hold 32-bit values, which the Spark loop's
+    key literal alone would type `int`. A local call starts one Spark
+    job, the collect of all its inputs. A null in
     an edge column, or inputs one row over the bound, run the Spark loop;
     the bound is inclusive."""
     ids = [f"v{i:02d}" for i in range(12)]
@@ -186,27 +188,36 @@ def test_pagerank_local_regime_matches_spark_loop(spark, monkeypatch):
 
     def run(want_jobs: int | None):
         with _job_group(spark) as jobs:
-            batch = _assert_leaves_no_cache(spark, lambda: pr.pagerank_batch(
-                verts, edges, pers, tol=1e-4, max_iter=9).collect())
+            batch = _assert_leaves_no_cache(spark, batch_run)
             assert want_jobs is None or len(jobs()) == want_jobs
         with _job_group(spark) as jobs:
-            single, iters = _assert_leaves_no_cache(spark, single_run)
+            single = _assert_leaves_no_cache(spark, single_run)
             assert want_jobs is None or len(jobs()) == want_jobs
-        return _canonical(batch), _canonical(single), iters
+        return batch, single
+
+    def batch_run():
+        ranks = pr.pagerank_batch(verts, edges, pers, tol=1e-4, max_iter=9)
+        return ranks.schema, _canonical(ranks.collect())
 
     def single_run():
         ranks, iters = pr.pagerank(verts, edges, personalization=seeds,
                                    init_ranks=init, tol=1e-6,
                                    with_iterations=True)
-        return ranks.collect(), iters
+        return ranks.schema, _canonical(ranks.collect()), iters
 
     local = run(1)
     assert calls == []
     monkeypatch.setattr(superstep, "LOCAL_EDGE_ROWS", -1)
     spark_loop = run(None)
     assert [len(keys) for keys in calls] == [64, 1, 1]
-    assert len(local[0]) == 65 * 12
-    _assert_same_answer(local, spark_loop)
+    assert len(local[0][1]) == 65 * 12
+    # the answers are equal, and so are the schemas' column names and
+    # types (a literal key column is non-nullable in the Spark loop)
+    schemas = [(batch[0].simpleString(), single[0].simpleString())
+               for batch, single in (local, spark_loop)]
+    assert schemas == [("struct<key:bigint,id:string,rank:double>",
+                        "struct<id:string,rank:double>")] * 2
+    _assert_same_answer([r[1:] for r in local], [r[1:] for r in spark_loop])
 
     def regime(edge_frame, bound: int) -> str:
         calls.clear()

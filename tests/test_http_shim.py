@@ -14,6 +14,7 @@ from urllib.parse import urlencode
 import pytest
 from pyspark.sql import functions as F
 
+from graph_database_spark.graphs import superstep
 from graph_database_spark.recommend import service as service_mod
 from graph_database_spark.recommend.engine import SparkRecommendationEngine
 from graph_database_spark.recommend.http import serve
@@ -124,19 +125,21 @@ def _shim(service, engine):
         srv.server_close()
 
 
-def _service(spark, tables, **consts):
-    """A service built with the given `service` module constants."""
+def _service(spark, tables, local_rows):
+    """A service built while `superstep.LOCAL_EDGE_ROWS` is `local_rows`;
+    the bound is restored before any request, so `pagerank_exact` keeps
+    its regime."""
     with pytest.MonkeyPatch.context() as mp:
-        for name, value in consts.items():
-            mp.setattr(service_mod, name, value)
+        mp.setattr(superstep, "LOCAL_EDGE_ROWS", local_rows)
         return RecommendationService(spark, tables)
 
 
 @pytest.fixture(scope="module")
 def spark_path_server(spark, toy):
-    """A shim whose service has its index bound below the toy tables, so
-    every /recs request runs the Spark plan."""
-    with _shim(_service(spark, toy, INCIDENCE_ROWS=0), None) as url:
+    """A shim whose service was built with the collect bound below the
+    toy tables, so it has no index and every /recs request but
+    `pagerank_exact` runs the Spark plan."""
+    with _shim(_service(spark, toy, 0), None) as url:
         yield url
 
 

@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from graph_database_spark.graphs import superstep
 from graph_database_spark.graphs.pagerank import pagerank
 from graph_database_spark.operators.cooccurrence import (
     cooccurrence_top_partners,
@@ -37,10 +38,11 @@ def service(spark, toy_roles):
 
 @pytest.fixture(scope="module")
 def spark_path_service(spark, toy_roles):
-    """A service whose incidence bound is below the toy incidence, so
-    per-customer similarity runs the Spark plan."""
+    """A service built with the collect bound below the toy incidence,
+    so it has no index and per-customer similarity runs the Spark plan;
+    the bound is restored before any request."""
     with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(service_mod, "INCIDENCE_ROWS", 3)
+        mp.setattr(superstep, "LOCAL_EDGE_ROWS", 3)
         return RecommendationService(spark, toy_roles)
 
 
@@ -263,11 +265,13 @@ def test_request_starts_no_spark_job(spark, service, spark_path_service):
         assert jobs()
 
 
-#: Jobs of a cold RecommendationService build on toy_roles: 6 for the
-#: incidence collect, which also materialises the cached incidence, and
-#: 1 for the order lines' collect (a warm build runs 1 + 1). With the row
-#: snapshot's three build plans, since deleted, a cold build ran 19.
-BUILD_JOBS = 7
+#: Jobs of a cold RecommendationService build on toy_roles: the one
+#: collect of the incidence and the order lines together
+#: (`superstep.local_tables`), whose stages also materialise the cached
+#: incidence. Each frame had a collect of its own until they shared the
+#: bound, and a cold build ran 6 + 1 = 7; with the row snapshot's three
+#: build plans, since deleted, it ran 19.
+BUILD_JOBS = 6
 
 
 def test_build_and_request_job_counts(spark, service, toy_roles):
@@ -293,10 +297,12 @@ def test_pagerank_exact_runs_once_then_slices(spark, toy_roles,
                                               monkeypatch, incidence_rows):
     """4 threads that send the first pagerank_exact request together run
     one PageRank; every later request slices its kept ranking. The same
-    holds for a service without an index (its bound forced to 0)."""
-    if incidence_rows is not None:
-        monkeypatch.setattr(service_mod, "INCIDENCE_ROWS", incidence_rows)
-    svc = RecommendationService(spark, toy_roles)
+    holds for a service without an index (built with the collect bound
+    forced to 0)."""
+    with pytest.MonkeyPatch.context() as mp:
+        if incidence_rows is not None:
+            mp.setattr(superstep, "LOCAL_EDGE_ROWS", incidence_rows)
+        svc = RecommendationService(spark, toy_roles)
     assert (svc._index is None) == (incidence_rows is not None)
     calls = []
 
@@ -380,13 +386,15 @@ def test_index_equals_spark_path_on_random_incidence(spark):
 
 
 def test_index_bound_is_inclusive(spark, service, monkeypatch):
-    """The bound caps each collect: the incidence and the order lines."""
+    """The shared collect bound caps the incidence and the order lines
+    together: an index at |incidence| + |lines| rows, none at one row
+    fewer."""
     for inc, items in ((service.incidence, service.items.limit(2)),
                        (service.incidence.limit(2), service.items)):
-        n = max(inc.count(), items.count())
-        monkeypatch.setattr(service_mod, "INCIDENCE_ROWS", n)
+        n = inc.count() + items.count()
+        monkeypatch.setattr(superstep, "LOCAL_EDGE_ROWS", n)
         assert service_mod.incidence_index(inc, items) is not None
-        monkeypatch.setattr(service_mod, "INCIDENCE_ROWS", n - 1)
+        monkeypatch.setattr(superstep, "LOCAL_EDGE_ROWS", n - 1)
         assert service_mod.incidence_index(inc, items) is None
 
 
