@@ -14,9 +14,11 @@ half-step and on dst for the hub half-step, so neither half-step
 re-shuffles or re-sorts edges; in the checkpoint regime both share one
 checkpoint. L1 normalization rides along as a 1-row broadcast aggregate
 (no driver sync); lineage is truncated per iteration with
-localCheckpoint. Fixed iteration count (no convergence probe) keeps the
+localCheckpoint. Fixed iteration count (no stop test) keeps the
 whole fixed point replayable by an external engine — the same contract
 as `pagerank(tol=-1)`, giving the DuckDB oracle a value-level check.
+With `tol`, the stop test is the hubs' L1 delta, summed inside each
+iteration's own checkpoint job (`superstep.checkpoint`), not by a probe.
 """
 
 from __future__ import annotations
@@ -24,7 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .superstep import (
-    _iter_partitions, hint_state, iteration_frames, pinned_regime,
+    _iter_partitions, checkpoint, hint_state, iteration_frames,
+    pinned_regime,
 )
 
 
@@ -48,8 +51,9 @@ def bipartite_hits(edges: DataFrame, max_iter: int = 10,
     pattern shared with pagerank(init_ranks=...): HITS converges
     geometrically to the principal eigenvector, so after a small edge
     append yesterday's hubs are already near the new fixed point and a
-    `tol` L1-delta probe (one join + 1-row aggregate per iteration,
-    no extra shuffle class) exits in a fraction of the cold count.
+    `tol` L1 delta (the previous hubs brought into each hub half-step
+    by a union and summed in its checkpoint job, no probe job) exits in
+    a fraction of the cold count.
     Hubs absent from init_hubs (new arrivals) start at the uniform
     value; the scale is irrelevant — both half-steps re-normalize.
     `tol=None` keeps the default fixed-iteration contract (replayable by
@@ -105,20 +109,22 @@ def bipartite_hits(edges: DataFrame, max_iter: int = 10,
                      .groupBy("src").agg(F.sum("a").alias("h")))
             tot_h = h_new.agg(F.sum("h").alias("__t"))
             h_next = (h_new.crossJoin(F.broadcast(tot_h))
-                      .select("src", (F.col("h") / F.col("__t")).alias("h"))
-                      .localCheckpoint())
-            if tol is not None:
-                # both frames are L1-normalized, so the delta is
-                # scale-free; join of the two checkpointed frames (the
-                # pagerank-proven shape — no extra same-iteration
-                # reference inside the plan)
-                delta = (h_next.withColumnRenamed("h", "__new")
-                         .join(h.select("src", "h"), "src")
-                         .agg(F.sum(F.abs(F.col("__new") - F.col("h")))
-                              .alias("d")).first()["d"])
-            else:
-                delta = None
-            h = h_next
+                      .select("src", (F.col("h") / F.col("__t")).alias("h")))
+            if tol is None:
+                h = h_next.localCheckpoint()
+                continue
+            # both frames are L1-normalized, so the delta is scale-free.
+            # The old hubs enter by a union, not a join: a checkpoint
+            # keeps its plan's size estimate and a join multiplies its
+            # sides', so a joined-in state compounds it every iteration
+            # (the driver ran out of a 4 GB heap estimating it within
+            # test_hits_warm_start's 100 iterations)
+            h, delta = checkpoint(
+                h_next.unionByName(h.withColumnRenamed("h", "__h0"),
+                                   allowMissingColumns=True)
+                .groupBy("src").agg(F.max("h").alias("h"),
+                                    F.max("__h0").alias("__h0")),
+                F.sum(F.abs(F.col("h") - F.col("__h0"))), "src", "h")
             if delta is not None and delta < tol:
                 break
 

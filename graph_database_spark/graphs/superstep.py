@@ -25,6 +25,17 @@ cached edge scan, which AQE skew-splits for hot vertices. Two loops keep
 a measured exception: LPA always pins, and the landmark pair (BFS,
 Bellman-Ford) streams its up-front checkpoint without the repartition.
 
+A superstep's stop test runs inside its own state cut: `checkpoint`
+observes one aggregate over the frame the superstep builds (a changed
+flag, or HITS' L1 delta) while the eager `localCheckpoint` job runs, so
+deciding to halt costs no job of its own, as Pregelix computes its halt
+inside the superstep's dataflow. BFS, Bellman-Ford, CC, LPA, k-core and
+HITS use it. PageRank's Spark loop keeps its every-third-iteration delta
+probe (its snapshot note warns against a second same-iteration `ranks`
+reference), HyperANF's checkpoints are lazy (an observation on a lazy
+checkpoint reads None, as no job ran), and star-CC keeps the count its
+set-equality test needs.
+
 A third regime sits below both: the DRIVER-LOCAL one. At toy and
 benchmark sizes a Spark superstep costs its fixed per-job overhead, not
 work, so a loop whose inputs collect through Arrow in one query to at
@@ -43,11 +54,11 @@ from __future__ import annotations
 
 from contextlib import contextmanager
 from functools import reduce
-from typing import Iterator
+from typing import Any, Iterator
 
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 # Partition sizing for the per-iteration frames: every superstep pays one
 # task per partition per stage, so a 2k-row rank frame on 32 partitions is
@@ -257,6 +268,26 @@ def _repartition_checkpoint(df: DataFrame, n_parts: int) -> DataFrame:
             and logical.rdd().getNumPartitions() == n_parts):
         return df
     return df.repartition(n_parts).localCheckpoint()
+
+
+def checkpoint(df: DataFrame, metric: Column, *cols
+               ) -> tuple[DataFrame, Any]:
+    """A superstep's state cut and its stop test in ONE job: an eager
+    `localCheckpoint` of `df` (of `df.select(*cols)` when columns are
+    given), returned with the value of the aggregate `metric` over every
+    row of `df`, observed (`DataFrame.observe`) while the checkpoint job
+    runs. The value is None when `df` has no row.
+
+    A task retried after a failure may add its rows to the metric twice,
+    so the metric must be one that a double count cannot turn into a
+    false stop: an "any row changed" flag (`max` of a boolean, `min` of
+    a degree against its bound), or a sum compared against a tolerance,
+    where a double count only makes the sum larger and so can only
+    delay the stop. Never a count compared for equality."""
+    seen = Observation()
+    observed = df.observe(seen, metric.alias("metric"))
+    cut = (observed.select(*cols) if cols else observed).localCheckpoint()
+    return cut, seen.get["metric"]
 
 
 @contextmanager

@@ -16,6 +16,13 @@ proportional to the expanding frontier; CC label propagation converges
 in O(diameter) supersteps (the driver testdata co-occurrence graphs have
 tiny diameters; for pathological chains `connected_components_star`
 below is the O(log n)-round alternative).
+
+Each loop states its stop test as one aggregate over the frame its
+superstep already builds (a reached vertex, a lowered label, a changed
+community, a new or shorter distance, a degree below k), observed inside
+that superstep's own checkpoint job (`superstep.checkpoint`): no loop
+runs a probe job after its checkpoint, except `connected_components_star`,
+whose set-equality test needs the star set's exact count.
 """
 
 from __future__ import annotations
@@ -25,7 +32,8 @@ from contextlib import nullcontext
 from pyspark.sql import DataFrame, functions as F
 
 from .superstep import (
-    _iter_partitions, hint_state, iteration_frames, pinned_regime,
+    _iter_partitions, checkpoint, hint_state, iteration_frames,
+    pinned_regime,
 )
 
 
@@ -86,11 +94,11 @@ def shortest_paths(edges: DataFrame, landmarks: DataFrame,
                         F.lit(hop).alias("dist"))
                 .distinct()
             )
-            new_frontier = expanded.join(
-                dist.select("id", "landmark"), ["id", "landmark"],
-                "left_anti"
-            ).localCheckpoint()
-            if new_frontier.isEmpty():
+            new_frontier, reached = checkpoint(
+                expanded.join(dist.select("id", "landmark"),
+                              ["id", "landmark"], "left_anti"),
+                F.max(F.lit(True)))
+            if not reached:
                 break
             dist = dist.unionByName(new_frontier).localCheckpoint()
             frontier = new_frontier
@@ -150,21 +158,6 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
                           .alias("component"))
                   .localCheckpoint())
 
-    # Labels only ever DECREASE under min-propagation, so for NUMERIC ids
-    # "any label changed this superstep" ⟺ "the label sum changed" — one
-    # narrow aggregate over the new frame instead of a join of old vs
-    # new. DECIMAL(38,0) keeps the sum exact for any |V|·max(id) (a
-    # bigint sum would overflow-error under ANSI at 10⁹ vertices).
-    # Non-numeric ids (min is lexicographic) fall back to the join probe.
-    numeric_ids = labels.schema["component"].dataType.typeName() in (
-        "byte", "short", "integer", "long", "decimal")
-
-    def _label_sum(df: DataFrame):
-        return df.agg(
-            F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
-        ).first()["s"]
-
-    prev_sum = _label_sum(labels) if numeric_ids else None
     with iteration_frames(pinned_regime(nv, m), n_parts,
                           (sym, "src")) as (sym,):
         for _ in range(max_iter):
@@ -173,29 +166,14 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
                 .groupBy(F.col("dst").alias("id"))
                 .agg(F.min("component").alias("n_comp"))
             )
-            new_labels = (
-                # merge-pin the aggregate side: see the hint policy in
-                # superstep._pin_for_iteration
-                labels.join(neighbor_min.hint("merge"), "id", "left")
-                .select("id", F.least(
-                    F.col("component"),
-                    F.coalesce(F.col("n_comp"), F.col("component"))
-                ).alias("component"))
-                .localCheckpoint()
-            )
-            if numeric_ids:
-                new_sum = _label_sum(new_labels)
-                unchanged = new_sum == prev_sum
-                prev_sum = new_sum
-            else:
-                unchanged = (
-                    new_labels.withColumnRenamed("component", "new_c")
-                    .join(labels, "id")
-                    .filter(F.col("new_c") != F.col("component"))
-                    .isEmpty()
-                )
-            labels = new_labels
-            if unchanged:
+            # merge-pin the aggregate side: see the hint policy in
+            # superstep._pin_for_iteration. Labels only ever decrease, so
+            # the labels changed iff some neighbor min undercuts its label
+            labels, changed = checkpoint(
+                labels.join(neighbor_min.hint("merge"), "id", "left"),
+                F.max(F.col("n_comp") < F.col("component")),
+                "id", F.least("component", "n_comp").alias("component"))
+            if not changed:
                 break
     return labels
 
@@ -234,9 +212,9 @@ def weighted_shortest_paths(edges: DataFrame, landmarks: DataFrame,
 
     `until_stable=True` stops as soon as a round neither reaches a new
     (id, landmark) pair nor improves a distance (`rounds` then acts as
-    the superstep budget): one count on the freshly checkpointed frame
-    plus one id-partitioned join probe per round — no extra shuffle
-    class. Leave False for the fixed-round oracle contract.
+    the superstep budget): one flag beside the round's min-aggregate,
+    observed in its checkpoint job — no probe job, no extra shuffle.
+    Leave False for the fixed-round oracle contract.
     `with_rounds=True` additionally returns the executed round count.
     """
     edges = edges.select("src", "dst", "weight").localCheckpoint()
@@ -276,24 +254,19 @@ def weighted_shortest_paths(edges: DataFrame, landmarks: DataFrame,
                 .select(F.col("dst").alias("id"), "landmark",
                         (F.col("dist") + F.col("weight")).alias("dist"))
             )
-            new_dist = (dist.unionByName(relaxed)
-                        .groupBy("id", "landmark")
-                        .agg(F.min("dist").alias("dist"))
-                        .localCheckpoint())
-            if until_stable:
-                # stable ⟺ no new (id, landmark) pair AND no exact-min
-                # improvement; both frames are checkpointed so the probes
-                # are count + one join, no recomputation
-                grew = new_dist.count() != dist.count()
-                improved = grew or not (
-                    new_dist.withColumnRenamed("dist", "__nd")
-                    .join(dist, ["id", "landmark"])
-                    .filter(F.col("__nd") < F.col("dist")).isEmpty())
-                dist = new_dist
-                if not improved:
-                    break
-            else:
-                dist = new_dist
+            # a pair improved iff it had no distance before (a new pair)
+            # or its min undercuts the old one
+            dist, improved = checkpoint(
+                dist.withColumn("__was", F.col("dist"))
+                .unionByName(relaxed, allowMissingColumns=True)
+                .groupBy("id", "landmark")
+                .agg(F.min("dist").alias("dist"),
+                     F.min("__was").alias("__was")),
+                F.max(F.col("__was").isNull()
+                      | (F.col("dist") < F.col("__was"))),
+                "id", "landmark", "dist")
+            if until_stable and not improved:
+                break
     if with_rounds:
         return dist, done
     return dist
@@ -324,7 +297,10 @@ def connected_components_star(vertices: DataFrame, edges: DataFrame,
     min aggregates; edges shrink toward one star edge per non-root
     vertex, so late rounds are |V|-cheap. Convergence = the canonical
     (big→small) edge set reaches a fixed point — an exact anti-join probe
-    on the (small, shrinking) star set, checked every round.
+    on the (small, shrinking) star set, checked every round. This loop
+    keeps its count and probe jobs: an equal count is half of its test,
+    and a count observed inside the checkpoint job could be doubled by a
+    task retry (see `superstep.checkpoint`).
     """
     e = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
     if dedupe:
@@ -438,9 +414,9 @@ def label_propagation(vertices: DataFrame, edges: DataFrame,
     the incremental-graph pattern shared with pagerank(init_ranks=...)
     and connected_components(init_labels=...): after a small edge
     append, yesterday's communities are near the new argmax fixpoint, so
-    with `stop_when_stable=True` (a changed-vertex count probe per
-    superstep — one tiny aggregate on the id-partitioned labels frame)
-    the loop exits after a fraction of the cold budget. Vertices absent
+    with `stop_when_stable=True` (a changed-vertex flag observed inside
+    each superstep's checkpoint job, no probe job) the loop exits after
+    a fraction of the cold budget. Vertices absent
     from init_labels (new arrivals) start at their own id.
     `with_iterations=True` additionally returns the superstep count.
     """
@@ -489,22 +465,14 @@ def label_propagation(vertices: DataFrame, edges: DataFrame,
                       .withColumn("__rn", F.row_number().over(w))
                       .filter("__rn = 1")
                       .select("id", F.col("community").alias("n_comm")))
-            updated = (
-                # merge-pin the argmax side: see the hint policy in
-                # superstep._pin_for_iteration
-                labels.join(winner.hint("merge"), "id", "left")
-                .select("id",
-                        F.coalesce(F.col("n_comm"), F.col("community"))
-                         .alias("community"),
-                        (F.col("n_comm").isNotNull()
-                         & (F.col("n_comm") != F.col("community")))
-                        .alias("__chg"))
-                .localCheckpoint()
-            )
-            stable = (stop_when_stable
-                      and updated.filter("__chg").limit(1).count() == 0)
-            labels = updated.drop("__chg")
-            if stable:
+            # merge-pin the argmax side: see the hint policy in
+            # superstep._pin_for_iteration
+            labels, changed = checkpoint(
+                labels.join(winner.hint("merge"), "id", "left"),
+                F.max(F.col("n_comm") != F.col("community")),
+                "id", F.coalesce(F.col("n_comm"), F.col("community"))
+                .alias("community"))
+            if stop_when_stable and not changed:
                 break
     if with_iterations:
         return labels, it + 1
@@ -546,8 +514,10 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int = 3,
 
     `until_stable=True` stops when a round peels nothing (`rounds` is
     then the budget; the survivor set at that point IS the k-core
-    fixpoint) — one count per round on the freshly checkpointed edge
-    frame. `with_rounds=True` additionally returns the round count.
+    fixpoint): the minimum degree against k, observed inside the round's
+    degree checkpoint, so that round ends before its edge restriction
+    (with both directions present it would keep every edge).
+    `with_rounds=True` additionally returns the round count.
     """
     e = edges.select("src", "dst").localCheckpoint()
     if init_candidates is not None:
@@ -556,22 +526,17 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int = 3,
         e = (e.join(cand, "src", "leftsemi")
              .join(cand.withColumnRenamed("src", "dst"), "dst", "leftsemi")
              .localCheckpoint())
-    # the edge count seeds the until_stable fixpoint test only — the
-    # fixed-rounds path never reads it, so don't pay the count job there
-    n_edges = e.count() if until_stable else -1
     done = 0
     for done in range(1, rounds + 1):
-        keep = (e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-                .filter(F.col("deg") >= k)
-                .select("src").localCheckpoint())
+        degree, peels = checkpoint(
+            e.groupBy("src").agg(F.count(F.lit(1)).alias("deg")),
+            F.min("deg") < k)
+        if until_stable and not peels:
+            break  # both directions held: this round would keep every edge
+        keep = degree.filter(F.col("deg") >= k).select("src")
         e = (e.join(keep, "src", "leftsemi")
              .join(keep.withColumnRenamed("src", "dst"), "dst", "leftsemi")
              .localCheckpoint())
-        if until_stable:
-            n_new = e.count()
-            if n_new == n_edges:
-                break
-            n_edges = n_new
     out = (e.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
            .select(F.col("src").alias("id"), "degree"))
     if with_rounds:

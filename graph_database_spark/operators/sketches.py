@@ -31,6 +31,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .dedup import HASH_P, MINHASH_A, MINHASH_B, md5_long
 from .util import spread
 
 _SUMMARY_SCHEMA = "token string, mg_count long, part_total long"
@@ -46,15 +47,10 @@ CMS_B: list[int] = [int(x) for x in _rng.randint(0, CMS_P, size=8)]
 del _rng
 
 
-def _md5_long(col: Column) -> Column:
-    """60-bit non-negative hash, engine-portable (operators/dedup.py)."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
 def _cms_slots(token: Column, depth: int, width: int) -> Column:
     """array<long> of the token's slot per depth row d: universal hash of
     the md5 base, mod width."""
-    base = _md5_long(token) % F.lit(CMS_P)
+    base = md5_long(token) % F.lit(CMS_P)
     return F.array(*[
         ((F.lit(CMS_A[d]) * base + F.lit(CMS_B[d])) % F.lit(CMS_P))
         % F.lit(width)
@@ -215,7 +211,7 @@ def hll_sketch(tokens: DataFrame, col: str = "token",
     maintainable by Structured Streaming as an ordinary streaming
     aggregation (`streaming/sketches.streaming_hll`).
     """
-    base = _md5_long(F.col(col))
+    base = md5_long(F.col(col))
     w = F.shiftright(base, HLL_P)
     rank = F.when(w == 0, F.lit(HLL_W + 1)) \
         .otherwise(F.lit(HLL_W + 1) - F.length(F.bin(w)))
@@ -510,9 +506,7 @@ def _bloom_positions(key: Column, num_bits: int, k: int) -> Column:
     """array<long> of k bit positions: universal rehashes of the portable
     60-bit md5 base (same coefficient pool as MinHash — one digest per
     key, k arithmetic rehashes)."""
-    from .dedup import HASH_P, MINHASH_A, MINHASH_B
-
-    base = _md5_long(key) % F.lit(HASH_P)
+    base = md5_long(key) % F.lit(HASH_P)
     return F.array(*[
         ((F.lit(MINHASH_A[i]) * base + F.lit(MINHASH_B[i])) % F.lit(HASH_P))
         % F.lit(num_bits)
@@ -579,8 +573,6 @@ def bloom_may_contain(probes: DataFrame, bloom: DataFrame, key_col: str,
     probe rows are preserved verbatim. `num_bits`/`k` must match the
     build — enforced against the artifact's schema metadata when
     present (`_bloom_check_meta`)."""
-    from .dedup import HASH_P, MINHASH_A, MINHASH_B
-
     _bloom_check_meta(bloom, bloom_num_bits=num_bits, bloom_k=k)
 
     # materialize the bitmap ONCE: Catalyst re-expands an un-materialized
@@ -588,7 +580,7 @@ def bloom_may_contain(probes: DataFrame, bloom: DataFrame, key_col: str,
     # benchmark scans); the frame is ≤ num_bits/32 rows, checkpoint-cheap
     bloom = bloom.localCheckpoint()
     out = probes.withColumn(
-        "__bloom_base", _md5_long(F.col(key_col)) % F.lit(HASH_P))
+        "__bloom_base", md5_long(F.col(key_col)) % F.lit(HASH_P))
     cond = F.lit(True)
     for i in range(k):
         pos = ((F.lit(MINHASH_A[i]) * F.col("__bloom_base")

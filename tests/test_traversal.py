@@ -442,3 +442,74 @@ def test_hyperanf_superstep_truncates_lineage_lazily(spark):
         # arithmetic it truncated (materialized by this collect)
         n_rows = stepped.count()
         assert n_rows >= vertices.count()
+
+
+# Empty frames: a loop whose stop test observes a frame with no row reads
+# None, and must then stop as an empty probe did, with the same answer
+# and superstep count.
+
+def test_connected_components_without_edges_or_vertices(spark):
+    from graph_database_spark.graphs.traversal import connected_components
+    no_edges = spark.createDataFrame([], "src long, dst long")
+    vertices = spark.createDataFrame([(3,), (1,), (2,)], "id long")
+    got = {r["id"]: r["component"]
+           for r in connected_components(vertices, no_edges).collect()}
+    assert got == {1: 1, 2: 2, 3: 3}
+    words = spark.createDataFrame([("b",), ("a",)], "id string")
+    got = {r["id"]: r["component"]
+           for r in connected_components(
+               words, no_edges.selectExpr("cast(src as string) src",
+                                          "cast(dst as string) dst"))
+           .collect()}
+    assert got == {"a": "a", "b": "b"}
+    no_vertices = spark.createDataFrame([], "id long")
+    edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+    assert connected_components(no_vertices, edges).collect() == []
+
+
+def test_shortest_paths_from_landmark_without_out_edge(spark):
+    edges = spark.createDataFrame([("a", "b"), ("b", "c")], ["src", "dst"])
+    landmarks = spark.createDataFrame([("c",)], ["id"])
+    got = [tuple(r) for r in shortest_paths(edges, landmarks).collect()]
+    assert got == [("c", "c", 0)]
+
+
+def test_kcore_stops_on_a_round_that_peels_nothing(spark):
+    from graph_database_spark.graphs.traversal import kcore_peel
+    tri = [(1, 2), (2, 3), (1, 3)]
+    edges = spark.createDataFrame(tri + [(b, a) for a, b in tri],
+                                  "src long, dst long")
+    core, rounds = kcore_peel(edges, k=2, rounds=5, until_stable=True,
+                              with_rounds=True)
+    assert ({(r["id"], r["degree"]) for r in core.collect()}, rounds) \
+        == ({(1, 2), (2, 2), (3, 2)}, 1)
+    no_edges = spark.createDataFrame([], "src long, dst long")
+    core, rounds = kcore_peel(no_edges, k=2, rounds=5, until_stable=True,
+                              with_rounds=True)
+    assert (core.collect(), rounds) == ([], 1)
+    core, rounds = kcore_peel(no_edges, k=2, rounds=3, with_rounds=True)
+    assert (core.collect(), rounds) == ([], 3)
+
+
+def test_converging_loops_without_edges(spark):
+    from graph_database_spark.graphs.hits import bipartite_hits
+    from graph_database_spark.graphs.traversal import (
+        label_propagation, weighted_shortest_paths,
+    )
+    no_edges = spark.createDataFrame([], "src long, dst long, weight double")
+    landmarks = spark.createDataFrame([(7,)], "id long")
+    dist, rounds = weighted_shortest_paths(no_edges, landmarks, rounds=5,
+                                           until_stable=True,
+                                           with_rounds=True)
+    assert ([tuple(r) for r in dist.collect()], rounds) \
+        == ([(7, 7, 0.0)], 1)
+    vertices = spark.createDataFrame([(1,), (2,)], "id long")
+    labels, iters = label_propagation(vertices, no_edges.drop("weight"),
+                                      max_iter=5, stop_when_stable=True,
+                                      with_iterations=True)
+    assert (sorted(map(tuple, labels.collect())), iters) \
+        == ([(1, 1), (2, 2)], 1)
+    # no hub: the L1 delta is never measured, so the budget runs out
+    scores, iters = bipartite_hits(no_edges.drop("weight"), max_iter=3,
+                                   tol=1e-3, with_iterations=True)
+    assert (scores.collect(), iters) == ([], 3)
